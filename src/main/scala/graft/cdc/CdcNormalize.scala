@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -103,10 +103,12 @@ object CdcNormalize {
     // two envelope formats has two different envelope schemas, and a
     // shared key would ping-pong between them via the corrupt probe.
     val cacheKey = s"${format.name}:${table.id}"
-    var schema =
+    def parseSchema(inferred: StructType): StructType =
+      if (CdcFormat.isDebeziumLike(format)) withMergedImages(inferred) else inferred
+    var schema = parseSchema(
       if (mode == SchemaInference.Mode.Cached && forceRefresh)
         SchemaInference.refresh(spark, cacheKey, values)
-      else SchemaInference.forTable(spark, cacheKey, values, mode)
+      else SchemaInference.forTable(spark, cacheKey, values, mode))
 
     def parseWith(s: StructType): DataFrame = {
       // Parse with a corrupt-record sidecar so malformed-vs-schema records
@@ -134,33 +136,37 @@ object CdcNormalize {
     var parsed = parseWith(schema)
     var cached: Option[DataFrame] = None
 
-    // Cached-mode revalidation: probe for the FIRST record that fails to
-    // parse against the cached schema (cheap `limit(1)` existence check,
-    // not a full count) and re-infer (old ∪ new) once if found. Note this
-    // catches records the cached schema cannot parse; *additive* evolution
-    // (new optional JSON fields) parses cleanly and is picked up by the
-    // pipeline's periodic refresh instead (CdcPipeline.revalidateEvery).
-    // In materialize mode the probe doubles as the cache-materializing
-    // scan: identical refresh decision, one JSON parse total.
+    // Cached-mode revalidation: probe for records that fail to parse
+    // against the cached schema and re-infer (old ∪ new) once if found.
+    // Note this catches records the cached schema cannot parse; *additive*
+    // evolution (new optional JSON fields) parses cleanly and is picked up
+    // by the pipeline's periodic refresh instead
+    // (CdcPipeline.revalidateEvery). In materialize mode the probe doubles
+    // as the cache-materializing scan: identical refresh decision, one
+    // JSON parse total. It counts through the RDD, a single job with no
+    // shuffle, where a DataFrame `count()` is an aggregate that adaptive
+    // execution splits into three (cache materialization, map stage,
+    // result stage).
     if (mode == SchemaInference.Mode.Cached) {
       if (materialize) {
         def probeCached(p: DataFrame): Long = {
           p.persist()
           cached = Some(p)
           graft.util.StageProf.timed("normalize.corruptCount")(
-            p.where(col("kdata").getField(CorruptCol).isNotNull).count())
+            p.where(col("kdata").getField(CorruptCol).isNotNull).select(lit(1)).rdd.count())
         }
         if (probeCached(parsed) > 0) {
           cached.foreach(_.unpersist())
-          schema = SchemaInference.refresh(spark, cacheKey, values)
+          schema = parseSchema(SchemaInference.refresh(spark, cacheKey, values))
           parsed = parseWith(schema)
           probeCached(parsed)
         }
       } else {
+        // not persisted: the first failing record suffices
         val failed = graft.util.StageProf.timed("normalize.corruptProbe")(!parsed
           .where(col("kdata").getField(CorruptCol).isNotNull).limit(1).isEmpty)
         if (failed) {
-          schema = SchemaInference.refresh(spark, cacheKey, values)
+          schema = parseSchema(SchemaInference.refresh(spark, cacheKey, values))
           parsed = parseWith(schema)
         }
       }
@@ -213,15 +219,30 @@ object CdcNormalize {
     Some(out)
   }
 
-  /** Debezium/Flink: payload = coalesce(after, before).*, mtime = ts_ms. */
+  /** Debezium/Flink: when either row image is a struct, both are parsed
+    * as the merged image (after ∪ before). JSON inference types an image
+    * that is null in every sampled record as a string, and a string
+    * schema would keep the later non-null image as raw text: with a
+    * cached schema learned from a delete-free trigger, every delete's
+    * `before` payload would read as null and the delete would be lost,
+    * and a merge refresh cannot repair it (string ∪ struct is string). */
+  private def withMergedImages(schema: StructType): StructType = {
+    val images = Seq("after", "before")
+    images.flatMap(fieldType(schema, _)).collect { case s: StructType => s }
+      .reduceOption(SchemaInference.mergeStructs) match {
+      case None => schema
+      case Some(img) =>
+        StructType(schema.fields.filterNot(f => images.contains(f.name)) ++
+          images.map(StructField(_, img, nullable = true)))
+    }
+  }
+
+  /** Debezium/Flink: payload = coalesce(after, before).*, mtime = ts_ms.
+    * Both images carry the one merged type ([[withMergedImages]]). */
   private def normalizeDebezium(parsed: DataFrame, schema: StructType): Option[DataFrame] = {
-    val afterT = fieldType(schema, "after")
-    val beforeT = fieldType(schema, "before")
-    val payloadT = (afterT, beforeT) match {
-      case (Some(a: StructType), Some(b: StructType)) => SchemaInference.mergeStructs(a, b)
-      case (Some(a: StructType), _)                   => a
-      case (_, Some(b: StructType))                   => b
-      case _                                          => return None
+    val payloadT = fieldType(schema, "after") match {
+      case Some(s: StructType) => s
+      case _                   => return None
     }
     // A substring-router false-positive batch can carry after/before-
     // shaped objects without the op/ts_ms envelope fields; referencing
@@ -229,20 +250,8 @@ object CdcNormalize {
     // (replay hits the same schema). Treat it like the missing-images
     // case instead — the same rule the DMS twin applies to `metadata`.
     if (!Seq("op", "ts_ms").forall(schema.fieldNames.contains)) return None
-    // Align both images onto the merged field set so coalesce is
-    // well-typed even when only one side carries a newly-added column.
-    def image(src: String, srcT: Option[DataType]): Column = srcT match {
-      case Some(s: StructType) =>
-        struct(payloadT.fields.toSeq.map { f =>
-          if (s.fieldNames.contains(f.name))
-            col(s"kdata.$src").getField(f.name).cast(f.dataType).as(f.name)
-          else lit(null).cast(f.dataType).as(f.name)
-        }: _*)
-      case _ => lit(null).cast(payloadT)
-    }
     val kept = parsed.where(col("kdata.op").isin("c", "u", "d", "r"))
-    val img = when(col("kdata.after").isNotNull, image("after", afterT))
-      .otherwise(image("before", beforeT))
+    val img = coalesce(col("kdata.after"), col("kdata.before"))
     val payload = payloadT.fieldNames.toSeq.map(f => img.getField(f).as(f))
     val out = kept.select(payload ++ Seq(
       col("kdata.ts_ms").as(MtimeCol),

@@ -1,6 +1,10 @@
 package graft.sink
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
+
+import java.util.concurrent.ConcurrentHashMap
+import scala.util.Try
 
 /** The catalog seam of the upsert sinks — the engine's equivalent of the
   * reference's unconditional Hive/Glue sync after every Hudi commit
@@ -30,10 +34,16 @@ trait CatalogSync {
 }
 
 /** The in-session binding: publishes into the Spark session catalog with
-  * plain SQL DDL — behaviorally identical to the pre-seam inline
-  * statements (this class is a pure extraction). An external-metastore
-  * binding implements the same two methods against its API instead. */
+  * plain SQL DDL. An external-metastore binding implements the same two
+  * methods against its API instead. One binding may serve several
+  * tables from several threads; each table's commits are serial. */
 final class SessionCatalogSync(spark: SparkSession) extends CatalogSync {
+
+  /** Per catalog name, the schema this binding last published there. */
+  private val published = new ConcurrentHashMap[Seq[String], StructType]()
+
+  private lazy val footers =
+    new ParquetSchema.FooterReader(spark.sparkContext.hadoopConfiguration)
 
   private def quoted(parts: Seq[String]): String =
     parts.map(p => s"`$p`").mkString(".")
@@ -44,23 +54,33 @@ final class SessionCatalogSync(spark: SparkSession) extends CatalogSync {
 
   override def publishExternalTable(parts: Seq[String],
                                     location: java.net.URI): Unit = {
-    ensureDatabase(parts)
-    val fqn = parts.mkString(".")
     val q = quoted(parts)
-    // Steady state: ALTER ... SET LOCATION — metadata-only with NO
-    // visibility gap for concurrent by-name readers. DROP+CREATE only
-    // when the schema changed (the catalog entry pins the schema from
-    // creation time) or the table doesn't exist yet; that brief gap is
-    // confined to evolution commits.
-    val sameSchema = spark.catalog.tableExists(fqn) &&
-      scala.util.Try(spark.table(fqn).schema ==
-        spark.read.parquet(location.toString).schema).getOrElse(false)
-    if (sameSchema)
-      spark.sql(s"ALTER TABLE $q SET LOCATION '$location'")
-    else {
-      spark.sql(s"DROP TABLE IF EXISTS $q")
-      spark.sql(s"CREATE TABLE $q USING parquet LOCATION '$location'")
+    val alter = s"ALTER TABLE $q SET LOCATION '$location'"
+    // One footer read on the driver; a directory the footer cannot
+    // describe falls back to Spark's schema inference (a Spark job).
+    val schema = Try(footers.schemaOf(location)).toOption.flatten
+      .getOrElse(spark.read.parquet(location.toString).schema)
+    // Steady state: the schema this binding last published here is
+    // unchanged, so the commit is one ALTER ... SET LOCATION —
+    // metadata-only, with no visibility gap for concurrent by-name
+    // readers. If the ALTER fails (the entry or its database was dropped
+    // behind the binding's back), or this binding has not published the
+    // name yet, or the schema changed, consult the catalog: ALTER when
+    // its entry already has this schema, else DROP + CREATE (the entry
+    // pins the schema from creation time), whose brief gap is confined
+    // to evolution commits.
+    if (published.get(parts) != schema || Try(spark.sql(alter)).isFailure) {
+      ensureDatabase(parts)
+      val fqn = parts.mkString(".")
+      val sameSchema = spark.catalog.tableExists(fqn) &&
+        Try(spark.table(fqn).schema == schema).getOrElse(false)
+      if (sameSchema) spark.sql(alter)
+      else {
+        spark.sql(s"DROP TABLE IF EXISTS $q")
+        spark.sql(s"CREATE TABLE $q USING parquet LOCATION '$location'")
+      }
     }
+    published.put(parts, schema)
   }
 
   override def publishView(parts: Seq[String], selectBody: String): Unit = {

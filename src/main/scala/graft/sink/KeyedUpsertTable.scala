@@ -83,9 +83,23 @@ final class KeyedUpsertTable(
   def currentSnapshot(): Option[String] =
     tfs.readPointer("_current").map(_.trim).filter(_.nonEmpty)
 
+  /** The latest snapshot this instance committed or read, with its read
+    * schema. Snapshot directories are immutable once the pointer names
+    * them, so while the pointer still names this one its schema need not
+    * be inferred again (inference is a Spark job per read). */
+  @volatile private var known: Option[(String, StructType)] = None
+
   /** Current table state, or None before the first commit. */
   def read(): Option[DataFrame] =
-    currentSnapshot().map(s => spark.read.parquet(tfs.str(s)))
+    currentSnapshot().map { s =>
+      known match {
+        case Some((`s`, schema)) => spark.read.schema(schema).parquet(tfs.str(s))
+        case _ =>
+          val df = spark.read.parquet(tfs.str(s))
+          known = Some(s -> df.schema)
+          df
+      }
+    }
 
   def readOrEmpty(like: DataFrame): DataFrame =
     read().getOrElse(spark.createDataFrame(
@@ -144,6 +158,7 @@ final class KeyedUpsertTable(
     graft.util.StageProf.timed("sink.commitWrite")(
       df.write.mode("overwrite").parquet(tfs.str(next)))
     tfs.swapPointer("_current", next)
+    known = Some(next -> ParquetSchema.asRead(df.schema))
     syncCatalog()
     cleanOldSnapshots()
   }

@@ -124,12 +124,16 @@ final class CdcPipeline(spark: SparkSession, config: CdcPipelineConfig) {
   /** Process one micro-batch: pin it, fan out per table, fail fast.
     *
     * Job budget (the events/s headline is mostly fixed per-batch cost at
-    * micro-batch sizes): ONE combined aggregate computes every table's
-    * routed count — replacing the old `batch.isEmpty` + per-table
-    * `routed.isEmpty` probes (1 + N jobs → 1) — and the cached-schema
-    * corrupt probe doubles as the parse-cache materialization
-    * ([[CdcNormalize.normalizeMaterialized]]), so each table's JSON is
-    * parsed once per trigger instead of twice (probe scan + sink scan). */
+    * micro-batch sizes): one job per trigger, the routed count of every
+    * table, which also materializes the pinned batch. Then, per table
+    * with routed records on a copy-on-write sink, three: the
+    * cached-schema corrupt probe, which doubles as the parse-cache
+    * materialization ([[CdcNormalize.normalizeMaterialized]]), and the
+    * merge's shuffle and write. The sink and the catalog binding
+    * remember the schemas they last committed and published, so a steady
+    * commit infers none. A `revalidateEvery` tick adds one inference job
+    * per table; a table's first trigger in a process adds its initial
+    * inference. */
   def processBatch(batch: DataFrame, batchId: Long): Unit =
     graft.util.StageProf.timed("batch.total")(processBatch0(batch, batchId))
 
@@ -138,12 +142,16 @@ final class CdcPipeline(spark: SparkSession, config: CdcPipelineConfig) {
     try {
       val routedCounts: Map[String, Long] =
         graft.util.StageProf.timed("batch.routedCounts") {
-          val row = batch.select(config.tables.map(t =>
-            count(when(CdcRouter.substringMatch(col("value"), config.format, t),
-              lit(1))).as(t.id)): _*).head()
-          config.tables.zipWithIndex.map { case (t, i) =>
-            t.id -> row.getLong(i)
-          }.toMap
+          // summed through the RDD: one job, no shuffle (a DataFrame
+          // aggregate is three jobs under adaptive execution)
+          val n = config.tables.size
+          val counts = batch.select(config.tables.map(t =>
+            when(CdcRouter.substringMatch(col("value"), config.format, t), 1)
+              .otherwise(0)): _*)
+            .rdd.aggregate(new Array[Long](n))(
+              (acc, row) => { for (i <- 0 until n) acc(i) += row.getInt(i); acc },
+              (a, b) => { for (i <- 0 until n) a(i) += b(i); a })
+          config.tables.map(_.id).zip(counts).toMap
         }
       if (routedCounts.valuesIterator.exists(_ > 0)) {
         debugSample("raw", batchId, batch)

@@ -5,6 +5,7 @@ import graft.cdc.CdcNormalize
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 import java.nio.file.Files
 
@@ -144,5 +145,42 @@ class KeyedUpsertTableSpec extends SparkSpecBase {
     val twoStep = KeyedUpsertTable.merge(
       Some(KeyedUpsertTable.merge(None, split, Seq("id"), M)), rest, Seq("id"), M)
     assert(oneShot.exceptAll(twoStep).isEmpty && twoStep.exceptAll(oneShot).isEmpty)
+  }
+
+  test("schema memo: read() reports the schema a parquet read infers, " +
+      "after a first, a steady and an evolution commit") {
+    val s = spark; import s.implicits._
+    val root = Files.createTempDirectory("graft-upsert-memo")
+    val t = new KeyedUpsertTable(spark, root.toString, Seq("id"))
+    def inferred(): org.apache.spark.sql.types.StructType =
+      spark.read.parquet(root.resolve(t.currentSnapshot().get).toString).schema
+    t.upsert(batch((1L, "a1", 100L, false)))
+    assert(t.read().get.schema === inferred())
+    t.upsert(batch((1L, "a2", 200L, false), (2L, "b1", 200L, false)))
+    assert(t.read().get.schema === inferred())
+    t.upsert(Seq((3L, "c1", 1.5, 300L, false)).toDF("id", "v", "score", M, D))
+    assert(t.read().get.schema === inferred())
+    assert(t.read().get.schema("score").dataType === DoubleType)
+    assert(t.read().get.where($"id" === 3L).head().getAs[Double]("score") === 1.5)
+  }
+
+  test("schema memo: a snapshot this instance did not commit is inferred, not trusted") {
+    val s = spark; import s.implicits._
+    val root = Files.createTempDirectory("graft-upsert-memo2").toString
+    val a = new KeyedUpsertTable(spark, root, Seq("id"))
+    a.upsert(batch((1L, "a1", 100L, false)))
+    assert(!a.read().get.columns.contains("note"))
+    // another writer on the same root commits an evolved snapshot
+    val b = new KeyedUpsertTable(spark, root, Seq("id"))
+    b.upsert(Seq((2L, "b1", "n2", 200L, false)).toDF("id", "v", "note", M, D))
+    val seen = a.read().get
+    assert(seen.columns.contains("note"))
+    assert(seen.orderBy("id").collect().map(r => Option(r.getAs[String]("note"))).toSeq ===
+      Seq(None, Some("n2")))
+    // ... and the first instance's next commit merges onto that snapshot
+    a.upsert(batch((3L, "c1", 300L, false)))
+    assert(a.read().get.orderBy("id").collect().map(r => Option(r.getAs[String]("note"))).toSeq ===
+      Seq(None, Some("n2"), None))
+    assert(b.read().get.count() === 3)
   }
 }

@@ -1,6 +1,6 @@
 package graft.stream
 
-import graft.SparkSpecBase
+import graft.{JobCounter, SparkSpecBase}
 import graft.cdc.{CdcFormat, SchemaInference, SyncTable}
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -285,6 +285,73 @@ class CdcPipelineSpec extends SparkSpecBase {
       assert(tableState(p) === (Map(1L -> "v1b", 2L -> "v2b", 3L -> "v3b") ++
         (4 to 12).map(i => i.toLong -> s"v$i").toMap))
     } finally { q.stop(); p.shutdown() }
+  }
+
+  /** A Flink-CDC event for `t`; deletes carry only the `before` image. */
+  private def flinkEv(t: SyncTable, id: Int, v: String, ts: Long, op: String): String = {
+    val img = s"""{"id":$id,"v":"$v"}"""
+    val (before, after) = if (op == "d") (img, "null") else ("null", img)
+    s"""{"before":$before,"after":$after,"source":{"db":"${t.dbName}","table":"${t.tableName}"},""" +
+      s""""op":"$op","ts_ms":$ts}"""
+  }
+
+  private def freshCachedSchemas(tables: Seq[SyncTable]): Unit =
+    tables.foreach(t => SchemaInference.invalidate(s"${CdcFormat.FlinkCdc.name}:${t.id}"))
+
+  test("cached Flink-CDC: deletes after a delete-free first trigger are applied, " +
+      "also on and after a revalidation tick") {
+    val s = spark; import s.implicits._
+    val t = SyncTable("flink_del_db", "acct", "id")
+    freshCachedSchemas(Seq(t))
+    val p = new CdcPipeline(spark, CdcPipelineConfig(
+      format = CdcFormat.FlinkCdc, tables = Seq(t),
+      sinkRoot = Files.createTempDirectory("graft-flink-del").toString,
+      checkpointDir = Files.createTempDirectory("graft-flink-del-ckpt").toString,
+      schemaMode = SchemaInference.Mode.Cached, revalidateEvery = 2))
+    def run(batchId: Long, events: String*): Map[Long, String] = {
+      p.processBatch(events.toDF("value"), batchId)
+      p.sinks(t.id).read().get.collect()
+        .map(r => r.getAs[Long]("id") -> r.getAs[String]("v")).toMap
+    }
+    try {
+      // every `before` is null: JSON inference types it as a string
+      assert(run(0L, (1 to 4).map(i => flinkEv(t, i, s"v$i", 100, "c")): _*) ===
+        Map(1L -> "v1", 2L -> "v2", 3L -> "v3", 4L -> "v4"))
+      assert(run(1L, flinkEv(t, 1, "v1", 200, "d"), flinkEv(t, 2, "v2b", 200, "u")) ===
+        Map(2L -> "v2b", 3L -> "v3", 4L -> "v4"))
+      // batch 2 is a revalidateEvery tick: the refresh merges the cached
+      // string-typed `before` with this batch's inference
+      assert(run(2L, flinkEv(t, 2, "v2b", 300, "d"), flinkEv(t, 3, "v3b", 300, "u")) ===
+        Map(3L -> "v3b", 4L -> "v4"))
+      assert(run(3L, flinkEv(t, 3, "v3b", 400, "d")) === Map(4L -> "v4"))
+    } finally p.shutdown()
+  }
+
+  test("job budget: a steady copy-on-write trigger of three catalog-synced tables " +
+      "runs at most 1 job + 3 per table") {
+    val s = spark; import s.implicits._
+    val tables = (0 until 3).map(i => SyncTable("budget_db", s"jobs$i", "id"))
+    freshCachedSchemas(tables)
+    val p = new CdcPipeline(spark, CdcPipelineConfig(
+      format = CdcFormat.FlinkCdc, tables = tables,
+      sinkRoot = Files.createTempDirectory("graft-budget").toString,
+      checkpointDir = Files.createTempDirectory("graft-budget-ckpt").toString,
+      catalogDb = Some("budget_db")))
+    def trigger(ts: Long, op: String): org.apache.spark.sql.DataFrame =
+      tables.flatMap(t => (1 to 4).map(i => flinkEv(t, i, s"v$ts", ts, op)) :+
+        flinkEv(t, 4 + ts.toInt, "x", ts, "d")).toDF("value")
+    try {
+      // cold trigger: schema inference and catalog CREATE happen here
+      p.processBatch(trigger(100, "c"), 0L)
+      val (_, jobs) = JobCounter(spark)(p.processBatch(trigger(200, "u"), 1L))
+      info(s"a steady trigger ran $jobs Spark jobs")
+      assert(jobs <= 1 + 3 * tables.size, s"a steady trigger ran $jobs Spark jobs")
+      tables.foreach { t =>
+        val rows = spark.table(s"budget_db.${t.tableName}").collect()
+        assert(rows.map(_.getAs[String]("v")).toSet === Set("v200"))
+        assert(rows.length === 4)
+      }
+    } finally p.shutdown()
   }
 
   test("offset listener records completed batch offsets") {
