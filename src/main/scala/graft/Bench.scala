@@ -422,8 +422,10 @@ object Bench {
     // descending — the rows where a quiet re-time changes the most.
     // Each fork is an independent fresh JVM, so order cannot change any
     // measured value; it only changes which rows still get re-timed
-    // when the global budget runs short. Gated-out forks keep their
-    // in-JVM time and are listed in deadline.fork_skipped.
+    // when the global budget runs short. Gated-out forks are listed in
+    // deadline.fork_skipped; a gated-out alwaysFork row records -1.0
+    // (the fork-failed sentinel), because its in-JVM time is the known
+    // cache-contaminated one, while any other row keeps its in-JVM time.
     val needsFork = first.filter { case (name, _, t) =>
       smoke.isEmpty && (t > 3.0 || (t >= 0 && alwaysFork(name))) }
     val forkOrder = needsFork.filter(q => alwaysFork(q._1)) ++
@@ -431,8 +433,10 @@ object Bench {
     val forkSkipped = scala.collection.mutable.LinkedHashSet.empty[String]
     val forkOutcome = scala.collection.mutable.Map.empty[String, Double]
     forkOrder.foreach { case (name, fn, t) =>
-      if (!gate("fork_retimes", 420)) forkSkipped += name
-      else forkedReps(name) match {
+      if (!gate("fork_retimes", 420)) {
+        forkSkipped += name
+        if (alwaysFork(name)) forkOutcome(name) = -1.0
+      } else forkedReps(name) match {
           case Some(rsCal0) =>
             var rsCal = rsCal0
             var reforked = false
@@ -467,8 +471,8 @@ object Bench {
         }
     }
     // Recorded values in sweep order: the forked re-time when one ran,
-    // the in-JVM time otherwise (including deadline-gated rows, which
-    // deadline.fork_skipped discloses).
+    // -1.0 for a deadline-gated alwaysFork row, the in-JVM time
+    // otherwise (deadline.fork_skipped lists every gated row).
     val results = first.map { case (name, _, t) =>
       name -> forkOutcome.getOrElse(name, t)
     }

@@ -117,14 +117,10 @@ object PageRank {
           .select(col("node"),
             coalesce(col("__init_rank"), lit(scale)).as("rank_micros"))
     }
-    // The previous round's staged rank vector: once the NEXT stage has
-    // materialized, its blocks are unreferenced — without an unpersist
-    // the executors retain one rank-vector copy PER STAGED ROUND for
-    // the whole iteration (one row per node: small next to the edge
-    // table, but at billions of nodes far from free, and dangling mode
-    // stages every round). The final stage is never unpersisted — it
-    // IS the returned result.
-    var prevStagedRank: Option[DataFrame] = None
+    // A superseded round's staged rank vector is not released by hand:
+    // `localCheckpoint` persists its blocks at the RDD level, which
+    // `Dataset.unpersist` does not touch, and Spark's ContextCleaner
+    // frees them once the old DataFrame is unreferenced and collected.
     for (i <- 1 to iters) {
       val contribs = eWithDeg
         .join(rank.withColumnRenamed("node", "src"), Seq("src"))
@@ -165,12 +161,10 @@ object PageRank {
       // 2.45 s; staging the rank vector (one row per node — small next
       // to the edges, not free at billions of nodes) every round makes
       // each round's plan execute exactly once.
-      rank = if (redistributeDangling || i % stageEvery == 0 || i == iters) {
-        val staged = graft.util.Checkpoints.stage(next)
-        prevStagedRank.foreach(_.unpersist())
-        prevStagedRank = Some(staged)
-        staged
-      } else next
+      rank =
+        if (redistributeDangling || i % stageEvery == 0 || i == iters)
+          graft.util.Checkpoints.stage(next)
+        else next
     }
     rank
   }

@@ -6,7 +6,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 import graft.util.TableFs
 
@@ -238,52 +238,26 @@ final class BucketedUpsertTable(
 
   /** (Re)publish the current manifest under [[catalogTable]] as a catalog
     * view — the bucketed layout's hive-sync step, running after the
-    * pointer swap like Hudi's sync-after-commit. The view body is one
-    * `SELECT <cols> FROM parquet.`<commit dir>` WHERE __bucket IN (…)`
-    * branch per COMMIT DIR the manifest references, UNION ALL'd — NOT
-    * one branch per bucket dir: a manifest references at most
-    * `retainSnapshots`-ish commit dirs but up to `nBuckets` bucket dirs,
-    * and at a realistic 256-4096 buckets a per-bucket body makes every
-    * by-name query pay an O(nBuckets)-deep analyzer pass. Reading the
-    * commit dir turns `__bucket=<b>` into a discovered partition column,
-    * so the `IN` list is STATIC partition pruning — only the referenced
-    * bucket dirs are scanned, superseded siblings in older commit dirs
-    * are pruned out, and the filter is values, not plan branches.
-    *
-    * Per-bucket dirs share one schema by construction (migration commits
-    * rewrite every bucket), and the explicit column list pins positional
-    * alignment and projects the partition column away. `CREATE OR
-    * REPLACE VIEW` is a metadata-only swap, so incremental AND migration
-    * commits both refresh by-name readers with no data copy; schema
-    * evolution propagates because the view is re-derived from the new
-    * manifest. */
+    * pointer swap like Hudi's sync-after-commit. The body is
+    * [[BucketedUpsertTable.viewBody]]: one partition-pruned branch per
+    * COMMIT DIR the manifest references, UNION ALL'd, each reading its
+    * directory through the binding's
+    * [[CatalogSync.directoryRelation]] under the manifest schema plus
+    * `__bucket INT` — a declared-schema directory table with the session
+    * binding, so neither the publish nor a by-name read runs a Spark
+    * job, or a path read with the default. `CREATE OR REPLACE VIEW` is a
+    * metadata-only swap, so incremental AND migration commits both
+    * refresh by-name readers with no data copy; schema evolution
+    * propagates because the view is re-derived from the new manifest. */
   def syncCatalog(): Unit = catalogTable.foreach { fqn =>
     currentSnapshot().foreach { snap =>
       val m = readManifest(snap)
       val schema = StructType.fromDDL(m.schemaDdl)
-      val cols = schema.fields.map(f => s"`${f.name}`").mkString(", ")
-      val body =
-        if (m.buckets.isEmpty) {
-          // all keys deleted: an empty relation with the table schema
-          val typed = schema.fields
-            .map(f => s"CAST(NULL AS ${f.dataType.sql}) AS `${f.name}`")
-            .mkString(", ")
-          s"SELECT $typed WHERE 1 = 0"
-        } else {
-          // bucket -> "data/commit-<n>/__bucket=<b>" grouped by commit dir
-          m.buckets.toSeq
-            .map { case (b, dir) => dir.split('/').take(2).mkString("/") -> b }
-            .groupBy(_._1).toSeq.sortBy(_._1)
-            .map { case (commitDir, entries) =>
-              val ids = entries.map(_._2).sorted.mkString(", ")
-              s"SELECT $cols FROM parquet.`${tfs.str(commitDir)}`" +
-                s" WHERE `__bucket` IN ($ids)"
-            }
-            .mkString(" UNION ALL ")
-        }
+      val view = fqn.split('.').toSeq
       // the sink decides WHAT to publish (the pruned view body); the
       // binding decides HOW (session catalog vs external metastore)
-      catalog.publishView(fqn.split('.').toSeq, body)
+      catalog.publishView(view, BucketedUpsertTable.viewBody(
+        catalog, view, tfs, schema, schema, m.buckets.toSeq)(identity))
     }
   }
 
@@ -304,11 +278,55 @@ final class BucketedUpsertTable(
     val (drop, keep) = snaps.splitAt(math.max(0, snaps.length - retainSnapshots))
     val referenced: Set[String] = keep.flatMap { snap =>
       scala.util.Try(readManifest(snap)).toOption.toSeq
-        .flatMap(_.buckets.values.map(_.split('/').take(2).mkString("/")))
+        .flatMap(_.buckets.values.map(BucketedUpsertTable.commitDirOf))
     }.toSet
     drop.foreach(tfs.deleteRecursively)
     tfs.listSubdirNames("data")
       .filter(name => !referenced.contains(s"data/$name"))
       .foreach(name => tfs.deleteRecursively(s"data/$name"))
   }
+}
+
+object BucketedUpsertTable {
+
+  private val BucketCol = "__bucket"
+
+  /** The commit dir (`data/commit-<n>…`) holding a bucket dir. */
+  private[sink] def commitDirOf(bucketDir: String): String =
+    bucketDir.split('/').take(2).mkString("/")
+
+  /** The view body over a bucket-partitioned manifest whose entries map
+    * bucket ids to bucket dirs (`data/commit-<n>/__bucket=<b>`): one
+    * `SELECT <stored cols> FROM <commit dir> WHERE __bucket IN (…)`
+    * branch per COMMIT DIR, UNION ALL'd and passed through `wrap` — NOT
+    * one branch per bucket dir: a manifest references at most
+    * `retainSnapshots`-ish commit dirs but up to `nBuckets` bucket dirs,
+    * and at a realistic 256-4096 buckets a per-bucket body makes every
+    * by-name query pay an O(nBuckets)-deep analyzer pass. The commit
+    * dir's `__bucket=<b>` subdirs make `__bucket` a partition column,
+    * so the `IN` list is STATIC partition pruning — only the referenced
+    * bucket dirs are scanned, superseded siblings in older commit dirs
+    * are pruned out, and the filter is values, not plan branches. The
+    * explicit column list pins positional alignment and projects the
+    * partition column away. With no entry the body is an empty
+    * relation of `payload`'s columns. */
+  private[sink] def viewBody(catalog: CatalogSync, view: Seq[String], tfs: TableFs,
+                             payload: StructType, stored: StructType,
+                             entries: Seq[(Int, String)])(wrap: String => String): String =
+    if (entries.isEmpty) {
+      val typed = payload.fields
+        .map(f => s"CAST(NULL AS ${f.dataType.sql}) AS `${f.name}`")
+        .mkString(", ")
+      s"SELECT $typed WHERE 1 = 0"
+    } else {
+      val cols = stored.fields.map(f => s"`${f.name}`").mkString(", ")
+      val declared = stored.add(BucketCol, IntegerType)
+      wrap(entries.groupBy { case (_, dir) => commitDirOf(dir) }.toSeq.sortBy(_._1)
+        .map { case (commitDir, inDir) =>
+          val ids = inDir.map(_._1).distinct.sorted.mkString(", ")
+          val rel = catalog.directoryRelation(view, tfs.str(commitDir), declared)
+          s"SELECT $cols FROM $rel WHERE `$BucketCol` IN ($ids)"
+        }
+        .mkString(" UNION ALL "))
+    }
 }

@@ -300,42 +300,32 @@ final class MorUpsertTable(
   }
 
   /** (Re)publish the current manifest as the MOR snapshot-query view:
-    * one static-partition-pruned branch per referenced COMMIT DIR (the
-    * bucketed sink's bounded-body rule), UNION ALL'd, wrapped by the
-    * log fold — `row_number()` over (version, tiebreak…, __commit)
-    * descending, keep rank 1, drop tombstones, project the payload.
-    * Metadata-only per commit; readers by name always see merged
-    * state. */
+    * the bucketed sink's body ([[BucketedUpsertTable.viewBody]] — one
+    * static-partition-pruned branch per referenced COMMIT DIR, read
+    * through the binding's [[CatalogSync.directoryRelation]] under the
+    * manifest schema plus `__commit BIGINT` and `__bucket INT`), wrapped
+    * by the log fold — `row_number()` over (version, tiebreak…,
+    * __commit) descending, keep rank 1, drop tombstones, project the
+    * payload. Metadata-only per commit, and with the session binding no
+    * Spark job at publish or at a by-name read; readers by name always
+    * see merged state. */
   def syncCatalog(): Unit = catalogTable.foreach { fqn =>
     currentSnapshot().foreach { snap =>
       val m = readManifest(snap)
       val schema = StructType.fromDDL(m.schemaDdl)
       val cols = schema.fields.map(f => s"`${f.name}`").mkString(", ")
-      val body =
-        if (m.buckets.isEmpty) {
-          val typed = schema.fields
-            .map(f => s"CAST(NULL AS ${f.dataType.sql}) AS `${f.name}`")
-            .mkString(", ")
-          s"SELECT $typed WHERE 1 = 0"
-        } else {
-          val dirs = m.buckets.toSeq
-            .flatMap { case (b, chain) => chain.map(d => d -> b) }
-            .map { case (d, b) => d.split('/').take(2).mkString("/") -> b }
-            .groupBy(_._1).toSeq.sortBy(_._1)
-          val scan = dirs.map { case (commitDir, entries) =>
-            val ids = entries.map(_._2).distinct.sorted.mkString(", ")
-            s"SELECT $cols, `$CommitCol` FROM parquet.`${tfs.str(commitDir)}`" +
-              s" WHERE `__bucket` IN ($ids)"
-          }.mkString(" UNION ALL ")
-          val pks = keys.map(k => s"`$k`").mkString(", ")
-          val ord = ((versionCol +: tiebreak).map(c => s"`$c` DESC") :+
-            s"`$CommitCol` DESC").mkString(", ")
-          s"""SELECT $cols FROM (
-             |  SELECT *, row_number() OVER (PARTITION BY $pks ORDER BY $ord) AS __rn
-             |  FROM ($scan)
-             |) WHERE __rn = 1 AND NOT `${CdcNormalize.DeletedCol}`""".stripMargin
-        }
-      catalog.publishView(fqn.split('.').toSeq, body)
+      val pks = keys.map(k => s"`$k`").mkString(", ")
+      val ord = ((versionCol +: tiebreak).map(c => s"`$c` DESC") :+
+        s"`$CommitCol` DESC").mkString(", ")
+      val view = fqn.split('.').toSeq
+      val entries = m.buckets.toSeq.flatMap { case (b, chain) => chain.map(b -> _) }
+      catalog.publishView(view, BucketedUpsertTable.viewBody(
+          catalog, view, tfs, schema, storageSchema(m), entries) { scan =>
+        s"""SELECT $cols FROM (
+           |  SELECT *, row_number() OVER (PARTITION BY $pks ORDER BY $ord) AS __rn
+           |  FROM ($scan)
+           |) WHERE __rn = 1 AND NOT `${CdcNormalize.DeletedCol}`""".stripMargin
+      })
     }
   }
 
@@ -370,7 +360,7 @@ final class MorUpsertTable(
     val (drop, keep) = snaps.splitAt(math.max(0, snaps.length - retainSnapshots))
     val referenced: Set[String] = keep.flatMap { snap =>
       scala.util.Try(readManifest(snap)).toOption.toSeq
-        .flatMap(_.buckets.values.flatten.map(_.split('/').take(2).mkString("/")))
+        .flatMap(_.buckets.values.flatten.map(BucketedUpsertTable.commitDirOf))
     }.toSet
     drop.foreach(tfs.deleteRecursively)
     tfs.listSubdirNames("data")

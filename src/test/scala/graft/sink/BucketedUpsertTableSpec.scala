@@ -170,6 +170,27 @@ class BucketedUpsertTableSpec extends SparkSpecBase {
       Seq(Some("keep-a"), Some("keep-b"), None))
   }
 
+  test("catalog sync: a narrower batch into an empty bucket keeps every column by name") {
+    val s = spark; import s.implicits._
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+    val root = Files.createTempDirectory("graft-bkt-narrow-cat").toString
+    val t = new BucketedUpsertTable(spark, root, Seq("id"), nBuckets = 64,
+      catalogTable = Some("bkt_db.narrow"))
+    t.upsert(Seq((1L, "a1", "keep-a", 100L, false), (2L, "b1", "keep-b", 100L, false))
+      .toDF("id", "v", "note", M, D))
+    def bucketOf(k: Long): Int =
+      Seq(k).toDF("id").select(pmod(hash(col("id")), lit(64))).head().getInt(0)
+    val used = Set(bucketOf(1L), bucketOf(2L))
+    val fresh = (3L to 200L).find(k => !used(bucketOf(k))).get
+    // the new commit dir's files lack `note`; the view declares it
+    t.upsert(batch((fresh, "c1", 200L, false)))
+    val byName = spark.table("bkt_db.narrow")
+    assert(byName.columns.toSeq === t.read().get.columns.toSeq)
+    assert(byName.exceptAll(t.read().get).isEmpty && t.read().get.exceptAll(byName).isEmpty)
+    assert(byName.orderBy("id").collect().map(r => Option(r.getAs[String]("note"))).toSeq ===
+      Seq(Some("keep-a"), Some("keep-b"), None))
+  }
+
   test("catalog sync: by-name reads track incremental AND migration commits") {
     val s = spark; import s.implicits._
     val root = Files.createTempDirectory("graft-bkt-cat").toString

@@ -3,7 +3,12 @@ package graft.sink
 import graft.SparkSpecBase
 import graft.cdc.CdcNormalize
 
-import java.nio.file.Files
+import com.fasterxml.jackson.databind.ObjectMapper
+
+import org.apache.spark.sql.DataFrame
+
+import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
 
 /** The CatalogSync seam: both sinks must publish by-name access through
   * the injected binding only (the cluster's metastore swap point), and
@@ -148,5 +153,102 @@ class CatalogSyncSpec extends SparkSpecBase {
       assert(rows.map(_.getAs[Long]("id")).toSet === (1 to 4).map(_.toLong).toSet)
       assert(rows.map(_.getAs[String]("v")).toSet === Set(s"${t}4"))
     }
+  }
+
+  // ---- declared-schema directory tables: views resolve without Spark jobs
+
+  private def noJobs(what: String)(body: => Any): Unit = {
+    val (_, jobs) = graft.JobCounter(spark)(body)
+    assert(jobs === 0, s"$what ran $jobs Spark jobs")
+  }
+
+  private def rows(ids: Seq[Long], ts: Long, extra: Boolean = false): DataFrame = {
+    val s = spark; import s.implicits._
+    if (extra) ids.map(i => (i, s"v$i@$ts", ts, false, i * 10)).toDF("id", "v", M, D, "w")
+    else ids.map(i => (i, s"v$i@$ts", ts, false)).toDF("id", "v", M, D)
+  }
+
+  private def hasCompaction(root: Path): Boolean =
+    Files.list(root.resolve("data")).iterator().asScala
+      .exists(_.getFileName.toString.endsWith("-compact"))
+
+  test("session binding: a MOR view resolves by name and re-syncs with no Spark job, " +
+      "after a delta commit and after a compaction") {
+    val root = Files.createTempDirectory("graft-cat-mor")
+    val t = new MorUpsertTable(spark, root.toString, Seq("id"), nBuckets = 4,
+      compactAfter = 2, catalogTable = Some("cat_dir.mor"))
+    def check(after: String): Unit = {
+      noJobs(s"resolving the MOR view by name after $after")(spark.table("cat_dir.mor").schema)
+      noJobs(s"syncCatalog after $after")(t.syncCatalog())
+      assert(ids("cat_dir.mor") === (1L to 20L).toSet)
+    }
+    t.upsert(rows(1L to 20L, 100L))
+    t.upsert(rows(Seq(1L, 2L), 200L))
+    check("a delta commit")
+    t.upsert(rows(Seq(1L, 2L), 300L))
+    assert(hasCompaction(root), "fixture must compact")
+    check("a compaction")
+  }
+
+  test("session binding: a bucketed view resolves by name and re-syncs with no Spark job") {
+    val root = Files.createTempDirectory("graft-cat-bktdir")
+    val t = new BucketedUpsertTable(spark, root.toString, Seq("id"), nBuckets = 4,
+      catalogTable = Some("cat_dir.bkt"))
+    def check(after: String): Unit = {
+      noJobs(s"resolving the bucketed view by name after $after")(spark.table("cat_dir.bkt").schema)
+      noJobs(s"syncCatalog after $after")(t.syncCatalog())
+      assert(ids("cat_dir.bkt") === (1L to 20L).toSet)
+    }
+    t.upsert(rows(1L to 20L, 100L))
+    t.upsert(rows(Seq(1L, 2L), 200L))
+    check("an incremental commit")
+    // each branch still prunes its commit dir to the manifest's buckets
+    val scans = spark.table("cat_dir.bkt").queryExecution.executedPlan.toString
+      .linesIterator.filter(_.contains("FileScan")).toSeq
+    assert(scans.length === 2 &&
+      scans.forall(_.matches(".*PartitionFilters: \\[[^]]*__bucket.*")), scans.mkString("\n"))
+    t.upsert(rows(Seq(3L), 300L, extra = true))
+    assert(spark.table("cat_dir.bkt").columns.contains("w"))
+    check("a migration commit")
+  }
+
+  test("session binding: a 20-commit MOR soak keeps only the view and the directory " +
+      "tables of its last two publishes") {
+    val root = Files.createTempDirectory("graft-cat-soak")
+    val t = new MorUpsertTable(spark, root.toString, Seq("id"), nBuckets = 4,
+      compactAfter = 2, catalogTable = Some("cat_soak.mor"))
+    for (c <- 0 until 20)
+      t.upsert(rows(Seq(c.toLong, (c * 7 % 30).toLong, (c * 13 % 30).toLong).distinct, c * 100L))
+    assert(hasCompaction(root))
+    // the two retained manifests are the last two publishes
+    val mapper = new ObjectMapper()
+    val snaps = Files.list(root).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("snap-")).toSeq
+    assert(snaps.length === 2)
+    val dirTables = snaps.flatMap { snap =>
+      mapper.readTree(snap.resolve("_buckets.json").toFile).get("buckets")
+        .elements().asScala.flatMap(_.elements().asScala.map(_.asText()))
+    }.map(d => "mor__" + BucketedUpsertTable.commitDirOf(d).stripPrefix("data/").replace('-', '_')).toSet
+    val listed = spark.catalog.listTables("cat_soak").collect()
+      .filterNot(_.isTemporary).map(_.name).toSet
+    assert(listed === dirTables + "mor")
+    assert(spark.table("cat_soak.mor").exceptAll(t.read().get).isEmpty)
+  }
+
+  test("session binding: two sinks on different roots publishing one name in turn " +
+      "each read back their own rows") {
+    def sink(prefix: String) = new MorUpsertTable(spark,
+      Files.createTempDirectory(prefix).toString, Seq("id"), nBuckets = 2,
+      catalogTable = Some("cat_two.t"))
+    val (a, b) = (sink("graft-cat-two-a"), sink("graft-cat-two-b"))
+    a.upsert(rows(1L to 3L, 100L))
+    assert(ids("cat_two.t") === Set(1L, 2L, 3L))
+    b.upsert(rows(11L to 13L, 100L))
+    assert(ids("cat_two.t") === Set(11L, 12L, 13L))
+    // both roots have a commit-0: each publish must read its own
+    a.upsert(rows(Seq(4L), 200L))
+    assert(ids("cat_two.t") === Set(1L, 2L, 3L, 4L))
+    b.upsert(rows(Seq(14L), 200L))
+    assert(ids("cat_two.t") === Set(11L, 12L, 13L, 14L))
   }
 }

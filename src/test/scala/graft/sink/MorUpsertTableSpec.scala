@@ -6,6 +6,7 @@ import graft.cdc.CdcNormalize
 import org.apache.spark.sql.DataFrame
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** The MOR sink's contract: delta appends (write = O(batch)), read-side
   * log merge equal to the COW sequence on version-ordered histories,
@@ -167,6 +168,38 @@ class MorUpsertTableSpec extends SparkSpecBase {
       .map(r => r.getAs[Long]("id") -> r.getAs[String]("v")).toMap
     assert(byName === Map(1L -> "a2", 2L -> "b"))
     assert(byName === state(t)) // view ≡ the programmatic read
+  }
+
+  test("by-name read equals read() across deltas, deletes, a compaction and a migration") {
+    val s = spark; import s.implicits._
+    val root = Files.createTempDirectory("mor-cat-eq")
+    val t = new MorUpsertTable(spark, root.toString, Seq("id"),
+      nBuckets = 4, compactAfter = 2, catalogTable = Some("mor_spec_db.eq"))
+    def same(): Unit = {
+      val byName = spark.table("mor_spec_db.eq")
+      val direct = t.read().get
+      assert(byName.columns.toSeq === direct.columns.toSeq)
+      assert(byName.exceptAll(direct).isEmpty && direct.exceptAll(byName).isEmpty)
+    }
+    t.upsert(batch((1L to 12L).map(i => (i, s"a$i", 10L, false)): _*))
+    same()
+    t.upsert(batch((2L, "b2", 20L, false), (3L, "gone", 20L, true)))
+    same()
+    t.upsert(batch((4L, "b4", 30L, false), (5L, "gone", 30L, true)))
+    same()
+    // a third delta lengthens the touched chains past compactAfter
+    t.upsert(batch((2L, "c2", 40L, false), (6L, "c6", 40L, false)))
+    assert(Files.list(root.resolve("data")).iterator().asScala
+      .exists(_.getFileName.toString.endsWith("-compact")), "fixture must compact")
+    same()
+    // migration commit: the added column is visible by name
+    t.upsert(Seq((7L, "m7", 50L, false, 70L)).toDF("id", "v", M, D, "w"))
+    same()
+    assert(spark.table("mor_spec_db.eq").columns.contains("w"))
+    assert(spark.table("mor_spec_db.eq").where($"id" === 7L)
+      .select("w").head().getLong(0) === 70L)
+    t.upsert(Seq((8L, "d8", 60L, false, 80L)).toDF("id", "v", M, D, "w"))
+    same()
   }
 
   test("60-commit soak with migrations: bounded disk/chains, exact state, single-scan read") {
