@@ -21,7 +21,7 @@ import scala.util.Try
   * location-based table; a bucketed or merge-on-read snapshot is a
   * manifest over many immutable commit directories → a view with a
   * static partition-pruned body, one branch per commit directory (see
-  * [[BucketedUpsertTable.syncCatalog]], [[MorUpsertTable.syncCatalog]]).
+  * [[MorUpsertTable.syncCatalog]], which both layouts run).
   * Each branch reads its directory through [[directoryRelation]].
   */
 trait CatalogSync {

@@ -24,7 +24,7 @@ final class HudiUpsertSink(
 
   require(EdgeProbe.hudiAvailable,
     "Hudi connector (org.apache.hudi.DefaultSource) is not on the " +
-      "classpath; use sink=cow or sink=bucketed, or add the " +
+      "classpath; use sink=cow, sink=bucketed or sink=mor, or add the " +
       "hudi-spark-bundle jar")
 
   /** The write options the reference job sets per table

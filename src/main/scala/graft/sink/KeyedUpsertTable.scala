@@ -80,8 +80,7 @@ final class KeyedUpsertTable(
   private val SrcCol = "__graft_src"
 
   /** Name of the snapshot directory currently visible to readers. */
-  def currentSnapshot(): Option[String] =
-    tfs.readPointer("_current").map(_.trim).filter(_.nonEmpty)
+  def currentSnapshot(): Option[String] = Snapshots.current(tfs)
 
   /** The latest snapshot this instance committed or read, with its read
     * schema. Snapshot directories are immutable once the pointer names
@@ -111,7 +110,7 @@ final class KeyedUpsertTable(
     * collect — point lookups are small by contract; `maxKeys` makes
     * that loud) and pushes them as literal `In` filters into the
     * parquet scan, where row-group min/max statistics skip non-matching
-    * groups. The bucketed/MOR layouts' [[BucketedUpsertTable.readForKeys]]
+    * groups. The bucketed/MOR layouts' [[MorUpsertTable.readForKeys]]
     * is the stronger form (dir-level pruning); this is the best the
     * single-snapshot layout can do, and the filter pushdown is
     * spec-asserted. */
@@ -151,10 +150,7 @@ final class KeyedUpsertTable(
     * Spark job; the publish is a single filesystem rename). */
   private def commit(df: DataFrame): Unit = {
     tfs.mkdirs("")
-    val next = "snap-" + (currentSnapshot() match {
-      case Some(s) => s.stripPrefix("snap-").toLong + 1
-      case None    => 0L
-    })
+    val next = "snap-" + Snapshots.nextId(currentSnapshot())
     graft.util.StageProf.timed("sink.commitWrite")(
       df.write.mode("overwrite").parquet(tfs.str(next)))
     tfs.swapPointer("_current", next)
@@ -182,19 +178,8 @@ final class KeyedUpsertTable(
   /** Hudi-cleaner equivalent: after the pointer swap, delete every
     * snapshot older than the newest `retainSnapshots`. Runs only after
     * publish, so readers of the current snapshot are never affected. */
-  private def cleanOldSnapshots(): Unit = {
-    // Only exactly-numeric snap-<n> dirs participate; a stray `snap-tmp`
-    // or hand-copied dir must not throw AFTER the pointer swap already
-    // published the commit (cleanup can never fail a committed batch).
-    val numeric = "snap-(\\d+)".r
-    val snaps = tfs.listSubdirNames("")
-      .flatMap {
-        case name @ numeric(n) => Some(name -> n.toLong)
-        case _                 => None
-      }
-      .sortBy(_._2).map(_._1)
-    snaps.dropRight(retainSnapshots).foreach(tfs.deleteRecursively)
-  }
+  private def cleanOldSnapshots(): Unit =
+    Snapshots.listed(tfs).dropRight(retainSnapshots).foreach(tfs.deleteRecursively)
 }
 
 object KeyedUpsertTable {

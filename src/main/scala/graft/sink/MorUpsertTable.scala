@@ -12,42 +12,64 @@ import graft.util.TableFs
 
 import scala.jdk.CollectionConverters._
 
-/** The log-structured (merge-on-read) variant of the keyed upsert
-  * sinks — Hudi's MERGE_ON_READ table model re-expressed over parquet:
-  * a micro-batch APPENDS one delta file set per touched bucket (write
-  * cost = O(batch), never a table rewrite), readers merge base + deltas
-  * latest-per-key at scan time, and a bucket whose delta chain exceeds
-  * `compactAfter` is compacted (base+deltas → one new base) inside the
-  * committing batch. The reference chooses COPY_ON_WRITE
-  * (`/root/reference/glue/cdc_hudi.py:186`); MOR is the documented
-  * alternative for write-heavy small-batch streams, where COW's
-  * rewrite-per-batch amplification dominates ([[KeyedUpsertTable]])
-  * and even the bucketed sink rewrites every touched bucket
-  * ([[BucketedUpsertTable]]).
+/** The keyed upsert sink over hash buckets — Hudi's file-group model
+  * re-expressed over parquet. Rows are bucketed by record key, and a
+  * micro-batch writes only the buckets its keys land in; the other
+  * buckets' files are carried forward by reference, untouched. One knob,
+  * [[compactAfter]], picks the table type, as
+  * `hoodie.datasource.write.table.type` does in the reference
+  * (`glue/cdc_hudi.py:186`):
   *
-  * Merge semantics are Hudi's MOR log-scanner rules: every stored row
-  * carries its commit sequence (`__commit`); the survivor per key is
+  *  - `compactAfter = 1` (the preset [[BucketedUpsertTable]]) merges on
+  *    write: each touched bucket is rewritten with the batch folded in,
+  *    tombstones dropped. Write amplification per batch is
+  *    `touched_buckets / n_buckets` of the table instead of COW's 1.0
+  *    ([[KeyedUpsertTable]]), and reads are plain scans.
+  *  - `compactAfter > 1` is MERGE_ON_READ: a micro-batch APPENDS one
+  *    delta file set per touched bucket (write cost = O(batch)), readers
+  *    merge base + deltas latest-per-key at scan time, and a bucket whose
+  *    chain exceeds `compactAfter` (or [[compactReadAmp]]) is compacted
+  *    (base+deltas → one new base) inside the committing batch — the
+  *    documented alternative for write-heavy small-batch streams.
+  *
+  * Merge semantics are Hudi's MOR log-scanner rules: every row of the
+  * log carries its commit sequence (`__commit`); the survivor per key is
   * `max_by` over (version, tiebreak…, __commit) — version wins, commit
   * order breaks full ties (a later batch's equal-version row supersedes,
-  * matching the COW path's incoming-beats-stored rule) — and delete
-  * tombstones are retained in the log, masking their key until dropped
-  * at compaction. The one DOCUMENTED divergence from sequential COW
-  * (also true of real Hudi MOR): an OLDER-versioned event arriving
-  * after a delete stays masked by the uncompacted tombstone, whereas
-  * COW re-inserts it because the hard delete already erased the key.
+  * matching the COW path's incoming-beats-stored rule). The files the
+  * merge-on-write preset writes, like those of bucketed tables written
+  * before it, store no `__commit`: their rows read it as null and lose
+  * every such tie, as each is older than any later batch. With
+  * `compactAfter > 1`, delete tombstones are retained in the log,
+  * masking their key until dropped at compaction. That gives
+  * the one DOCUMENTED divergence from sequential COW (also true of real
+  * Hudi MOR), and only for `compactAfter > 1`: an OLDER-versioned event
+  * arriving after a delete stays masked by the uncompacted tombstone,
+  * whereas COW — and the merge-on-write preset, which drops the
+  * tombstone in the commit that carries it — re-inserts it because the
+  * hard delete already erased the key.
   *
-  * Layout (all inside `root`, same pointer/manifest machinery as
-  * [[BucketedUpsertTable]]):
+  * Layout (all inside `root`):
   * {{{
-  *   data/commit-<n>/__bucket=<b>/part-*.parquet     delta appends
+  *   data/commit-<n>/__bucket=<b>/part-*.parquet     rewrites / delta appends
   *   data/commit-<n>-compact/__bucket=<b>/…          compacted bases
   *   snap-<n>/_buckets.json    manifest: bucket -> ORDERED dir list
   *   _current.v<N>             versioned pointer files (readers take max N)
   * }}}
-  * Driver-side state stays bounded by `nBuckets` (touched-set collect +
-  * manifest), exactly like the bucketed sink.
+  * A snapshot is a MANIFEST, not a directory of data: it maps every
+  * non-empty bucket to the chain of dirs holding its rows (possibly many
+  * commits old), so an in-flight reader of snapshot k is unaffected by
+  * commit k+1 as long as k is retained. A manifest written before chains
+  * existed maps a bucket to one dir and is read as a one-dir chain.
+  *
+  * Schema evolution: an ADDITIVE or WIDENING batch schema makes the
+  * commit a migration that rewrites all buckets onto the union schema
+  * (same cost as one COW batch), so a manifest's dirs share one schema.
+  *
+  * Driver-side state is bounded by `nBuckets` (the touched-bucket
+  * collect and the manifest), never by data size.
   */
-final class MorUpsertTable(
+class MorUpsertTable(
     spark: SparkSession,
     val root: String,
     val keys: Seq[String],
@@ -58,7 +80,8 @@ final class MorUpsertTable(
     /** Compact a bucket when its dir chain (base + deltas) exceeds this
       * length — the read-amplification bound: a reader scans at most
       * `compactAfter` files per bucket. Hudi's
-      * `hoodie.compact.inline.max.delta.commits` equivalent. */
+      * `hoodie.compact.inline.max.delta.commits` equivalent; 1 merges on
+      * write (see the class doc). */
     val compactAfter: Int = 4,
     /** MEASURED read-amplification trigger (0 disables): compact a
       * bucket when its chain's total bytes exceed this multiple of its
@@ -73,14 +96,18 @@ final class MorUpsertTable(
       * calls). The bench's `mor_read_curve` row measures the latency
       * curve this knob bounds. */
     val compactReadAmp: Double = 0.0,
-    /** Hive-sync equivalent for the LOG-STRUCTURED layout: when set
-      * (`[db.]table`), every commit (re)publishes a SNAPSHOT-QUERY view
-      * (Hudi MOR's by-name read): the log fold itself — latest-per-key
-      * over (version, tiebreak…, commit) with tombstones dropped —
-      * expressed in the view body over the manifest's commit dirs, so
-      * `spark.table("db.table")` serves merged state with zero data
-      * movement per commit. */
+    /** Hive-sync equivalent: when set (`[db.]table`), every commit
+      * (re)publishes a SNAPSHOT-QUERY view over the manifest's commit
+      * dirs, so `spark.table("db.table")` serves merged state with zero
+      * data movement per commit — the reference hive-syncs every table
+      * unconditionally (`glue/cdc_hudi.py:190-194`). A
+      * view (not an external table) because a snapshot is a MANIFEST
+      * over many data dirs from different commits — no single LOCATION
+      * exists. */
     val catalogTable: Option[String] = None,
+    /** The catalog binding the sync publishes through; None = the
+      * session catalog ([[SessionCatalogSync]]). A cluster deployment
+      * swaps in its metastore binding here (see [[CatalogSync]]). */
     catalogSync: Option[CatalogSync] = None) extends UpsertSink {
   require(keys.nonEmpty, "keyed table needs at least one key column")
   require(nBuckets >= 1, "need at least one bucket")
@@ -98,10 +125,12 @@ final class MorUpsertTable(
   private val tfs = new TableFs(root, spark.sparkContext.hadoopConfiguration)
   private val mapper = new ObjectMapper()
 
-  /** Commit-sequence column every stored row carries (the log order the
-    * read-side merge tie-breaks on). */
+  /** Commit-sequence column of the log (the order the merge tie-breaks
+    * on; null for rows the merge-on-write preset stores). */
   private val CommitCol = "__commit"
 
+  /** Bucket id of a row: non-negative Murmur3 hash of the key columns —
+    * deterministic across runs/executors (Spark's `hash` is fixed-seed). */
   private def bucketCol = pmod(hash(keys.map(col): _*), lit(nBuckets))
 
   private val BucketDirPrefix = "__bucket="
@@ -110,7 +139,10 @@ final class MorUpsertTable(
 
   /** schemaDdl = PAYLOAD schema (without [[CommitCol]]); buckets map to
     * the ordered chain of dirs holding the bucket's rows. */
-  private case class Manifest(schemaDdl: String, buckets: Map[Int, Seq[String]])
+  private case class Manifest(schemaDdl: String, buckets: Map[Int, Seq[String]]) {
+    def payload: StructType = StructType.fromDDL(schemaDdl)
+    def folded: Boolean = buckets.values.exists(_.length > 1)
+  }
 
   private def manifestRel(snap: String): String = s"$snap/_buckets.json"
 
@@ -125,143 +157,133 @@ final class MorUpsertTable(
     tfs.writeBytes(manifestRel(snap), mapper.writeValueAsBytes(node))
   }
 
+  /** A string-valued bucket entry (the single-dir manifests of earlier
+    * bucketed tables) reads as a one-dir chain. */
   private def readManifest(snap: String): Manifest = {
     val node = mapper.readTree(tfs.readBytes(manifestRel(snap)))
     val buckets = node.get("buckets").properties().iterator().asScala
       .map { e =>
+        val v = e.getValue
         e.getKey.toInt ->
-          e.getValue.elements().asScala.map(_.asText()).toSeq
+          (if (v.isArray) v.elements().asScala.map(_.asText()).toSeq else Seq(v.asText()))
       }.toMap
     Manifest(node.get("schema").asText(), buckets)
   }
 
-  def currentSnapshot(): Option[String] =
-    tfs.readPointer("_current").map(_.trim).filter(_.nonEmpty)
+  def currentSnapshot(): Option[String] = Snapshots.current(tfs)
 
-  /** Chain length of bucket `b` (observability: the soak spec bounds it
-    * by `compactAfter`). */
-  def bucketChainLength(b: Int): Int =
-    currentSnapshot().map(readManifest).flatMap(_.buckets.get(b))
-      .map(_.length).getOrElse(0)
+  /** The dir chain currently serving bucket `b` (observability: the soak
+    * spec bounds its length by `compactAfter`; untouched buckets keep
+    * theirs across commits). */
+  private[sink] def bucketChain(b: Int): Seq[String] =
+    currentSnapshot().map(readManifest).flatMap(_.buckets.get(b)).getOrElse(Nil)
+
+  def bucketChainLength(b: Int): Int = bucketChain(b).length
 
   // ----------------------------------------------------------------- read
 
-  /** Storage schema = payload schema + [[CommitCol]] (every file has
-    * it; dirs point inside the `__bucket=` partition dirs so the bucket
-    * column never surfaces). */
-  private def storageSchema(m: Manifest): StructType =
-    StructType.fromDDL(m.schemaDdl).add(CommitCol, LongType, nullable = false)
+  /** Storage schema = payload schema + [[CommitCol]] (dirs point inside
+    * the `__bucket=` partition dirs so the bucket column never
+    * surfaces). */
+  private def storage(payload: StructType): StructType =
+    payload.add(CommitCol, LongType, nullable = false)
 
+  /** ONE multi-path scan over the manifest's chained dirs (sorted for
+    * plan determinism). A per-dir-scan-then-union alternative builds an
+    * O(nBuckets)-deep plan tree: harmless at 16 buckets, an analyzer
+    * blowup at a realistic 256-4096. */
   private def scanAll(m: Manifest): Option[DataFrame] = {
     val dirs = m.buckets.values.flatten.toSeq.sorted.map(tfs.str)
     if (dirs.isEmpty) None
-    else Some(spark.read.schema(storageSchema(m)).parquet(dirs: _*))
+    else Some(spark.read.schema(storage(m.payload)).parquet(dirs: _*))
   }
 
-  /** Current SERVING state: one multi-path scan of every chained dir,
-    * merged latest-per-key at read time (the R in MOR), tombstones
-    * dropped, commit column projected away. */
-  def read(): Option[DataFrame] = currentSnapshot().map { snap =>
-    val m = readManifest(snap)
-    scanAll(m) match {
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType.fromDDL(m.schemaDdl))
-      case Some(rows) =>
-        MorUpsertTable.logMerge(rows, keys, versionCol, tiebreak, CommitCol)
-          .where(!col(CdcNormalize.DeletedCol))
-          .drop(CommitCol)
-    }
-  }
+  /** Current SERVING state: the chained dirs' rows, tombstones dropped,
+    * commit column projected away. The log fold (the R in MOR) runs
+    * only when a chain holds more than one dir; a single dir holds each
+    * of its bucket's keys once, so a table whose chains are all single
+    * is a plain scan with no shuffle. */
+  def read(): Option[DataFrame] = currentSnapshot().map(snap => serve(readManifest(snap), None))
 
-  /** Point-lookup read on the log-structured layout: the current state
-    * for exactly the keys in `keysDf`, scanning ONLY the delta chains
-    * of the buckets those keys hash into, then folding the log and
-    * masking tombstones as [[read]] does. The bounded bucket-set
-    * collect + broadcast semi-join shape matches
-    * [[BucketedUpsertTable.readForKeys]]; per lookup the IO is at most
-    * `touched buckets × compactAfter` files. */
+  /** Point-lookup read: the current state for exactly the keys in
+    * `keysDf` (a DataFrame carrying the key columns), scanning ONLY the
+    * chains of the buckets those keys hash into — at most
+    * `touched buckets × compactAfter` dirs instead of the table. The
+    * bucket set is a bounded planning collect (≤ `nBuckets` ints, the
+    * upsert path's touched-set pattern); the key equality itself is a
+    * broadcast semi-join, so composite keys work unchanged. */
   def readForKeys(keysDf: DataFrame): Option[DataFrame] = currentSnapshot().map { snap =>
     val m = readManifest(snap)
-    val touched = keysDf.select(bucketCol.as("__b")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    val chains = m.buckets.view.filterKeys(touched).toMap
-    scanAll(Manifest(m.schemaDdl, chains)) match {
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType.fromDDL(m.schemaDdl))
-      case Some(rows) =>
-        MorUpsertTable.logMerge(
-            rows.join(broadcast(keysDf.select(keys.map(col): _*).distinct()),
-              keys, "left_semi"),
-            keys, versionCol, tiebreak, CommitCol)
-          .where(!col(CdcNormalize.DeletedCol))
-          .drop(CommitCol)
-    }
+    val touched = bucketsOf(keysDf)
+    serve(m.copy(buckets = m.buckets.view.filterKeys(touched).toMap), Some(keysDf))
   }
+
+  private def serve(m: Manifest, keysDf: Option[DataFrame]): DataFrame = scanAll(m) match {
+    case None =>
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.payload)
+    case Some(rows) =>
+      val wanted = keysDf.fold(rows)(k =>
+        rows.join(broadcast(k.select(keys.map(col): _*).distinct()), keys, "left_semi"))
+      val live = if (m.folded) MorUpsertTable.logMerge(wanted, keys, versionCol, tiebreak, CommitCol)
+                 else wanted
+      live.where(!col(CdcNormalize.DeletedCol)).drop(CommitCol)
+  }
+
+  /** Bounded planning collect: the bucket ids `df`'s keys hash into. */
+  private def bucketsOf(df: DataFrame): Set[Int] =
+    df.select(bucketCol.as("__b")).distinct().collect().map(_.getInt(0)).toSet
 
   // --------------------------------------------------------------- upsert
 
-  /** Apply one batch: in-batch dedup (tombstones KEPT — they must mask
-    * older log entries), append as per-bucket delta files, then compact
-    * any bucket whose chain exceeds [[compactAfter]]. A schema-evolving
-    * batch compacts ALL buckets (the migration commit, like the
-    * bucketed sink's full rewrite). */
+  /** Apply one batch. With `compactAfter = 1`, merge on write: the
+    * touched buckets' chains and the batch are rewritten together
+    * (every bucket on the first or a migration commit). Otherwise
+    * in-batch dedup (tombstones KEPT — they must mask older log
+    * entries), append as per-bucket delta files, then compact any
+    * bucket whose chain exceeds [[compactAfter]]; a schema-evolving
+    * batch compacts ALL buckets (the migration commit). */
   def upsert(batch: DataFrame): Unit = {
-    val commitId = currentSnapshot() match {
-      case Some(s) => s.stripPrefix("snap-").toLong + 1
-      case None    => 0L
-    }
-    val current = currentSnapshot().map(readManifest)
-    val storedSchema = current.map(m => StructType.fromDDL(m.schemaDdl))
-    val evolved = storedSchema.exists(s =>
-      SchemaInference.mergeStructs(s, batch.schema) != s)
-
-    val version = (versionCol +: tiebreak).map(col)
-    val deduped = LatestPerKey.maxBy(batch, keys, version)
+    val current = currentSnapshot()
+    val commitId = Snapshots.nextId(current)
+    val m = current.map(readManifest)
+    val stored = m.map(_.payload)
+    // the all-nullable form: mergeStructs nullifies every field, so a
+    // non-nullable first-batch schema (typed Datasets produce them)
+    // would otherwise compare "evolved" against every later batch and
+    // turn each commit into a migration
+    val target = SchemaInference.mergeStructs(stored.getOrElse(batch.schema), batch.schema)
+    val evolved = stored.exists(_ != target)
+    val dataDir = s"data/commit-$commitId"
+    def deduped = LatestPerKey.maxBy(batch, keys, (versionCol +: tiebreak).map(col))
       .withColumn(CommitCol, lit(commitId))
 
-    val (manifest, dataSchema) =
-      if (current.isEmpty) {
-        val dataDir = s"data/commit-$commitId"
+    val chains: Map[Int, Seq[String]] = m match {
+      case _ if compactAfter == 1 =>
+        // merge on write; the first and migration commits rewrite every bucket
+        val all = m.fold(Map.empty[Int, Seq[String]])(_.buckets)
+        val (touched, carried) =
+          if (m.isEmpty || evolved) (all, Map.empty[Int, Seq[String]])
+          else {
+            val inBatch = bucketsOf(batch)
+            all.partition { case (b, _) => inBatch(b) }
+          }
+        carried ++
+          rewrite(m, touched, Some(batch.withColumn(CommitCol, lit(commitId))), target, dataDir)
+      case None =>
         writeBucketed(deduped, dataDir)
-        // store the all-nullable form: mergeStructs nullifies every
-        // field, so a non-nullable first-batch schema (typed Datasets
-        // produce them) would otherwise compare "evolved" against every
-        // later batch and turn each commit into a migration
-        (listWritten(dataDir).view.mapValues(Seq(_)).toMap,
-          SchemaInference.mergeStructs(batch.schema, batch.schema))
-      } else if (evolved) {
-        // migration commit: full log fold onto the union schema, write
-        // one compacted base per bucket, tombstones dropped (compaction
-        // is where MOR erases deleted keys for good)
-        val m = current.get
-        val target = SchemaInference.mergeStructs(
-          StructType.fromDDL(m.schemaDdl), batch.schema)
-        val targetStored = target.add(CommitCol, LongType, nullable = false)
-        val stored = scanAll(m).map(KeyedUpsertTable.align(_, targetStored))
-        val all = stored match {
-          case Some(s) => s.unionByName(KeyedUpsertTable.align(deduped, targetStored))
-          case None    => KeyedUpsertTable.align(deduped, targetStored)
-        }
-        val compacted = MorUpsertTable
-          .logMerge(all, keys, versionCol, tiebreak, CommitCol)
-          .where(!col(CdcNormalize.DeletedCol))
-        val dataDir = s"data/commit-$commitId-compact"
-        writeBucketed(compacted, dataDir)
-        (listWritten(dataDir).view.mapValues(Seq(_)).toMap, target)
-      } else {
-        val m = current.get
+        listWritten(dataDir)
+      case Some(s) if evolved =>
+        // migration commit: full log fold onto the union schema, one
+        // compacted base per bucket, tombstones dropped (compaction is
+        // where MOR erases deleted keys for good)
+        rewrite(m, s.buckets, Some(deduped), target, s"$dataDir-compact")
+      case Some(s) =>
         // delta append: O(batch) write, untouched buckets carried as-is
-        val dataDir = s"data/commit-$commitId"
-        writeBucketed(KeyedUpsertTable.align(deduped, storageSchema(m)), dataDir)
+        writeBucketed(KeyedUpsertTable.align(deduped, storage(target)), dataDir)
         val appended = listWritten(dataDir)
-        val chains: Map[Int, Seq[String]] =
-          (m.buckets.keySet ++ appended.keySet).map { b =>
-            b -> (m.buckets.getOrElse(b, Nil) ++ appended.get(b))
-          }.toMap
+        val chains = (s.buckets.keySet ++ appended.keySet).map { b =>
+          b -> (s.buckets.getOrElse(b, Nil) ++ appended.getOrElse(b, Nil))
+        }.toMap
         // inline compaction, scoped to triggered buckets: chain LENGTH
         // over compactAfter, or measured chain BYTES over compactReadAmp
         // times the bucket's base bytes (see the knob's scaladoc)
@@ -274,89 +296,95 @@ final class MorUpsertTable(
           }.filter(_._2 > compactReadAmp).keySet
         val toCompact = chains.filter { case (b, chain) =>
           chain.length > compactAfter || ampTriggered(b) }
-        if (toCompact.isEmpty) (chains, StructType.fromDDL(m.schemaDdl))
-        else {
-          val dirs = toCompact.values.flatten.toSeq.sorted.map(tfs.str)
-          val compacted = MorUpsertTable.logMerge(
-              spark.read.schema(storageSchema(m)).parquet(dirs: _*),
-              keys, versionCol, tiebreak, CommitCol)
-            .where(!col(CdcNormalize.DeletedCol))
-          val compactDir = s"data/commit-$commitId-compact"
-          writeBucketed(compacted, compactDir)
-          val rebased = listWritten(compactDir)
-          // a compacted bucket whose keys ALL deleted yields no dir and
-          // drops from the manifest entirely
-          (chains.filter(e => !toCompact.contains(e._1)) ++
-            toCompact.keySet.flatMap(b => rebased.get(b).map(d => b -> Seq(d))),
-            StructType.fromDDL(m.schemaDdl))
-        }
-      }
+        // a compacted bucket whose keys ALL deleted yields no dir and
+        // drops from the manifest entirely
+        if (toCompact.isEmpty) chains
+        else chains -- toCompact.keySet ++ rewrite(m, toCompact, None, target, s"$dataDir-compact")
+    }
 
     val snap = s"snap-$commitId"
-    writeManifest(snap, Manifest(dataSchema.toDDL, manifest))
+    writeManifest(snap, Manifest(target.toDDL, chains))
     tfs.swapPointer("_current", snap)
     syncCatalog()
     clean()
   }
 
-  /** (Re)publish the current manifest as the MOR snapshot-query view:
-    * the bucketed sink's body ([[BucketedUpsertTable.viewBody]] — one
-    * static-partition-pruned branch per referenced COMMIT DIR, read
-    * through the binding's [[CatalogSync.directoryRelation]] under the
-    * manifest schema plus `__commit BIGINT` and `__bucket INT`), wrapped
-    * by the log fold — `row_number()` over (version, tiebreak…,
-    * __commit) descending, keep rank 1, drop tombstones, project the
-    * payload. Metadata-only per commit, and with the session binding no
-    * Spark job at publish or at a by-name read; readers by name always
-    * see merged state. */
+  /** The rewrite both upsert branches share: fold `chains` (stored under
+    * `m`'s schema) and `incoming` (None for a compaction), aligned onto
+    * `target`, with the log merge over (version, tiebreak…, __commit),
+    * drop tombstones, and write the survivors into `dataDir` in one
+    * bucket-partitioned job. Returns the bucket dirs written. */
+  private def rewrite(m: Option[Manifest], chains: Map[Int, Seq[String]],
+                      incoming: Option[DataFrame], target: StructType,
+                      dataDir: String): Map[Int, Seq[String]] = {
+    val stored = m.flatMap(s => scanAll(s.copy(buckets = chains)))
+    val rows = (stored ++ incoming).map(KeyedUpsertTable.align(_, storage(target)))
+      .reduce(_ unionByName _)
+    val survivors = MorUpsertTable.logMerge(rows, keys, versionCol, tiebreak, CommitCol)
+      .where(!col(CdcNormalize.DeletedCol))
+    // merge on write stores no commit: each of its stored rows is older
+    // than every later batch, and the null it reads back loses every tie
+    writeBucketed(if (compactAfter == 1) survivors.drop(CommitCol) else survivors, dataDir)
+    listWritten(dataDir)
+  }
+
+  /** (Re)publish the current manifest as the snapshot-query view, running
+    * after the pointer swap like Hudi's sync-after-commit. The body is
+    * [[BucketedUpsertTable.viewBody]] — one static-partition-pruned
+    * branch per referenced COMMIT DIR, read through the binding's
+    * [[CatalogSync.directoryRelation]] under the manifest schema plus
+    * `__commit BIGINT` and `__bucket INT` — with tombstones dropped and
+    * the payload projected; when a chain holds more than one dir the
+    * log fold (`row_number()` over (version, tiebreak…, __commit)
+    * descending, rank 1) runs first, as in [[read]]. Metadata-only per
+    * commit, and with the session binding no Spark job at publish or at
+    * a by-name read; schema evolution propagates because the view is
+    * re-derived from the new manifest. */
   def syncCatalog(): Unit = catalogTable.foreach { fqn =>
     currentSnapshot().foreach { snap =>
       val m = readManifest(snap)
-      val schema = StructType.fromDDL(m.schemaDdl)
-      val cols = schema.fields.map(f => s"`${f.name}`").mkString(", ")
+      val cols = m.payload.fields.map(f => s"`${f.name}`").mkString(", ")
       val pks = keys.map(k => s"`$k`").mkString(", ")
       val ord = ((versionCol +: tiebreak).map(c => s"`$c` DESC") :+
         s"`$CommitCol` DESC").mkString(", ")
       val view = fqn.split('.').toSeq
       val entries = m.buckets.toSeq.flatMap { case (b, chain) => chain.map(b -> _) }
+      // the sink decides WHAT to publish (the pruned view body); the
+      // binding decides HOW (session catalog vs external metastore)
       catalog.publishView(view, BucketedUpsertTable.viewBody(
-          catalog, view, tfs, schema, storageSchema(m), entries) { scan =>
-        s"""SELECT $cols FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY $pks ORDER BY $ord) AS __rn
-           |  FROM ($scan)
-           |) WHERE __rn = 1 AND NOT `${CdcNormalize.DeletedCol}`""".stripMargin
+          catalog, view, tfs, m.payload, storage(m.payload), entries) { scan =>
+        val (from, rank) =
+          if (!m.folded) (scan, "")
+          else (s"SELECT *, row_number() OVER (PARTITION BY $pks ORDER BY $ord) AS __rn " +
+            s"FROM ($scan)", "__rn = 1 AND ")
+        s"SELECT $cols FROM ($from) WHERE ${rank}NOT `${CdcNormalize.DeletedCol}`"
       })
     }
   }
 
-  /** One bucket-partitioned write job into `dataDir`. */
+  /** One bucket-partitioned write job into `dataDir`; the bucket column
+    * lives in the dir name. */
   private def writeBucketed(df: DataFrame, dataDir: String): Unit =
     df.withColumn("__bucket", bucketCol)
       .write.mode("overwrite").partitionBy("__bucket")
       .parquet(tfs.str(dataDir))
 
-  /** Bucket dirs actually produced by a write (a bucket with no rows
-    * produces none). */
-  private def listWritten(dataDir: String): Map[Int, String] =
+  /** Bucket dirs actually produced by a write, as one-dir chains (a
+    * bucket with no rows produces none). */
+  private def listWritten(dataDir: String): Map[Int, Seq[String]] =
     tfs.listSubdirNames(dataDir)
       .filter(_.startsWith(BucketDirPrefix))
       .map(name => name.stripPrefix(BucketDirPrefix).toInt ->
-        s"$dataDir/$name")
+        Seq(s"$dataDir/$name"))
       .toMap
 
   // -------------------------------------------------------------- cleaner
 
-  /** Same retention rule as the bucketed sink: keep the newest
-    * `retainSnapshots` manifests plus every commit dir any of them
-    * references. */
+  /** Retain the newest `retainSnapshots` manifests and every commit dir
+    * any of them references; delete the rest. Runs only after the
+    * pointer swap and never fails a published commit. */
   private def clean(): Unit = {
-    val numeric = "snap-(\\d+)".r
-    val snaps = tfs.listSubdirNames("")
-      .flatMap {
-        case name @ numeric(n) => Some(name -> n.toLong)
-        case _                 => None
-      }
-      .sortBy(_._2).map(_._1)
+    val snaps = Snapshots.listed(tfs)
     val (drop, keep) = snaps.splitAt(math.max(0, snaps.length - retainSnapshots))
     val referenced: Set[String] = keep.flatMap { snap =>
       scala.util.Try(readManifest(snap)).toOption.toSeq

@@ -15,12 +15,13 @@ import org.apache.spark.sql.functions._
   * Write side (6 commits):
   *  - COW ([[KeyedUpsertTable]]): every commit rewrites the whole table
   *    — cost O(table), the reference's own choice at small scale.
-  *  - Bucketed ([[BucketedUpsertTable]]): rewrites touched buckets; a
-  *    hash-spread 1k-key batch touches ~every bucket, so at THIS batch
-  *    shape it degenerates to ~COW (its regime is batch keys ≪ buckets).
-  *  - MOR ([[MorUpsertTable]]): appends O(batch) delta files; inline
-  *    compaction (included in the timing) amortizes the rewrite over
-  *    `compactAfter` commits.
+  *  - Bucketed ([[BucketedUpsertTable]], the bucketed sink at
+  *    `compactAfter = 1`): rewrites touched buckets; a hash-spread
+  *    1k-key batch touches ~every bucket, so at THIS batch shape it
+  *    degenerates to ~COW (its regime is batch keys ≪ buckets).
+  *  - MOR ([[MorUpsertTable]], `compactAfter > 1`): appends O(batch)
+  *    delta files; inline compaction (included in the timing) amortizes
+  *    the rewrite over `compactAfter` commits.
   *
   * Read side (MOR's other half of the trade — write-cheap is paid for
   * read-costly): a full-scan aggregate of each sink's `read()` after

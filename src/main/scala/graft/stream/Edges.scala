@@ -66,9 +66,9 @@ object Edges {
     case "bucketed" => (root, t, cat) =>
       new BucketedUpsertTable(spark, root, t.pkCols, nBuckets = cfg.nBuckets,
         catalogTable = cat)
-    case "mor" => (root, t, _) =>
+    case "mor" => (root, t, cat) =>
       new MorUpsertTable(spark, root, t.pkCols, nBuckets = cfg.nBuckets,
-        compactAfter = cfg.compactAfter)
+        compactAfter = cfg.compactAfter, catalogTable = cat)
     case "hudi" => (root, t, cat) =>
       new HudiUpsertSink(spark, root, t.pkCols,
         precombine = CdcNormalize.MtimeCol, tableName = t.tableName,
