@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.util.StagedSwap
+import graft.util.EpochIndex
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * O(batch) append. The house epoch-keyed index discipline
   * ([[IncrementalLineDedup]] et al.): per-epoch partitions, idempotent
   * replays (an epoch overwrites its own partition dirs), crash-safe
-  * [[StagedSwap]] compaction, and the single-ingest contract (a doc_id
+  * [[EpochIndex]] compaction, and the single-ingest contract (a doc_id
   * belongs to exactly ONE epoch — re-ingesting under two epochs would
   * double its tf/df/length contributions).
   *
@@ -64,74 +64,59 @@ object IncrementalBm25 {
     docs.agg(count(lit(1)).as("n_docs"),
       sum(TextStats.nWords(col(textCol)).cast("long")).as("total_tokens"))
 
+  private def bucketing(buckets: Int) =
+    if (buckets <= 0) None else Some(BucketCol -> bucketOf(col("term"), buckets))
+
   private def writeEpoch(docs: DataFrame, idCol: String, textCol: String,
-                         path: String, epoch: String, buckets: Int): Unit = {
-    val p = postingsOf(docs, idCol, textCol)
+                         ix: EpochIndex, epoch: String, buckets: Int): Unit = {
     // cluster by bucket before the partitionBy write (guide §6: without
     // it every task emits a file per touched bucket dir — tasks × buckets
     // tiny files per epoch, paid back as listing/open cost on every probe)
-    val wtr =
-      (if (buckets <= 0) p
-       else p.withColumn(BucketCol, bucketOf(col("term"), buckets))
-        .repartition(col(BucketCol)))
-        .write.mode("overwrite")
-    (if (buckets <= 0) wtr else wtr.partitionBy(BucketCol))
-      .parquet(s"$path/postings/__epoch=$epoch")
+    EpochIndex.write(postingsOf(docs, idCol, textCol),
+      ix.dir("postings", epoch), bucketing(buckets), cluster = true)
     statsOf(docs, textCol).coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/stats/__epoch=$epoch")
+      .parquet(ix.dir("stats", epoch))
   }
 
-  private def swapFor(spark: SparkSession, path: String) =
-    new StagedSwap(spark, path, sentinel = "meta",
-      others = Seq("postings", "stats"))
+  private def index(spark: SparkSession, path: String) =
+    new EpochIndex(spark, path, "postings", "stats")
 
   /** Build the index from the base corpus. */
   def writeIndex(docs: DataFrame, idCol: String, textCol: String,
                  path: String, termBuckets: Int = 0): Unit = {
     val spark = docs.sparkSession
-    writeEpoch(docs, idCol, textCol, path, "base", termBuckets)
+    val ix = index(spark, path)
+    writeEpoch(docs, idCol, textCol, ix, "base", termBuckets)
     import spark.implicits._
-    Seq(termBuckets).toDF("term_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    ix.writeMeta(Seq(termBuckets).toDF("term_buckets"))
   }
 
   /** Fold a shard in under the named epoch — O(batch) writes,
     * idempotent per epoch. */
   def appendToIndex(newDocs: DataFrame, idCol: String, textCol: String,
                     path: String, epoch: String): Unit = {
-    require(epoch.nonEmpty && epoch != "base" && !epoch.contains('/'),
-      s"epoch must be a non-'base', path-safe name, got '$epoch'")
-    val spark = newDocs.sparkSession
-    swapFor(spark, path).recover()
-    val buckets = spark.read.parquet(s"$path/meta")
-      .head().getAs[Int]("term_buckets")
-    writeEpoch(newDocs, idCol, textCol, path, epoch, buckets)
+    val ix = index(newDocs.sparkSession, path)
+    val buckets = ix.metaForAppend(epoch).getAs[Int]("term_buckets")
+    writeEpoch(newDocs, idCol, textCol, ix, epoch, buckets)
   }
 
   /** Fold every epoch into a single `base` — postings need no
     * re-aggregation (single-ingest: a (term, doc) pair exists in exactly
     * one epoch), stats fold to one row; crash-safe staged swap. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val swap = swapFor(spark, path)
-    swap.recover()
-    val meta = spark.read.parquet(s"$path/meta")
-    val buckets = meta.head().getAs[Int]("term_buckets")
-    val folded = spark.read.parquet(s"$path/postings")
-      .select("term", "doc_id", "tf", "dl")
-    val wtr =
-      (if (buckets <= 0) folded
-       else folded.withColumn(BucketCol, bucketOf(col("term"), buckets)))
-        .write.mode("overwrite")
-    (if (buckets <= 0) wtr else wtr.partitionBy(BucketCol))
-      .parquet(s"${swap.stagedDir("postings")}/__epoch=base")
-    spark.read.parquet(s"$path/stats")
-      .agg(sum("n_docs").as("n_docs"),
-        sum("total_tokens").as("total_tokens"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"${swap.stagedDir("stats")}/__epoch=base")
-    meta.coalesce(1).write.mode("overwrite")
-      .parquet(swap.stagedDir("meta"))
-    swap.swap()
+  def compact(spark: SparkSession, path: String): Unit =
+    compactImpl(spark, path, Int.MaxValue)
+
+  private[graft] def compactImpl(spark: SparkSession, path: String,
+                                 crashAtRename: Int): Unit = {
+    val ix = index(spark, path)
+    val buckets = ix.meta().getAs[Int]("term_buckets")
+    ix.compact(crashAtRename) {
+      case ("postings", t, dir) => EpochIndex.write(
+        t.select("term", "doc_id", "tf", "dl"), dir, bucketing(buckets))
+      case (_, t, dir) => t.agg(sum("n_docs").as("n_docs"),
+          sum("total_tokens").as("total_tokens"))
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+    }
   }
 
   /** Top-k BM25 over the indexed corpus: [[Bm25]]'s integer kernel
@@ -140,33 +125,16 @@ object IncrementalBm25 {
   def search(spark: SparkSession, path: String, queryTerms: Seq[String],
              k: Int, excludeEpochs: Seq[String] = Nil): DataFrame = {
     require(queryTerms.nonEmpty && k >= 1, "need query terms and positive k")
-    swapFor(spark, path).recover()
-    val buckets = spark.read.parquet(s"$path/meta")
-      .head().getAs[Int]("term_buckets")
-
-    val idx0 = spark.read.parquet(s"$path/postings")
-    val idx1 =
-      if (excludeEpochs.isEmpty) idx0
-      else idx0.where(!col("__epoch").isin(excludeEpochs: _*))
-    val probed0 =
-      if (buckets <= 0) idx1
-      else {
-        // bounded planning collect: ≤ |Q| ints, computed through the
-        // SAME Spark expression that bucketed the writes
-        import spark.implicits._
-        val qb = queryTerms.toDF("term")
-          .select(bucketOf(col("term"), buckets).as("b"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        idx1.where(col(BucketCol).isin(qb: _*))
-      }
-    val probed = probed0.where(col("term").isin(queryTerms: _*))
+    val ix = index(spark, path)
+    val buckets = ix.meta().getAs[Int]("term_buckets")
+    // bounded planning collect: ≤ |Q| ints, computed through the SAME
+    // Spark expression that bucketed the writes
+    import spark.implicits._
+    val probed = EpochIndex.inBuckets(ix.read("postings", excludeEpochs),
+        queryTerms.toDF("term"), bucketing(buckets))
+      .where(col("term").isin(queryTerms: _*))
       .select("term", "doc_id", "tf", "dl")
-
-    val stats0 = spark.read.parquet(s"$path/stats")
-    val stats1 =
-      if (excludeEpochs.isEmpty) stats0
-      else stats0.where(!col("__epoch").isin(excludeEpochs: _*))
-    val stats = stats1.agg(sum("n_docs").as("n_docs"),
+    val stats = ix.read("stats", excludeEpochs).agg(sum("n_docs").as("n_docs"),
       sum("total_tokens").as("total_tokens"))
 
     val dfreq = probed.groupBy("term").agg(count(lit(1)).as("df"))

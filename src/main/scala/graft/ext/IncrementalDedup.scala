@@ -1,5 +1,7 @@
 package graft.ext
 
+import graft.util.EpochIndex
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -69,11 +71,12 @@ object IncrementalDedup {
                  maxDf: Long = Long.MaxValue,
                  shingleBuckets: Int = 0): Unit = {
     val spark = docs.sparkSession
-    writeEpoch(docs, idCol, textCol, path, n, epoch = "base",
+    val ix = index(spark, path)
+    writeEpoch(docs, idCol, textCol, ix, n, epoch = "base",
       shingleBuckets = shingleBuckets)
     import spark.implicits._
-    Seq((n, maxDf, shingleBuckets)).toDF("n", "max_df", "shingle_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    ix.writeMeta(Seq((n, maxDf, shingleBuckets))
+      .toDF("n", "max_df", "shingle_buckets"))
   }
 
   /** Fold a (verified) batch into the index: write its postings and df
@@ -85,25 +88,24 @@ object IncrementalDedup {
     * must be disjoint from every id already indexed. */
   def appendToIndex(newDocs: DataFrame, idCol: String, textCol: String,
                     path: String, epoch: String): Unit = {
-    require(epoch.nonEmpty && epoch != "base" && !epoch.contains('/'),
-      s"epoch must be a non-'base', path-safe name, got '$epoch'")
-    val spark = newDocs.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val ix = index(newDocs.sparkSession, path)
+    val meta = ix.metaForAppend(epoch)
     // every epoch must share the base layout, or partition discovery
-    // over the epoch dirs breaks (mixed directory depths)
-    writeEpoch(newDocs, idCol, textCol, path, meta.getAs[Int]("n"), epoch,
-      shingleBuckets = metaShingleBuckets(meta))
+    // over the epoch dirs breaks (mixed directory depths); indexes that
+    // predate bucketing have no `shingle_buckets` (layout 0 = flat)
+    writeEpoch(newDocs, idCol, textCol, ix, meta.getAs[Int]("n"), epoch,
+      shingleBuckets = EpochIndex.intOr0(meta, "shingle_buckets"))
   }
 
-  /** `shingle_buckets` from a meta row, tolerating pre-bucketing
-    * indexes whose meta lacks the column (layout 0 = flat). */
-  private def metaShingleBuckets(meta: org.apache.spark.sql.Row): Int =
-    if (meta.schema.fieldNames.contains("shingle_buckets"))
-      meta.getAs[Int]("shingle_buckets")
-    else 0
+  private def index(spark: SparkSession, path: String) =
+    new EpochIndex(spark, path, "shingles", "df")
+
+  private def bucketing(shingleBuckets: Int) =
+    if (shingleBuckets <= 0) None
+    else Some(BucketCol -> pmod(hash(col("shingle")), lit(shingleBuckets)))
 
   private def writeEpoch(docs: DataFrame, idCol: String, textCol: String,
-                         path: String, n: Int, epoch: String,
+                         ix: EpochIndex, n: Int, epoch: String,
                          shingleBuckets: Int): Unit = {
     val sh = Dedup.shingles(docs, idCol, textCol, n)
     // Bucketed layout: CLUSTER by the bucket before the partitionBy
@@ -113,19 +115,10 @@ object IncrementalDedup {
     // listing + per-file open cost on each of its postings/df scans.
     // One shuffle on the bucket at build/append time buys one file per
     // (epoch, bucket).
-    def bucketed(df: DataFrame): (DataFrame, Seq[String]) =
-      if (shingleBuckets <= 0) (df, Nil)
-      else (df.withColumn(BucketCol,
-          pmod(hash(col("shingle")), lit(shingleBuckets)))
-        .repartition(col(BucketCol)), Seq(BucketCol))
-    val (posts, pCols) = bucketed(sh.select(col(idCol).as("doc_id"), col("shingle")))
-    val pw = posts.write.mode("overwrite")
-    (if (pCols.isEmpty) pw else pw.partitionBy(pCols: _*))
-      .parquet(s"$path/shingles/__epoch=$epoch")
-    val (dfs, dCols) = bucketed(sh.groupBy("shingle").agg(count(lit(1)).as("df")))
-    val dw = dfs.write.mode("overwrite")
-    (if (dCols.isEmpty) dw else dw.partitionBy(dCols: _*))
-      .parquet(s"$path/df/__epoch=$epoch")
+    EpochIndex.write(sh.select(col(idCol).as("doc_id"), col("shingle")),
+      ix.dir("shingles", epoch), bucketing(shingleBuckets), cluster = true)
+    EpochIndex.write(sh.groupBy("shingle").agg(count(lit(1)).as("df")),
+      ix.dir("df", epoch), bucketing(shingleBuckets), cluster = true)
   }
 
   /** All near-dup pairs (Jaccard >= threshold under the COMBINED-corpus
@@ -147,15 +140,13 @@ object IncrementalDedup {
                    idCol: String, textCol: String,
                    threshold: Double = 0.5,
                    excludeEpochs: Seq[String] = Nil): DataFrame = {
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val ix = index(spark, path)
+    val meta = ix.meta()
     val n = meta.getAs[Int]("n")
     val maxDf = meta.getAs[Long]("max_df")
-    val buckets = metaShingleBuckets(meta)
-    def dropExcluded(t: DataFrame): DataFrame =
-      if (excludeEpochs.isEmpty) t
-      else t.where(!col("__epoch").isin(excludeEpochs: _*))
-    val postings = dropExcluded(spark.read.parquet(s"$path/shingles"))
-    val dfTable = dropExcluded(spark.read.parquet(s"$path/df"))
+    val buckets = EpochIndex.intOr0(meta, "shingle_buckets")
+    val postings = ix.read("shingles", excludeEpochs)
+    val dfTable = ix.read("df", excludeEpochs)
 
     // STAGED (guide §2.4 — second consumer of an unmaterialized subtree
     // = hidden recompute): the batch shingle stream feeds the bucket

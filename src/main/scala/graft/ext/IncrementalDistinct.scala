@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.util.StagedSwap
+import graft.util.EpochIndex
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -27,57 +27,51 @@ import org.apache.spark.sql.functions._
   * Index layout ([[IncrementalLineDedup]]'s epoch discipline):
   * `sketches/__epoch=<e>/` rows (group, sketch), `meta/` pins lgK so
   * every epoch sketches at the same precision (unions of mixed-lgK
-  * sketches degrade to the coarser one); [[StagedSwap]] crash safety
+  * sketches degrade to the coarser one); [[EpochIndex]] crash safety
   * on compaction.
   */
 object IncrementalDistinct {
 
-  private def swapFor(spark: SparkSession, path: String) =
-    new StagedSwap(spark, path, sentinel = "meta", others = Seq("sketches"))
+  private def index(spark: SparkSession, path: String) =
+    new EpochIndex(spark, path, "sketches")
 
   /** Build the sketch store from the existing corpus. */
   def writeIndex(df: DataFrame, groupCol: String, valueCol: String,
                  path: String, lgK: Int = 12): Unit = {
     require(lgK >= 4 && lgK <= 21, s"lgK out of DataSketches range: $lgK")
     val spark = df.sparkSession
-    writeEpoch(df, groupCol, valueCol, path, "base", lgK)
+    val ix = index(spark, path)
+    writeEpoch(df, groupCol, valueCol, ix, "base", lgK)
     import spark.implicits._
-    Seq(lgK).toDF("lg_k")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    ix.writeMeta(Seq(lgK).toDF("lg_k"))
   }
 
   /** Fold a batch's sketches in under the named epoch — O(batch) scan,
     * constant-size state, idempotent per epoch. */
   def appendToIndex(newDf: DataFrame, groupCol: String, valueCol: String,
                     path: String, epoch: String): Unit = {
-    require(epoch.nonEmpty && epoch != "base" && !epoch.contains('/'),
-      s"epoch must be a non-'base', path-safe name, got '$epoch'")
-    val spark = newDf.sparkSession
-    swapFor(spark, path).recover()
-    val lgK = spark.read.parquet(s"$path/meta").head().getAs[Int]("lg_k")
-    writeEpoch(newDf, groupCol, valueCol, path, epoch, lgK)
+    val ix = index(newDf.sparkSession, path)
+    val lgK = ix.metaForAppend(epoch).getAs[Int]("lg_k")
+    writeEpoch(newDf, groupCol, valueCol, ix, epoch, lgK)
   }
 
   private def writeEpoch(df: DataFrame, groupCol: String, valueCol: String,
-                         path: String, epoch: String, lgK: Int): Unit =
+                         ix: EpochIndex, epoch: String, lgK: Int): Unit =
     df.groupBy(col(groupCol).as("group"))
       .agg(hll_sketch_agg(col(valueCol), lit(lgK)).as("sketch"))
-      .write.mode("overwrite").parquet(s"$path/sketches/__epoch=$epoch")
+      .write.mode("overwrite").parquet(ix.dir("sketches", epoch))
 
   /** Fold every epoch into a single `base` (union is associative and
     * idempotent — the sketch monoid). */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val swap = swapFor(spark, path)
-    swap.recover()
-    val meta = spark.read.parquet(s"$path/meta")
-    spark.read.parquet(s"$path/sketches")
-      .groupBy("group").agg(hll_union_agg(col("sketch")).as("sketch"))
-      .write.mode("overwrite")
-      .parquet(s"${swap.stagedDir("sketches")}/__epoch=base")
-    meta.coalesce(1).write.mode("overwrite")
-      .parquet(swap.stagedDir("meta"))
-    swap.swap()
-  }
+  def compact(spark: SparkSession, path: String): Unit =
+    compactImpl(spark, path, Int.MaxValue)
+
+  private[graft] def compactImpl(spark: SparkSession, path: String,
+                                 crashAtRename: Int): Unit =
+    index(spark, path).compact(crashAtRename) { (_, t, dir) =>
+      t.groupBy("group").agg(hll_union_agg(col("sketch")).as("sketch"))
+        .write.mode("overwrite").parquet(dir)
+    }
 
   /** Per-group distinct estimate over `indexed ∪ batch`: the batch is
     * sketched in one pass (its only scan), then unioned with the
@@ -88,13 +82,10 @@ object IncrementalDistinct {
   def estimate(spark: SparkSession, path: String, batch: DataFrame,
                groupCol: String, valueCol: String,
                excludeEpochs: Seq[String] = Nil): DataFrame = {
-    swapFor(spark, path).recover()
-    val lgK = spark.read.parquet(s"$path/meta").head().getAs[Int]("lg_k")
-    val stored0 = spark.read.parquet(s"$path/sketches")
-    val stored =
-      (if (excludeEpochs.isEmpty) stored0
-       else stored0.where(!col("__epoch").isin(excludeEpochs: _*)))
-        .select(col("group"), col("sketch"))
+    val ix = index(spark, path)
+    val lgK = ix.meta().getAs[Int]("lg_k")
+    val stored = ix.read("sketches", excludeEpochs)
+      .select(col("group"), col("sketch"))
     val fresh = batch.groupBy(col(groupCol).as("group"))
       .agg(hll_sketch_agg(col(valueCol), lit(lgK)).as("sketch"))
     stored.unionByName(fresh)

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.util.StagedSwap
+import graft.util.EpochIndex
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -40,11 +40,13 @@ object IncrementalDomainCap {
 
   private val BucketCol = "__db"
 
-  private def bucketed(df: DataFrame, buckets: Int): (DataFrame, Seq[String]) =
-    if (buckets <= 0) (df, Nil)
-    else (df.withColumn(BucketCol,
-      pmod(xxhash64(col("domain")), lit(buckets.toLong)).cast("int")),
-      Seq(BucketCol))
+  private def bucketing(buckets: Int) =
+    if (buckets <= 0) None
+    else Some(BucketCol ->
+      pmod(xxhash64(col("domain")), lit(buckets.toLong)).cast("int"))
+
+  private def index(spark: SparkSession, path: String) =
+    new EpochIndex(spark, path, "counts")
 
   /** Build the index at `path` from the existing corpus:
     * `counts/__epoch=base/` (domain, n_kept) with first-come admission
@@ -54,44 +56,24 @@ object IncrementalDomainCap {
                  path: String, cap: Int, buckets: Int = 0): Unit = {
     require(cap > 0, s"cap must be positive, got $cap")
     val spark = docs.sparkSession
+    val ix = index(spark, path)
     val counts = docs.select(col(domainCol).as("domain"))
       .groupBy("domain")
       .agg(least(count(lit(1)), lit(cap.toLong)).as("n_kept"))
-    val (out, pCols) = bucketed(counts, buckets)
-    val wtr = out.write.mode("overwrite")
-    (if (pCols.isEmpty) wtr else wtr.partitionBy(pCols: _*))
-      .parquet(s"$path/counts/__epoch=base")
+    EpochIndex.write(counts, ix.dir("counts", "base"), bucketing(buckets))
     import spark.implicits._
-    Seq((cap, buckets)).toDF("cap", "buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    ix.writeMeta(Seq((cap, buckets)).toDF("cap", "buckets"))
   }
-
-  private def swapFor(spark: SparkSession, path: String) =
-    new StagedSwap(spark, path, sentinel = "meta", others = Seq("counts"))
 
   /** Per-domain admitted counts BEFORE this shard: every epoch except
     * `excludeEpochs`, partition-pruned to the shard's domain buckets,
     * semi-joined to the shard's (broadcast) distinct domains. */
-  private def priorCounts(spark: SparkSession, path: String,
-                          domains: DataFrame, buckets: Int,
-                          excludeEpochs: Seq[String]): DataFrame = {
-    val idx0 = spark.read.parquet(s"$path/counts")
-    val idx1 =
-      if (excludeEpochs.isEmpty) idx0
-      else idx0.where(!col("__epoch").isin(excludeEpochs: _*))
-    val idxPruned =
-      if (buckets <= 0) idx1
-      else {
-        val bs = domains
-          .select(pmod(xxhash64(col("domain")), lit(buckets.toLong))
-            .cast("int").as(BucketCol))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        idx1.where(col(BucketCol).isin(bs: _*))
-      }
-    idxPruned
+  private def priorCounts(ix: EpochIndex, domains: DataFrame, buckets: Int,
+                          excludeEpochs: Seq[String]): DataFrame =
+    EpochIndex.inBuckets(ix.read("counts", excludeEpochs), domains,
+        bucketing(buckets))
       .join(broadcast(domains), Seq("domain"), "left_semi")
       .groupBy("domain").agg(sum("n_kept").as("n_old"))
-  }
 
   /** Admission decisions for the NEW shard: one row per shard document,
     * (id, domain, admitted 0/1), admitted iff
@@ -101,12 +83,12 @@ object IncrementalDomainCap {
   def admit(spark: SparkSession, path: String, newDocs: DataFrame,
             idCol: String, domainCol: String,
             excludeEpochs: Seq[String] = Nil): DataFrame = {
-    swapFor(spark, path).recover()
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val ix = index(spark, path)
+    val meta = ix.meta()
     val cap = meta.getAs[Int]("cap")
     val buckets = meta.getAs[Int]("buckets")
     val shard = newDocs.select(col(idCol).as("id"), col(domainCol).as("domain"))
-    val nOld = priorCounts(spark, path, shard.select("domain").distinct(),
+    val nOld = priorCounts(ix, shard.select("domain").distinct(),
       buckets, excludeEpochs)
     val w = Window.partitionBy(col("domain")).orderBy(col("id"))
     shard
@@ -124,16 +106,13 @@ object IncrementalDomainCap {
     * overwrites identical rows. */
   def appendToIndex(newDocs: DataFrame, idCol: String, domainCol: String,
                     path: String, epoch: String): Unit = {
-    require(epoch.nonEmpty && epoch != "base" && !epoch.contains('/'),
-      s"epoch must be a non-'base', path-safe name, got '$epoch'")
-    val spark = newDocs.sparkSession
-    swapFor(spark, path).recover()
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val ix = index(newDocs.sparkSession, path)
+    val meta = ix.metaForAppend(epoch)
     val cap = meta.getAs[Int]("cap")
     val buckets = meta.getAs[Int]("buckets")
     val shardCounts = newDocs.select(col(domainCol).as("domain"))
       .groupBy("domain").agg(count(lit(1)).as("n_batch"))
-    val nOld = priorCounts(spark, path, shardCounts.select("domain"),
+    val nOld = priorCounts(ix, shardCounts.select("domain"),
       buckets, excludeEpochs = Seq(epoch))
     val admittedCounts = shardCounts
       .join(broadcast(nOld), Seq("domain"), "left")
@@ -141,29 +120,23 @@ object IncrementalDomainCap {
         greatest(lit(0L), least(lit(cap.toLong) - coalesce(col("n_old"), lit(0L)),
           col("n_batch"))).as("n_kept"))
       .where(col("n_kept") > 0)
-    val (out, pCols) = bucketed(admittedCounts, buckets)
-    val wtr = out.write.mode("overwrite")
-    (if (pCols.isEmpty) wtr else wtr.partitionBy(pCols: _*))
-      .parquet(s"$path/counts/__epoch=$epoch")
+    EpochIndex.write(admittedCounts, ix.dir("counts", epoch), bucketing(buckets))
   }
 
   /** Fold every epoch into a single `base` (`n_kept` sums are exact
     * under the single-ingest contract and never exceed the cap by the
-    * budget arithmetic) — same crash-safe [[StagedSwap]] discipline and
+    * budget arithmetic) — same crash-safe [[EpochIndex]] discipline and
     * quiescent-stream rule as [[IncrementalLineDedup.compact]]. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val swap = swapFor(spark, path)
-    swap.recover()
-    val meta = spark.read.parquet(s"$path/meta")
-    val buckets = meta.head().getAs[Int]("buckets")
-    val folded = spark.read.parquet(s"$path/counts")
-      .groupBy("domain").agg(sum("n_kept").as("n_kept"))
-    val (out, pCols) = bucketed(folded, buckets)
-    val wtr = out.write.mode("overwrite")
-    (if (pCols.isEmpty) wtr else wtr.partitionBy(pCols: _*))
-      .parquet(s"${swap.stagedDir("counts")}/__epoch=base")
-    meta.coalesce(1).write.mode("overwrite")
-      .parquet(swap.stagedDir("meta"))
-    swap.swap()
+  def compact(spark: SparkSession, path: String): Unit =
+    compactImpl(spark, path, Int.MaxValue)
+
+  private[graft] def compactImpl(spark: SparkSession, path: String,
+                                 crashAtRename: Int): Unit = {
+    val ix = index(spark, path)
+    val buckets = ix.meta().getAs[Int]("buckets")
+    ix.compact(crashAtRename) { (_, t, dir) =>
+      EpochIndex.write(t.groupBy("domain").agg(sum("n_kept").as("n_kept")),
+        dir, bucketing(buckets))
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.util.StagedSwap
+import graft.util.EpochIndex
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * occupy; `meta/` pins (mask_bits, min_size, max_size, buckets) so
   * every epoch chunks with identical boundaries (mixing parameters
   * would make equal bytes produce different digests). All directory
-  * mutations ride the crash-safe [[StagedSwap]] seam.
+  * mutations ride the crash-safe [[EpochIndex]] seam.
   *
   * Contract (`mm_cdc_incremental_check` proves it): a batch chunk is
   * DUP iff its digest exists in the store; within-batch repeats are
@@ -39,11 +39,11 @@ object IncrementalGearChunk {
 
   private val BucketCol = "__cb"
 
-  private def bucket(c: org.apache.spark.sql.Column, buckets: Int) =
-    pmod(xxhash64(c), lit(buckets.toLong)).cast("int")
+  private def bucketing(buckets: Int) = Some(BucketCol ->
+    pmod(xxhash64(col("chunk_sha256")), lit(buckets.toLong)).cast("int"))
 
-  private def swapFor(spark: SparkSession, path: String) =
-    new StagedSwap(spark, path, sentinel = "meta", others = Seq("chunks"))
+  private def index(spark: SparkSession, path: String) =
+    new EpochIndex(spark, path, "chunks")
 
   /** Build the store at `path` from the existing corpus. */
   def writeIndex(blobs: DataFrame, idCol: String, blobCol: String,
@@ -51,53 +51,47 @@ object IncrementalGearChunk {
                  maxSize: Int = 256, buckets: Int = 16): Unit = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     val spark = blobs.sparkSession
-    writeEpoch(blobs, idCol, blobCol, path, "base",
+    val ix = index(spark, path)
+    writeEpoch(blobs, idCol, blobCol, ix, "base",
       maskBits, minSize, maxSize, buckets)
     import spark.implicits._
-    Seq((maskBits, minSize, maxSize, buckets))
-      .toDF("mask_bits", "min_size", "max_size", "buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    ix.writeMeta(Seq((maskBits, minSize, maxSize, buckets))
+      .toDF("mask_bits", "min_size", "max_size", "buckets"))
   }
 
   /** Fold a batch's chunk digests in under the named epoch — O(batch)
     * writes, idempotent per epoch (replay overwrites its own dirs). */
   def appendToIndex(newBlobs: DataFrame, idCol: String, blobCol: String,
                     path: String, epoch: String): Unit = {
-    require(epoch.nonEmpty && epoch != "base" && !epoch.contains('/'),
-      s"epoch must be a non-'base', path-safe name, got '$epoch'")
-    val spark = newBlobs.sparkSession
-    swapFor(spark, path).recover()
-    val m = spark.read.parquet(s"$path/meta").head()
-    writeEpoch(newBlobs, idCol, blobCol, path, epoch,
+    val ix = index(newBlobs.sparkSession, path)
+    val m = ix.metaForAppend(epoch)
+    writeEpoch(newBlobs, idCol, blobCol, ix, epoch,
       m.getAs[Int]("mask_bits"), m.getAs[Int]("min_size"),
       m.getAs[Int]("max_size"), m.getAs[Int]("buckets"))
   }
 
   private def writeEpoch(blobs: DataFrame, idCol: String, blobCol: String,
-                         path: String, epoch: String, maskBits: Int,
+                         ix: EpochIndex, epoch: String, maskBits: Int,
                          minSize: Int, maxSize: Int, buckets: Int): Unit =
-    GearChunk.chunks(blobs, idCol, blobCol, maskBits, minSize, maxSize)
-      .groupBy("chunk_sha256")
-      .agg(max("chunk_bytes").as("chunk_bytes"), count(lit(1)).as("refs"))
-      .withColumn(BucketCol, bucket(col("chunk_sha256"), buckets))
-      .write.mode("overwrite").partitionBy(BucketCol)
-      .parquet(s"$path/chunks/__epoch=$epoch")
+    EpochIndex.write(
+      GearChunk.chunks(blobs, idCol, blobCol, maskBits, minSize, maxSize)
+        .groupBy("chunk_sha256")
+        .agg(max("chunk_bytes").as("chunk_bytes"), count(lit(1)).as("refs")),
+      ix.dir("chunks", epoch), bucketing(buckets))
 
   /** Fold every epoch into a single `base` (refs is a monoid). */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val swap = swapFor(spark, path)
-    swap.recover()
-    val meta = spark.read.parquet(s"$path/meta")
-    val buckets = meta.head().getAs[Int]("buckets")
-    spark.read.parquet(s"$path/chunks")
-      .groupBy("chunk_sha256")
-      .agg(max("chunk_bytes").as("chunk_bytes"), sum("refs").as("refs"))
-      .withColumn(BucketCol, bucket(col("chunk_sha256"), buckets))
-      .write.mode("overwrite").partitionBy(BucketCol)
-      .parquet(s"${swap.stagedDir("chunks")}/__epoch=base")
-    meta.coalesce(1).write.mode("overwrite")
-      .parquet(swap.stagedDir("meta"))
-    swap.swap()
+  def compact(spark: SparkSession, path: String): Unit =
+    compactImpl(spark, path, Int.MaxValue)
+
+  private[graft] def compactImpl(spark: SparkSession, path: String,
+                                 crashAtRename: Int): Unit = {
+    val ix = index(spark, path)
+    val buckets = ix.meta().getAs[Int]("buckets")
+    ix.compact(crashAtRename) { (_, t, dir) =>
+      EpochIndex.write(t.groupBy("chunk_sha256")
+          .agg(max("chunk_bytes").as("chunk_bytes"), sum("refs").as("refs")),
+        dir, bucketing(buckets))
+    }
   }
 
   /** Per-blob dedup accounting for the arriving batch against the
@@ -113,8 +107,8 @@ object IncrementalGearChunk {
   def newBytes(spark: SparkSession, path: String, newBlobs: DataFrame,
                idCol: String, blobCol: String,
                excludeEpochs: Seq[String] = Nil): DataFrame = {
-    swapFor(spark, path).recover()
-    val m = spark.read.parquet(s"$path/meta").head()
+    val ix = index(spark, path)
+    val m = ix.meta()
     val buckets = m.getAs[Int]("buckets")
 
     val batch = GearChunk.chunks(newBlobs, idCol, blobCol,
@@ -124,16 +118,10 @@ object IncrementalGearChunk {
     try {
       val batchDigests = batch.select("chunk_sha256").distinct()
 
-      val idx0 = spark.read.parquet(s"$path/chunks")
-      val idx1 =
-        if (excludeEpochs.isEmpty) idx0
-        else idx0.where(!col("__epoch").isin(excludeEpochs: _*))
       // bounded planning collect: ≤ `buckets` ints prune the store scan
       // (also materializes the chunk cache for the two reads below)
-      val bs = batchDigests
-        .select(bucket(col("chunk_sha256"), buckets).as(BucketCol))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      val stored = idx1.where(col(BucketCol).isin(bs: _*))
+      val stored = EpochIndex.inBuckets(ix.read("chunks", excludeEpochs),
+          batchDigests, bucketing(buckets))
         .join(broadcast(batchDigests), Seq("chunk_sha256"), "left_semi")
         .select(col("chunk_sha256")).distinct()
         .withColumn("__dup", lit(true))

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.util.StagedSwap
+import graft.util.EpochIndex
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -37,6 +37,13 @@ object IncrementalLineDedup {
     if (lineW <= 0) LineDedup.lines(docs, idCol, textCol)
     else LineDedup.chunkLines(docs, idCol, textCol, lineW)
 
+  private def bucketing(buckets: Int) =
+    if (buckets <= 0) None
+    else Some(BucketCol -> pmod(col("fp1"), lit(buckets.toLong)).cast("int"))
+
+  private def index(spark: SparkSession, path: String) =
+    new EpochIndex(spark, path, "counts")
+
   /** Build the index at `path`:
     *  - `counts/__epoch=<e>/` (fp1, fp2, df, n_occ);
     *  - `meta/` (line_w, min_docs, line_buckets); `line_w` 0 = newline
@@ -46,11 +53,11 @@ object IncrementalLineDedup {
                  lineBuckets: Int = 0): Unit = {
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
     val spark = docs.sparkSession
-    writeEpoch(docs, idCol, textCol, path, lineW, "base", lineBuckets)
+    val ix = index(spark, path)
+    writeEpoch(docs, idCol, textCol, ix, lineW, "base", lineBuckets)
     import spark.implicits._
-    Seq((lineW, minDocs, lineBuckets))
-      .toDF("line_w", "min_docs", "line_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    ix.writeMeta(Seq((lineW, minDocs, lineBuckets))
+      .toDF("line_w", "min_docs", "line_buckets"))
   }
 
   /** Fold a shard's line frequencies in under the named epoch —
@@ -58,54 +65,35 @@ object IncrementalLineDedup {
     * its own partition dirs). */
   def appendToIndex(newDocs: DataFrame, idCol: String, textCol: String,
                     path: String, epoch: String): Unit = {
-    require(epoch.nonEmpty && epoch != "base" && !epoch.contains('/'),
-      s"epoch must be a non-'base', path-safe name, got '$epoch'")
-    val spark = newDocs.sparkSession
-    swapFor(spark, path).recover()
-    val meta = spark.read.parquet(s"$path/meta").head()
-    writeEpoch(newDocs, idCol, textCol, path, meta.getAs[Int]("line_w"),
+    val ix = index(newDocs.sparkSession, path)
+    val meta = ix.metaForAppend(epoch)
+    writeEpoch(newDocs, idCol, textCol, ix, meta.getAs[Int]("line_w"),
       epoch, meta.getAs[Int]("line_buckets"))
   }
 
   private def writeEpoch(docs: DataFrame, idCol: String, textCol: String,
-                         path: String, lineW: Int, epoch: String,
-                         buckets: Int): Unit = {
-    val counts = LineDedup.lineDf(
-      segment(docs, idCol, textCol, lineW), idCol)
-    val (out, pCols) =
-      if (buckets <= 0) (counts, Nil)
-      else (counts.withColumn(BucketCol,
-        pmod(col("fp1"), lit(buckets.toLong)).cast("int")), Seq(BucketCol))
-    val wtr = out.write.mode("overwrite")
-    (if (pCols.isEmpty) wtr else wtr.partitionBy(pCols: _*))
-      .parquet(s"$path/counts/__epoch=$epoch")
-  }
-
-  private def swapFor(spark: SparkSession, path: String) =
-    new StagedSwap(spark, path, sentinel = "meta", others = Seq("counts"))
+                         ix: EpochIndex, lineW: Int, epoch: String,
+                         buckets: Int): Unit =
+    EpochIndex.write(
+      LineDedup.lineDf(segment(docs, idCol, textCol, lineW), idCol),
+      ix.dir("counts", epoch), bucketing(buckets))
 
   /** Fold every epoch into a single `base` (df/n_occ are monoids under
-    * the single-ingest contract) — same crash-safe [[StagedSwap]]
+    * the single-ingest contract) — same crash-safe [[EpochIndex]]
     * discipline and quiescent-stream rule as
     * [[IncrementalSpanDedup.compact]]. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val swap = swapFor(spark, path)
-    swap.recover()
-    val meta = spark.read.parquet(s"$path/meta")
-    val buckets = meta.head().getAs[Int]("line_buckets")
-    val folded = spark.read.parquet(s"$path/counts")
-      .groupBy("fp1", "fp2")
-      .agg(sum("df").as("df"), sum("n_occ").as("n_occ"))
-    val (out, pCols) =
-      if (buckets <= 0) (folded, Nil)
-      else (folded.withColumn(BucketCol,
-        pmod(col("fp1"), lit(buckets.toLong)).cast("int")), Seq(BucketCol))
-    val wtr = out.write.mode("overwrite")
-    (if (pCols.isEmpty) wtr else wtr.partitionBy(pCols: _*))
-      .parquet(s"${swap.stagedDir("counts")}/__epoch=base")
-    meta.coalesce(1).write.mode("overwrite")
-      .parquet(swap.stagedDir("meta"))
-    swap.swap()
+  def compact(spark: SparkSession, path: String): Unit =
+    compactImpl(spark, path, Int.MaxValue)
+
+  private[graft] def compactImpl(spark: SparkSession, path: String,
+                                 crashAtRename: Int): Unit = {
+    val ix = index(spark, path)
+    val buckets = ix.meta().getAs[Int]("line_buckets")
+    ix.compact(crashAtRename) { (_, t, dir) =>
+      EpochIndex.write(t.groupBy("fp1", "fp2")
+          .agg(sum("df").as("df"), sum("n_occ").as("n_occ")),
+        dir, bucketing(buckets))
+    }
   }
 
   /** The NEW shard rewritten with boilerplate lines removed, judged
@@ -116,32 +104,19 @@ object IncrementalLineDedup {
   def dropBoilerplate(spark: SparkSession, path: String, newDocs: DataFrame,
                       idCol: String, textCol: String, sep: String = " ",
                       excludeEpochs: Seq[String] = Nil): DataFrame = {
-    swapFor(spark, path).recover()
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val ix = index(spark, path)
+    val meta = ix.meta()
     val lineW = meta.getAs[Int]("line_w")
     val minDocs = meta.getAs[Int]("min_docs")
     val buckets = meta.getAs[Int]("line_buckets")
-
-    val idx0 = spark.read.parquet(s"$path/counts")
-    val idx1 =
-      if (excludeEpochs.isEmpty) idx0
-      else idx0.where(!col("__epoch").isin(excludeEpochs: _*))
 
     val batchLines = LineDedup.fingerprinted(
       segment(newDocs, idCol, textCol, lineW))
     val batchDf = batchLines.groupBy("fp1", "fp2")
       .agg(count_distinct(col(idCol)).as("df_new"))
 
-    val idxPruned =
-      if (buckets <= 0) idx1
-      else {
-        val bs = batchDf
-          .select(pmod(col("fp1"), lit(buckets.toLong)).cast("int")
-            .as(BucketCol))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        idx1.where(col(BucketCol).isin(bs: _*))
-      }
-    val idxForBatch = idxPruned
+    val idxForBatch = EpochIndex.inBuckets(ix.read("counts", excludeEpochs),
+        batchDf, bucketing(buckets))
       .join(broadcast(batchDf.select("fp1", "fp2")), Seq("fp1", "fp2"),
         "left_semi")
       .groupBy("fp1", "fp2").agg(sum("df").as("df_old"))

@@ -1,5 +1,7 @@
 package graft.ext
 
+import graft.util.EpochIndex
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -65,12 +67,12 @@ object IncrementalMinHash {
                  bands: Int = 16, rows: Int = 4,
                  bucketPartitions: Int = 0): Unit = {
     val spark = docs.sparkSession
-    writeEpoch(docs, idCol, textCol, path, n, bands, rows, epoch = "base",
+    val ix = index(spark, path)
+    writeEpoch(docs, idCol, textCol, ix, n, bands, rows, epoch = "base",
       bucketPartitions = bucketPartitions)
     import spark.implicits._
-    Seq((n, bands, rows, bucketPartitions))
-      .toDF("n", "bands", "rows", "bucket_partitions")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    ix.writeMeta(Seq((n, bands, rows, bucketPartitions))
+      .toDF("n", "bands", "rows", "bucket_partitions"))
   }
 
   /** Fold a batch into the index under the named epoch — O(batch)
@@ -79,28 +81,24 @@ object IncrementalMinHash {
     * Batch ids must be disjoint from every id already indexed. */
   def appendToIndex(newDocs: DataFrame, idCol: String, textCol: String,
                     path: String, epoch: String): Unit = {
-    require(epoch.nonEmpty && epoch != "base" && !epoch.contains('/'),
-      s"epoch must be a non-'base', path-safe name, got '$epoch'")
-    val spark = newDocs.sparkSession
-    val m = spark.read.parquet(s"$path/meta").head()
-    // every epoch shares the base layout (mixed depths break discovery)
-    writeEpoch(newDocs, idCol, textCol, path, m.getAs[Int]("n"),
+    val ix = index(newDocs.sparkSession, path)
+    val m = ix.metaForAppend(epoch)
+    // every epoch shares the base layout (mixed depths break discovery);
+    // indexes that predate partitioning lack `bucket_partitions` (flat)
+    writeEpoch(newDocs, idCol, textCol, ix, m.getAs[Int]("n"),
       m.getAs[Int]("bands"), m.getAs[Int]("rows"), epoch,
-      bucketPartitions = metaBucketPartitions(m))
+      bucketPartitions = EpochIndex.intOr0(m, "bucket_partitions"))
   }
 
-  /** `bucket_partitions` from a meta row, tolerating pre-partitioning
-    * indexes whose meta lacks the column (layout 0 = flat). */
-  private def metaBucketPartitions(meta: org.apache.spark.sql.Row): Int =
-    if (meta.schema.fieldNames.contains("bucket_partitions"))
-      meta.getAs[Int]("bucket_partitions")
-    else 0
+  private def index(spark: SparkSession, path: String) =
+    new EpochIndex(spark, path, "buckets")
 
-  private def partitionOf(nParts: Int) =
-    pmod(hash(col("band"), col("bucket")), lit(nParts))
+  private def partitioning(nParts: Int) =
+    if (nParts <= 0) None
+    else Some(PartCol -> pmod(hash(col("band"), col("bucket")), lit(nParts)))
 
   private def writeEpoch(docs: DataFrame, idCol: String, textCol: String,
-                         path: String, n: Int, bands: Int, rows: Int,
+                         ix: EpochIndex, n: Int, bands: Int, rows: Int,
                          epoch: String, bucketPartitions: Int): Unit = {
     val sh = Dedup.shingles(docs, idCol, textCol, n)
     val sigs = Dedup.minhashSignatures(sh, idCol, bands * rows)
@@ -108,12 +106,8 @@ object IncrementalMinHash {
       .select(col(idCol).as("doc_id"), col("band"), col("bucket"))
     // clustered on the partition column before the write (guide §6 —
     // one file per (epoch, partition) instead of tasks × partitions)
-    val w =
-      if (bucketPartitions <= 0) posts.write
-      else posts.withColumn(PartCol, partitionOf(bucketPartitions))
-        .repartition(col(PartCol))
-        .write.partitionBy(PartCol)
-    w.mode("overwrite").parquet(s"$path/buckets/__epoch=$epoch")
+    EpochIndex.write(posts, ix.dir("buckets", epoch),
+      partitioning(bucketPartitions), cluster = true)
   }
 
   /** Near-dup pairs (exact uncapped Jaccard >= threshold) with at least
@@ -133,30 +127,22 @@ object IncrementalMinHash {
                    corpus: DataFrame, idCol: String, textCol: String,
                    threshold: Double = 0.5,
                    excludeEpochs: Seq[String] = Nil): DataFrame = {
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val ix = index(spark, path)
+    val meta = ix.meta()
     val n = meta.getAs[Int]("n")
     val bands = meta.getAs[Int]("bands")
     val rows = meta.getAs[Int]("rows")
-    val nParts = metaBucketPartitions(meta)
+    val nParts = EpochIndex.intOr0(meta, "bucket_partitions")
 
     val newSh = Dedup.shingles(newDocs, idCol, textCol, n)
     val newSigs = Dedup.minhashSignatures(newSh, idCol, bands * rows)
     val newBuckets = Dedup.minhashBuckets(newSigs, idCol, bands, rows)
 
-    val oldBuckets = {
-      val t0 = spark.read.parquet(s"$path/buckets")
-      val t = if (excludeEpochs.isEmpty) t0
-        else t0.where(!col("__epoch").isin(excludeEpochs: _*))
-      if (nParts <= 0) t
-      else {
-        // partitioned layout: prune the index scan to the batch's
-        // (band, bucket) partitions — a bounded ≤nParts-int planning
-        // collect, before any file IO
-        val bs = newBuckets.select(partitionOf(nParts).as(PartCol))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        t.where(col(PartCol).isin(bs: _*))
-      }
-    }
+    // partitioned layout: prune the index scan to the batch's
+    // (band, bucket) partitions — a bounded ≤nParts-int planning
+    // collect, before any file IO
+    val oldBuckets = EpochIndex.inBuckets(ix.read("buckets", excludeEpochs),
+      newBuckets, partitioning(nParts))
 
     // candidate generation — new-vs-indexed via the persisted buckets,
     // new-vs-new via in-batch banded LSH (the batch can carry internal

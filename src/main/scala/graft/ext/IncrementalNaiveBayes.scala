@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.util.StagedSwap
+import graft.util.EpochIndex
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -29,59 +29,54 @@ import org.apache.spark.sql.functions._
   * like a freshly-trained one. */
 object IncrementalNaiveBayes {
 
+  private def index(spark: SparkSession, path: String) =
+    new EpochIndex(spark, path, "tok")
+
   def writeIndex(docs: DataFrame, textCol: String, labelCol: String,
                  path: String): Unit = {
-    writeEpoch(docs, textCol, labelCol, path, "base")
     val spark = docs.sparkSession
+    val ix = index(spark, path)
+    writeEpoch(docs, textCol, labelCol, ix, "base")
     import spark.implicits._
-    Seq(1).toDF("n").coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/meta")
+    ix.writeMeta(Seq(1).toDF("n"))
   }
 
   /** O(batch) append, IDEMPOTENT per epoch (a replay overwrites its own
     * partition dir). */
   def appendToIndex(newDocs: DataFrame, textCol: String, labelCol: String,
                     path: String, epoch: String): Unit = {
-    require(epoch.nonEmpty && epoch != "base" && !epoch.contains('/'),
-      s"epoch must be a non-'base', path-safe name, got '$epoch'")
-    swapFor(newDocs.sparkSession, path).recover()
-    writeEpoch(newDocs, textCol, labelCol, path, epoch)
+    val ix = index(newDocs.sparkSession, path)
+    ix.openAppend(epoch)
+    writeEpoch(newDocs, textCol, labelCol, ix, epoch)
   }
 
   private def writeEpoch(docs: DataFrame, textCol: String, labelCol: String,
-                         path: String, epoch: String): Unit =
+                         ix: EpochIndex, epoch: String): Unit =
     NaiveBayes.train(docs, textCol, labelCol).tok
-      .write.mode("overwrite").parquet(s"$path/tok/__epoch=$epoch")
+      .write.mode("overwrite").parquet(ix.dir("tok", epoch))
 
-  private def swapFor(spark: SparkSession, path: String) =
-    new StagedSwap(spark, path, sentinel = "meta", others = Seq("tok"))
+  private def summed(tok: DataFrame): DataFrame =
+    tok.groupBy("tok").agg(sum("c_pos").as("c_pos"), sum("c_neg").as("c_neg"))
 
   /** Fold every epoch's count partials into a single `base` epoch
     * (staged + crash-safe ordered rename; results identical before and
     * after; quiet window only, checkpoint-committed epochs only). */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val swap = swapFor(spark, path)
-    swap.recover()
-    spark.read.parquet(s"$path/tok").groupBy("tok")
-      .agg(sum("c_pos").as("c_pos"), sum("c_neg").as("c_neg"))
-      .write.mode("overwrite")
-      .parquet(s"${swap.stagedDir("tok")}/__epoch=base")
-    spark.read.parquet(s"$path/meta").coalesce(1)
-      .write.mode("overwrite").parquet(swap.stagedDir("meta"))
-    swap.swap()
-  }
+  def compact(spark: SparkSession, path: String): Unit =
+    compactImpl(spark, path, Int.MaxValue)
+
+  private[graft] def compactImpl(spark: SparkSession, path: String,
+                                 crashAtRename: Int): Unit =
+    index(spark, path).compact(crashAtRename) { (_, t, dir) =>
+      summed(t).write.mode("overwrite").parquet(dir)
+    }
 
   /** The summed model over every epoch not excluded — exactly the model
     * a full retrain over the union corpus would produce. */
   def model(spark: SparkSession, path: String,
             excludeEpochs: Seq[String] = Nil): NaiveBayes.Model = {
-    swapFor(spark, path).recover()
-    val d = spark.read.parquet(s"$path/tok")
-    val kept =
-      if (excludeEpochs.isEmpty) d
-      else d.where(!col("__epoch").isin(excludeEpochs: _*))
-    NaiveBayes.Model(kept.groupBy("tok")
-      .agg(sum("c_pos").as("c_pos"), sum("c_neg").as("c_neg")))
+    val ix = index(spark, path)
+    ix.recover()
+    NaiveBayes.Model(summed(ix.read("tok", excludeEpochs)))
   }
 
   /** Score a shard under the current summed model. */

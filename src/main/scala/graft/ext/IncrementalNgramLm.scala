@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.util.StagedSwap
+import graft.util.EpochIndex
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -29,79 +29,67 @@ import org.apache.spark.sql.functions._
   * [[NgramLm.score]] exactly like a freshly-trained one. */
 object IncrementalNgramLm {
 
+  private def index(spark: SparkSession, path: String) =
+    new EpochIndex(spark, path, "tri", "big", "chars")
+
   def writeIndex(docs: DataFrame, textCol: String, path: String): Unit = {
-    writeEpoch(docs, textCol, path, "base")
     val spark = docs.sparkSession
+    val ix = index(spark, path)
+    writeEpoch(docs, textCol, ix, "base")
     import spark.implicits._
     // `meta` doubles as the compaction swap's sentinel (aside first /
     // in last — see StagedSwap)
-    Seq(3).toDF("n").coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/meta")
+    ix.writeMeta(Seq(3).toDF("n"))
   }
 
   /** O(batch) append, IDEMPOTENT per epoch (a replay overwrites its own
     * partition dirs — the [[IncrementalDedup.appendToIndex]] argument). */
   def appendToIndex(newDocs: DataFrame, textCol: String, path: String,
                     epoch: String): Unit = {
-    require(epoch.nonEmpty && epoch != "base" && !epoch.contains('/'),
-      s"epoch must be a non-'base', path-safe name, got '$epoch'")
+    val ix = index(newDocs.sparkSession, path)
     // roll a crashed compaction forward BEFORE writing: an epoch dir
     // created inside a half-swapped table would be set aside (and lost)
     // by a later recovery
-    swapFor(newDocs.sparkSession, path).recover()
-    writeEpoch(newDocs, textCol, path, epoch)
+    ix.openAppend(epoch)
+    writeEpoch(newDocs, textCol, ix, epoch)
   }
 
-  private def writeEpoch(docs: DataFrame, textCol: String, path: String,
+  private def writeEpoch(docs: DataFrame, textCol: String, ix: EpochIndex,
                          epoch: String): Unit = {
     val m = NgramLm.train(docs, textCol)
-    m.tri.write.mode("overwrite").parquet(s"$path/tri/__epoch=$epoch")
-    m.big.write.mode("overwrite").parquet(s"$path/big/__epoch=$epoch")
-    m.charset.write.mode("overwrite").parquet(s"$path/chars/__epoch=$epoch")
+    m.tri.write.mode("overwrite").parquet(ix.dir("tri", epoch))
+    m.big.write.mode("overwrite").parquet(ix.dir("big", epoch))
+    m.charset.write.mode("overwrite").parquet(ix.dir("chars", epoch))
   }
 
-  private def swapFor(spark: SparkSession, path: String) =
-    new StagedSwap(spark, path, sentinel = "meta",
-      others = Seq("tri", "big", "chars"))
+  /** Per table, the fold of its rows across epochs into model rows. */
+  private val folds: Map[String, DataFrame => DataFrame] = Map(
+    "tri" -> (_.groupBy("gram").agg(sum("c3").as("c3"))),
+    "big" -> (_.groupBy("gram").agg(sum("c2").as("c2"))),
+    "chars" -> (_.select("gram").distinct()))
 
   /** Fold every epoch's count partials into a single `base` epoch (the
     * [[IncrementalSpanDedup.compact]] maintenance pass — counts sum,
     * the charset unions; staged + crash-safe ordered rename; results
     * identical before and after, spec-asserted; quiet window only,
     * checkpoint-committed epochs only). */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val swap = swapFor(spark, path)
-    swap.recover()
-    spark.read.parquet(s"$path/tri").groupBy("gram")
-      .agg(sum("c3").as("c3"))
-      .write.mode("overwrite")
-      .parquet(s"${swap.stagedDir("tri")}/__epoch=base")
-    spark.read.parquet(s"$path/big").groupBy("gram")
-      .agg(sum("c2").as("c2"))
-      .write.mode("overwrite")
-      .parquet(s"${swap.stagedDir("big")}/__epoch=base")
-    spark.read.parquet(s"$path/chars").select("gram").distinct()
-      .write.mode("overwrite")
-      .parquet(s"${swap.stagedDir("chars")}/__epoch=base")
-    spark.read.parquet(s"$path/meta").coalesce(1)
-      .write.mode("overwrite").parquet(swap.stagedDir("meta"))
-    swap.swap()
-  }
+  def compact(spark: SparkSession, path: String): Unit =
+    compactImpl(spark, path, Int.MaxValue)
+
+  private[graft] def compactImpl(spark: SparkSession, path: String,
+                                 crashAtRename: Int): Unit =
+    index(spark, path).compact(crashAtRename) { (table, t, dir) =>
+      folds(table)(t).write.mode("overwrite").parquet(dir)
+    }
 
   /** The summed model over every epoch not excluded — exactly the model
     * a full retrain over the union corpus would produce. */
   def model(spark: SparkSession, path: String,
             excludeEpochs: Seq[String] = Nil): NgramLm.Model = {
-    swapFor(spark, path).recover()
-    def rd(t: String): DataFrame = {
-      val d = spark.read.parquet(s"$path/$t")
-      if (excludeEpochs.isEmpty) d
-      else d.where(!col("__epoch").isin(excludeEpochs: _*))
-    }
-    NgramLm.Model(
-      tri = rd("tri").groupBy("gram").agg(sum("c3").as("c3")),
-      big = rd("big").groupBy("gram").agg(sum("c2").as("c2")),
-      charset = rd("chars").select("gram").distinct())
+    val ix = index(spark, path)
+    ix.recover()
+    def rd(t: String): DataFrame = folds(t)(ix.read(t, excludeEpochs))
+    NgramLm.Model(tri = rd("tri"), big = rd("big"), charset = rd("chars"))
   }
 
   /** Score a shard under the current summed model. */

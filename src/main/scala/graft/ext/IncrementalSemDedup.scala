@@ -1,5 +1,7 @@
 package graft.ext
 
+import graft.util.EpochIndex
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -41,7 +43,7 @@ object IncrementalSemDedup {
 
   /** Per-batch-vector verdict (idCol, cell, kept) — equal to the
     * restricted full recompute under the index's model. `excludeEpochs`
-    * is the streaming replay seam ([[graft.stream.StreamNearDup]]). */
+    * is the streaming replay seam ([[graft.stream.EpochFold]]). */
   def prune(spark: SparkSession, path: String, newVecs: DataFrame,
             idCol: String, vecCol: String, tau: Double,
             excludeEpochs: Seq[String] = Nil): DataFrame = {
@@ -53,11 +55,9 @@ object IncrementalSemDedup {
     // pruning the index read to those partition dirs before any IO
     val batchCells = batch.select("cell").distinct()
       .collect().map(_.getInt(0)).toIndexedSeq
-    val idx0 = spark.read.parquet(s"$path/data")
-    val idx1 =
-      if (excludeEpochs.isEmpty) idx0
-      else idx0.where(!col("__epoch").isin(excludeEpochs: _*))
-    val idx = idx1.where(col("cell").isin(batchCells: _*))
+    val idx = EpochIndex.without(spark.read.parquet(s"$path/data"),
+        excludeEpochs)
+      .where(col("cell").isin(batchCells: _*))
       .select(col(idCol).as("id_a"), col("cell"), col(vecCol).as("__va"),
         Similarity.l2(col(vecCol)).as("__na"))
     // witnesses: any smaller-id same-cell vector — indexed or batch

@@ -1,5 +1,7 @@
 package graft.ext
 
+import graft.util.EpochIndex
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -48,12 +50,12 @@ object IncrementalSimHash {
                              path: String, maxHamming: Int = 3,
                              blockPartitions: Int = 0): Unit = {
     val spark = fps.sparkSession
-    writeEpoch(fps, idCol, fpCol, path, maxHamming, epoch = "base",
+    val ix = index(spark, path)
+    writeEpoch(fps, idCol, fpCol, ix, maxHamming, epoch = "base",
       blockPartitions = blockPartitions)
     import spark.implicits._
-    Seq((maxHamming, blockPartitions))
-      .toDF("max_hamming", "block_partitions")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    ix.writeMeta(Seq((maxHamming, blockPartitions))
+      .toDF("max_hamming", "block_partitions"))
   }
 
   /** Fold a batch in under the named epoch — O(batch), idempotent per
@@ -67,36 +69,29 @@ object IncrementalSimHash {
   /** [[appendToIndex]], fingerprint-level. */
   def appendFingerprints(fps: DataFrame, idCol: String, fpCol: String,
                          path: String, epoch: String): Unit = {
-    require(epoch.nonEmpty && epoch != "base" && !epoch.contains('/'),
-      s"epoch must be a non-'base', path-safe name, got '$epoch'")
-    val spark = fps.sparkSession
-    val m = spark.read.parquet(s"$path/meta").head()
-    writeEpoch(fps, idCol, fpCol, path, m.getAs[Int]("max_hamming"),
-      epoch, blockPartitions = metaBlockPartitions(m))
+    val ix = index(fps.sparkSession, path)
+    val m = ix.metaForAppend(epoch)
+    writeEpoch(fps, idCol, fpCol, ix, m.getAs[Int]("max_hamming"),
+      epoch, blockPartitions = EpochIndex.intOr0(m, "block_partitions"))
   }
 
-  private def metaBlockPartitions(meta: org.apache.spark.sql.Row): Int =
-    if (meta.schema.fieldNames.contains("block_partitions"))
-      meta.getAs[Int]("block_partitions")
-    else 0
+  private def index(spark: SparkSession, path: String) =
+    new EpochIndex(spark, path, "blocks")
 
-  private def partitionOf(nParts: Int) =
-    pmod(hash(col("blk"), col("v")), lit(nParts))
+  private def partitioning(nParts: Int) =
+    if (nParts <= 0) None
+    else Some(PartCol -> pmod(hash(col("blk"), col("v")), lit(nParts)))
 
   private def writeEpoch(fps: DataFrame, idCol: String, fpCol: String,
-                         path: String, maxHamming: Int, epoch: String,
+                         ix: EpochIndex, maxHamming: Int, epoch: String,
                          blockPartitions: Int): Unit = {
     val posts = Dedup.simhashBlocks(
         fps.withColumnRenamed(fpCol, "simhash"), idCol, maxHamming)
       .select(col(idCol).as("doc_id"), col("simhash"), col("blk"), col("v"))
     // clustered on the partition column before the write (guide §6 —
     // one file per (epoch, partition) instead of tasks × partitions)
-    val w =
-      if (blockPartitions <= 0) posts.write
-      else posts.withColumn(PartCol, partitionOf(blockPartitions))
-        .repartition(col(PartCol))
-        .write.partitionBy(PartCol)
-    w.mode("overwrite").parquet(s"$path/blocks/__epoch=$epoch")
+    EpochIndex.write(posts, ix.dir("blocks", epoch),
+      partitioning(blockPartitions), cluster = true)
   }
 
   /** All pairs within `maxHamming` simhash bits with at least one side
@@ -116,25 +111,17 @@ object IncrementalSimHash {
                                newFps: DataFrame, idCol: String,
                                fpCol: String,
                                excludeEpochs: Seq[String] = Nil): DataFrame = {
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val ix = index(spark, path)
+    val meta = ix.meta()
     val maxHamming = meta.getAs[Int]("max_hamming")
-    val nParts = metaBlockPartitions(meta)
+    val nParts = EpochIndex.intOr0(meta, "block_partitions")
     val fps = newFps.withColumnRenamed(fpCol, "simhash")
 
     val newBlocks = Dedup.simhashBlocks(fps, idCol, maxHamming)
 
-    val oldBlocks = {
-      val t0 = spark.read.parquet(s"$path/blocks")
-      val t = if (excludeEpochs.isEmpty) t0
-        else t0.where(!col("__epoch").isin(excludeEpochs: _*))
-      if (nParts <= 0) t
-      else {
-        // bounded ≤nParts-int planning collect; dir-level pruning
-        val bs = newBlocks.select(partitionOf(nParts).as(PartCol))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        t.where(col(PartCol).isin(bs: _*))
-      }
-    }
+    // bounded ≤nParts-int planning collect; dir-level pruning
+    val oldBlocks = EpochIndex.inBuckets(ix.read("blocks", excludeEpochs),
+      newBlocks, partitioning(nParts))
 
     val ham = bit_count(col("sh_a").bitwiseXOR(col("sh_b")))
     // new-vs-indexed through the persisted postings …

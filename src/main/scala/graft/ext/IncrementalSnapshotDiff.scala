@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.util.StagedSwap
+import graft.util.EpochIndex
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -38,24 +38,28 @@ object IncrementalSnapshotDiff {
 
   private val BucketCol = "__db"
 
+  private def bucketing(buckets: Int) =
+    Some(BucketCol -> pmod(col("id"), lit(buckets.toLong)).cast("int"))
+
   private def digests(docs: DataFrame, idCol: String, textCol: String,
-                      seq: Long, buckets: Int): DataFrame =
+                      seq: Long): DataFrame =
     docs.select(col(idCol).cast("long").as("id"),
-        sha2(coalesce(col(textCol), lit("")), 256).as("digest"),
-        lit(seq).as("seq"))
-      .withColumn(BucketCol, pmod(col("id"), lit(buckets.toLong)).cast("int"))
+      sha2(coalesce(col(textCol), lit("")), 256).as("digest"),
+      lit(seq).as("seq"))
+
+  private def index(spark: SparkSession, path: String) =
+    new EpochIndex(spark, path, "digests")
 
   /** Build the index at `path` from the base snapshot (seq 0). */
   def writeIndex(docs: DataFrame, idCol: String, textCol: String,
                  path: String, buckets: Int = 16): Unit = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     val spark = docs.sparkSession
-    digests(docs, idCol, textCol, seq = 0L, buckets)
-      .write.mode("overwrite").partitionBy(BucketCol)
-      .parquet(s"$path/digests/__epoch=base")
+    val ix = index(spark, path)
+    EpochIndex.write(digests(docs, idCol, textCol, seq = 0L),
+      ix.dir("digests", "base"), bucketing(buckets))
     import spark.implicits._
-    Seq(buckets).toDF("buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    ix.writeMeta(Seq(buckets).toDF("buckets"))
   }
 
   /** Fold an arriving shard's digests in under the named epoch —
@@ -64,15 +68,12 @@ object IncrementalSnapshotDiff {
     * leaving 0 for base). */
   def appendToIndex(newDocs: DataFrame, idCol: String, textCol: String,
                     path: String, epoch: String, seq: Long): Unit = {
-    require(epoch.nonEmpty && epoch != "base" && !epoch.contains('/'),
-      s"epoch must be a non-'base', path-safe name, got '$epoch'")
+    EpochIndex.checkEpoch(epoch)
     require(seq > 0L, s"seq must be > 0 (0 is the base snapshot), got $seq")
-    val spark = newDocs.sparkSession
-    swapFor(spark, path).recover()
-    val buckets = spark.read.parquet(s"$path/meta").head().getAs[Int]("buckets")
-    digests(newDocs, idCol, textCol, seq, buckets)
-      .write.mode("overwrite").partitionBy(BucketCol)
-      .parquet(s"$path/digests/__epoch=$epoch")
+    val ix = index(newDocs.sparkSession, path)
+    val buckets = ix.meta().getAs[Int]("buckets")
+    EpochIndex.write(digests(newDocs, idCol, textCol, seq),
+      ix.dir("digests", epoch), bucketing(buckets))
   }
 
   /** Classify an arriving shard against the indexed state:
@@ -80,19 +81,14 @@ object IncrementalSnapshotDiff {
   def diffBatch(spark: SparkSession, path: String, newDocs: DataFrame,
                 idCol: String, textCol: String,
                 excludeEpochs: Seq[String] = Nil): DataFrame = {
-    swapFor(spark, path).recover()
-    val buckets = spark.read.parquet(s"$path/meta").head().getAs[Int]("buckets")
+    val ix = index(spark, path)
+    val buckets = ix.meta().getAs[Int]("buckets")
     val batch = newDocs.select(col(idCol).cast("long").as("id"),
       sha2(coalesce(col(textCol), lit("")), 256).as("h_new"))
 
-    val idx0 = spark.read.parquet(s"$path/digests")
-    val idx1 =
-      if (excludeEpochs.isEmpty) idx0
-      else idx0.where(!col("__epoch").isin(excludeEpochs: _*))
     // bounded planning collect: at most `buckets` distinct ints
-    val bs = batch.select(pmod(col("id"), lit(buckets.toLong)).cast("int")
-        .as(BucketCol)).distinct().collect().map(_.getInt(0)).toSeq
-    val current = idx1.where(col(BucketCol).isin(bs: _*))
+    val current = EpochIndex.inBuckets(ix.read("digests", excludeEpochs),
+        batch, bucketing(buckets))
       .join(broadcast(batch.select("id")), Seq("id"), "left_semi")
       .groupBy("id")
       .agg(max_by(col("digest"), col("seq")).as("h_old"))
@@ -104,26 +100,22 @@ object IncrementalSnapshotDiff {
           .otherwise("unchanged").as("status"))
   }
 
-  private def swapFor(spark: SparkSession, path: String) =
-    new StagedSwap(spark, path, sentinel = "meta", others = Seq("digests"))
-
   /** Fold every epoch to the latest digest per id under a single `base`
     * (max seq kept so later appends still order correctly) — the same
-    * crash-safe [[StagedSwap]] discipline and quiescent-stream rule as
+    * crash-safe [[EpochIndex]] discipline and quiescent-stream rule as
     * the other indexes. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val swap = swapFor(spark, path)
-    swap.recover()
-    val meta = spark.read.parquet(s"$path/meta")
-    val buckets = meta.head().getAs[Int]("buckets")
-    spark.read.parquet(s"$path/digests")
-      .groupBy("id")
-      .agg(max_by(col("digest"), col("seq")).as("digest"),
-        max("seq").as("seq"))
-      .withColumn(BucketCol, pmod(col("id"), lit(buckets.toLong)).cast("int"))
-      .write.mode("overwrite").partitionBy(BucketCol)
-      .parquet(s"${swap.stagedDir("digests")}/__epoch=base")
-    meta.coalesce(1).write.mode("overwrite").parquet(swap.stagedDir("meta"))
-    swap.swap()
+  def compact(spark: SparkSession, path: String): Unit =
+    compactImpl(spark, path, Int.MaxValue)
+
+  private[graft] def compactImpl(spark: SparkSession, path: String,
+                                 crashAtRename: Int): Unit = {
+    val ix = index(spark, path)
+    val buckets = ix.meta().getAs[Int]("buckets")
+    ix.compact(crashAtRename) { (_, t, dir) =>
+      EpochIndex.write(t.groupBy("id")
+          .agg(max_by(col("digest"), col("seq")).as("digest"),
+            max("seq").as("seq")),
+        dir, bucketing(buckets))
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.util.StagedSwap
+import graft.util.EpochIndex
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,6 +35,18 @@ object IncrementalSpanDedup {
 
   private val BucketCol = "__wb"
 
+  private def bucketing(buckets: Int) =
+    if (buckets <= 0) None
+    else Some(BucketCol -> pmod(col("fp1"), lit(buckets.toLong)).cast("int"))
+
+  /** Clustered on the bucket before the write (guide §6 — one file per
+    * (epoch, bucket) instead of tasks × buckets). */
+  private def writeCounts(counts: DataFrame, dir: String, buckets: Int): Unit =
+    EpochIndex.write(counts, dir, bucketing(buckets), cluster = true)
+
+  private def index(spark: SparkSession, path: String) =
+    new EpochIndex(spark, path, "counts")
+
   /** Build the index at `path`:
     *  - `counts/__epoch=<e>/` (fp1, fp2, n): per-epoch occurrence
     *    partials of each distinct window fingerprint;
@@ -43,54 +55,38 @@ object IncrementalSpanDedup {
                  path: String, w: Int, minCount: Long = 2L,
                  windowBuckets: Int = 0): Unit = {
     val spark = docs.sparkSession
-    writeEpoch(docs, idCol, textCol, path, w, "base", windowBuckets)
+    val ix = index(spark, path)
+    writeEpoch(docs, idCol, textCol, ix, w, "base", windowBuckets)
     import spark.implicits._
-    Seq((w, minCount, windowBuckets))
-      .toDF("w", "min_count", "window_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    ix.writeMeta(Seq((w, minCount, windowBuckets))
+      .toDF("w", "min_count", "window_buckets"))
   }
 
   /** Fold a shard's window counts in under the named epoch — O(batch)
     * writes, IDEMPOTENT per epoch (a replayed batch overwrites its own
-    * partition dirs; see [[IncrementalDedup.appendToIndex]] for the
+    * partition dirs; see [[graft.stream.EpochFold]] for the
     * at-least-once → exactly-once argument). */
   def appendToIndex(newDocs: DataFrame, idCol: String, textCol: String,
                     path: String, epoch: String): Unit = {
-    require(epoch.nonEmpty && epoch != "base" && !epoch.contains('/'),
-      s"epoch must be a non-'base', path-safe name, got '$epoch'")
-    val spark = newDocs.sparkSession
-    swapFor(spark, path).recover()
-    val meta = spark.read.parquet(s"$path/meta").head()
-    writeEpoch(newDocs, idCol, textCol, path, meta.getAs[Int]("w"), epoch,
+    val ix = index(newDocs.sparkSession, path)
+    val meta = ix.metaForAppend(epoch)
+    writeEpoch(newDocs, idCol, textCol, ix, meta.getAs[Int]("w"), epoch,
       meta.getAs[Int]("window_buckets"))
   }
 
   private def writeEpoch(docs: DataFrame, idCol: String, textCol: String,
-                         path: String, w: Int, epoch: String,
-                         buckets: Int): Unit = {
-    val counts = SpanDedup.windows(docs, idCol, textCol, w)
-      .groupBy("fp1", "fp2").agg(count(lit(1)).as("n"))
-    val (out, pCols) =
-      if (buckets <= 0) (counts, Nil)
-      else (counts.withColumn(BucketCol,
-        pmod(col("fp1"), lit(buckets.toLong)).cast("int")), Seq(BucketCol))
-    // clustered on the bucket before the write (guide §6 — one file per
-    // (epoch, bucket) instead of tasks × buckets)
-    val wtr = (if (pCols.isEmpty) out else out.repartition(col(BucketCol)))
-      .write.mode("overwrite")
-    (if (pCols.isEmpty) wtr else wtr.partitionBy(pCols: _*))
-      .parquet(s"$path/counts/__epoch=$epoch")
-  }
-
-  private def swapFor(spark: SparkSession, path: String) =
-    new StagedSwap(spark, path, sentinel = "meta", others = Seq("counts"))
+                         ix: EpochIndex, w: Int, epoch: String,
+                         buckets: Int): Unit =
+    writeCounts(SpanDedup.windows(docs, idCol, textCol, w)
+      .groupBy("fp1", "fp2").agg(count(lit(1)).as("n")),
+      ix.dir("counts", epoch), buckets)
 
   /** Fold every epoch's count partials into a single `base` epoch — the
     * maintenance pass a 100 TB operator schedules so N daily appends
     * don't leave N epoch directories (small files + ever-growing
     * partition discovery). Counts are a monoid, so the fold is one
     * re-aggregate; the replacement is staged under `__compact/` and
-    * swapped in with the crash-safe ordered rename ([[StagedSwap]] —
+    * swapped in with the crash-safe ordered rename ([[EpochIndex]] —
     * `meta` aside first / in last, roll-forward recovery at every
     * entry point). Results are identical before and after
     * (spec-asserted). Run it at a quiet window, single-writer, with any
@@ -101,45 +97,28 @@ object IncrementalSpanDedup {
   def compact(spark: SparkSession, path: String): Unit =
     compactImpl(spark, path, Int.MaxValue)
 
-  private[ext] def compactImpl(spark: SparkSession, path: String,
-                               crashAtRename: Int): Unit = {
-    val swap = swapFor(spark, path)
-    swap.recover()
-    val meta = spark.read.parquet(s"$path/meta")
-    val buckets = meta.head().getAs[Int]("window_buckets")
-    val folded = spark.read.parquet(s"$path/counts")
-      .groupBy("fp1", "fp2").agg(sum("n").as("n"))
-    val (out, pCols) =
-      if (buckets <= 0) (folded, Nil)
-      else (folded.withColumn(BucketCol,
-        pmod(col("fp1"), lit(buckets.toLong)).cast("int")), Seq(BucketCol))
-    val wtr = (if (pCols.isEmpty) out else out.repartition(col(BucketCol)))
-      .write.mode("overwrite")
-    (if (pCols.isEmpty) wtr else wtr.partitionBy(pCols: _*))
-      .parquet(s"${swap.stagedDir("counts")}/__epoch=base")
-    meta.coalesce(1).write.mode("overwrite")
-      .parquet(swap.stagedDir("meta"))
-    swap.swapImpl(crashAtRename)
+  private[graft] def compactImpl(spark: SparkSession, path: String,
+                                 crashAtRename: Int): Unit = {
+    val ix = index(spark, path)
+    val buckets = ix.meta().getAs[Int]("window_buckets")
+    ix.compact(crashAtRename) { (_, t, dir) =>
+      writeCounts(t.groupBy("fp1", "fp2").agg(sum("n").as("n")), dir, buckets)
+    }
   }
 
   /** Maximal duplicated spans of the NEW shard against `indexed ∪ new`
     * — identical to the restricted full recompute. `excludeEpochs` is
     * the streaming replay seam (ignore the batch's own epoch so a
     * crash between append and checkpoint-commit replays byte-identically
-    * — see [[graft.stream.StreamNearDup]]). */
+    * — see [[graft.stream.EpochFold]]). */
   def spans(spark: SparkSession, path: String, newDocs: DataFrame,
             idCol: String, textCol: String,
             excludeEpochs: Seq[String] = Nil): DataFrame = {
-    swapFor(spark, path).recover()
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val ix = index(spark, path)
+    val meta = ix.meta()
     val w = meta.getAs[Int]("w")
     val minCount = meta.getAs[Long]("min_count")
     val buckets = meta.getAs[Int]("window_buckets")
-
-    val idx0 = spark.read.parquet(s"$path/counts")
-    val idx1 =
-      if (excludeEpochs.isEmpty) idx0
-      else idx0.where(!col("__epoch").isin(excludeEpochs: _*))
 
     val win = SpanDedup.windows(newDocs, idCol, textCol, w)
     val batchCnt = win.groupBy("fp1", "fp2").agg(count(lit(1)).as("n_new"))
@@ -147,16 +126,8 @@ object IncrementalSpanDedup {
     // bucket prune first (bounded planning collect), broadcast filter
     // second — the index never contributes more rows than the batch
     // has distinct fingerprints
-    val idxPruned =
-      if (buckets <= 0) idx1
-      else {
-        val bs = batchCnt
-          .select(pmod(col("fp1"), lit(buckets.toLong)).cast("int")
-            .as(BucketCol))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        idx1.where(col(BucketCol).isin(bs: _*))
-      }
-    val idxForBatch = idxPruned
+    val idxForBatch = EpochIndex.inBuckets(ix.read("counts", excludeEpochs),
+        batchCnt, bucketing(buckets))
       .join(broadcast(batchCnt.select("fp1", "fp2")), Seq("fp1", "fp2"),
         "left_semi")
       .groupBy("fp1", "fp2").agg(sum("n").as("n_old"))

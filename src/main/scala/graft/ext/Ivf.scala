@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.functions.VectorExpressions
+import graft.util.EpochIndex
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -284,8 +285,7 @@ object Ivf {
     * append needs its own epoch name. */
   def appendToIndex(newVectors: DataFrame, vecCol: String,
                     path: String, epoch: String): Unit = {
-    require(epoch.nonEmpty && epoch != "base" && !epoch.contains('/'),
-      s"epoch must be a non-'base', path-safe name, got '$epoch'")
+    EpochIndex.checkEpoch(epoch)
     val spark = newVectors.sparkSession
     val model = load(spark, s"$path/model")
     assignCells(newVectors, vecCol, model)
@@ -333,12 +333,11 @@ object Ivf {
                       k: Int, nProbe: Int,
                       broadcastProbes: Boolean,
                       excludeEpochs: Seq[String] = Nil): DataFrame = {
-    // at-least-once replay seam (the IncrementalDedup convention):
-    // `__epoch` is a partition value, so excluding an in-flight batch's
-    // own epoch prunes its directories before any IO
-    def epochFiltered(df: DataFrame): DataFrame =
-      if (excludeEpochs.isEmpty) df
-      else df.where(!col("__epoch").isin(excludeEpochs: _*))
+    // at-least-once replay seam ([[graft.stream.EpochFold]]): `__epoch`
+    // is a partition value, so excluding an in-flight batch's own epoch
+    // prunes its directories before any IO
+    val data = EpochIndex.without(spark.read.parquet(s"$path/data"),
+      excludeEpochs)
     // one probe-cell derivation per query row, shared by both modes
     val probesPlan = queries.select(col(idCol).as("query_id"),
       explode(VectorExpressions.nearestCells(
@@ -351,8 +350,7 @@ object Ivf {
       val probes = spark.createDataFrame(
         java.util.Arrays.asList(collected: _*), probesPlan.schema)
       val qCells = collected.map(_.getInt(1)).distinct.toIndexedSeq
-      val corpus = epochFiltered(spark.read.parquet(s"$path/data"))
-        .where(col("cell").isin(qCells: _*))
+      val corpus = data.where(col("cell").isin(qCells: _*))
       val cands = corpus.select(col(idCol).as("neighbor_id"), col("cell"))
         .join(broadcast(probes), "cell")
         .where(col("query_id") =!= col("neighbor_id"))
@@ -360,7 +358,7 @@ object Ivf {
       verifyTopK(cands, corpus, queries, idCol, vecCol, k,
         broadcastQueries = true)
     } else {
-      val corpus = epochFiltered(spark.read.parquet(s"$path/data"))
+      val corpus = data
       val cands = corpus.select(col(idCol).as("neighbor_id"), col("cell"))
         .join(probesPlan, "cell")
         .where(col("query_id") =!= col("neighbor_id"))

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.functions.{PqExpressions, VectorExpressions}
+import graft.util.EpochIndex
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -291,8 +292,7 @@ object Pq {
     * Appended ids must be disjoint from every id already indexed. */
   def appendToIndex(newVectors: DataFrame, idCol: String, vecCol: String,
                     path: String, epoch: String): Unit = {
-    require(epoch.nonEmpty && epoch != "base" && !epoch.contains('/'),
-      s"epoch must be a non-'base', path-safe name, got '$epoch'")
+    EpochIndex.checkEpoch(epoch)
     val spark = newVectors.sparkSession
     val ivfModel = Ivf.load(spark, s"$path/model")
     val pqModel = load(spark, s"$path/pq")

@@ -1,7 +1,7 @@
 package graft.sink
 
 import graft.functions.ZOrderExpressions
-import graft.util.TableFs
+import graft.util.{EpochIndex, TableFs}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -109,51 +109,15 @@ object ZOrderLayout {
       .coalesce(1).write.mode("overwrite").parquet(fs.str("meta"))
   }
 
-  private def hadoopFs(spark: SparkSession, fs: TableFs)
-      : org.apache.hadoop.fs.FileSystem =
-    fs.rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Roll FORWARD a crashed [[optimize]] swap. The swap's rename order
-    * makes the crash state unambiguous: `meta` is renamed aside FIRST
-    * and renamed back in LAST, so "primary `meta` missing AND a
-    * complete staged `__compact/meta` present" holds exactly while a
-    * swap is in flight — a healthy mid-BUILD (`__compact` growing,
-    * primaries untouched) never matches, and a completed swap (meta
-    * present) never matches. Recovery finishes the swap
-    * deterministically and is itself re-runnable from any crash point,
-    * because it preserves the same invariant until its own last
-    * rename. Called by every reader entry point, so a stream that
-    * crashed mid-recluster serves the new layout on its next read
-    * instead of wedging. Single-writer per table, like the sinks. */
-  private def recoverSwap(spark: SparkSession, fs: TableFs): Unit =
-    if (!fs.exists("meta") && fs.exists("__compact/meta")) {
-      val hfs = hadoopFs(spark, fs)
-      def abs(rel: String) = new org.apache.hadoop.fs.Path(fs.str(rel))
-      fs.mkdirs("__old")
-      for (d <- Seq("data", "manifest")) {
-        // a primary with NO staged counterpart is already the new one
-        // (the crashed swap renamed it in before dying) — touching it
-        // would destroy the table; only a primary whose replacement is
-        // still staged is the OLD one to set aside
-        if (fs.exists(s"__compact/$d")) {
-          if (fs.exists(d)) {
-            fs.deleteRecursively(s"__old/$d")
-            require(hfs.rename(abs(d), abs(s"__old/$d")),
-              s"swap recovery: aside rename failed for $d")
-          }
-          require(hfs.rename(abs(s"__compact/$d"), abs(d)),
-            s"swap recovery: staged rename failed for $d")
-        }
-      }
-      require(hfs.rename(abs("__compact/meta"), abs("meta")),
-        "swap recovery: staged rename failed for meta")
-      fs.deleteRecursively("__old")
-      fs.deleteRecursively("__compact")
-    }
+  /** The table as an [[EpochIndex]]: `data` and `manifest` are its
+    * epoch tables, `meta` the sentinel of the [[optimize]] swap, whose
+    * crashed state every reader entry point rolls forward. */
+  private def index(spark: SparkSession, path: String) =
+    new EpochIndex(spark, path, "data", "manifest")
 
   private def readMeta(spark: SparkSession, fs: TableFs)
       : (Seq[String], Seq[Array[Double]], Int) = {
-    recoverSwap(spark, fs)
+    index(spark, fs.rootPath.toString).recover()
     val rows = spark.read.parquet(fs.str("meta"))
       .select(col("col"), col("boundaries").cast("array<double>"),
         col("bits").cast("int"))
@@ -180,8 +144,7 @@ object ZOrderLayout {
     * append-then-recluster loop. */
   def append(df: DataFrame, path: String, epoch: String,
              batchFiles: Int = 8): Unit = {
-    require(epoch.nonEmpty && epoch != "base" && !epoch.contains('/'),
-      s"epoch must be a non-'base', path-safe name, got '$epoch'")
+    EpochIndex.checkEpoch(epoch)
     val spark = df.sparkSession
     val fs = new TableFs(path, spark.sparkContext.hadoopConfiguration)
     val (cols, boundaries, bits) = readMeta(spark, fs)
@@ -210,7 +173,7 @@ object ZOrderLayout {
     * aside (`__old/`, meta first), staged dirs renamed in (meta LAST),
     * then `__old`/`__compact` deleted — so primary `meta` present ⟺
     * table complete, and a crash at ANY point leaves a state
-    * [[recoverSwap]] (run by every reader entry) finishes
+    * [[EpochIndex.recover]] (run by every reader entry) finishes
     * deterministically. No window strands the table.
     *
     * Boundaries: by default the STORED quantile boundaries are REUSED
@@ -259,9 +222,7 @@ object ZOrderLayout {
     fs.deleteRecursively("__compact")
     val staged = s"$path/__compact"
     val all = spark.read.parquet(fs.str("data"))
-    val foldable =
-      if (preserveEpochs.isEmpty) all
-      else all.where(!col("__epoch").isin(preserveEpochs: _*))
+    val foldable = EpochIndex.without(all, preserveEpochs)
     val fixed =
       if (rederiveBoundaries) None else Some((storedBoundaries, storedBits))
     write(foldable.drop("__epoch"), cols, staged, targetFiles, fixed)
@@ -281,7 +242,7 @@ object ZOrderLayout {
     // live table must stay complete until the swap starts — a crash
     // here leaves the primaries untouched and `__compact` stale, which
     // the next optimize simply clears
-    val hfs = hadoopFs(spark, fs)
+    val hfs = fs.rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     for (e <- preserveEpochs; d <- Seq("data", "manifest")
          if fs.exists(s"$d/__epoch=$e")) {
       val src = new org.apache.hadoop.fs.Path(fs.str(s"$d/__epoch=$e"))
@@ -290,25 +251,8 @@ object ZOrderLayout {
         false, spark.sparkContext.hadoopConfiguration),
         s"optimize preserve copy failed: $src -> $dst")
     }
-    // THE SWAP. Aside order meta-FIRST, staged-in order meta-LAST: the
-    // invariant "meta missing ⟺ swap in flight" holds at every
-    // intermediate state, which is exactly what recoverSwap keys on.
-    def abs(rel: String) = new org.apache.hadoop.fs.Path(fs.str(rel))
-    var renames = 0
-    def swapRename(src: String, dst: String): Unit = {
-      if (renames >= crashAtRename)
-        throw new IllegalStateException(s"injected crash before $src -> $dst")
-      renames += 1
-      require(hfs.rename(abs(src), abs(dst)),
-        s"optimize swap rename failed: $src -> $dst")
-    }
-    fs.mkdirs("__old")
-    for (d <- Seq("meta", "manifest", "data") if fs.exists(d))
-      swapRename(d, s"__old/$d")
-    for (d <- Seq("data", "manifest", "meta"))
-      swapRename(s"__compact/$d", d)
-    fs.deleteRecursively("__old")
-    fs.deleteRecursively("__compact")
+    // THE SWAP: meta aside first and in last (EpochIndex / StagedSwap)
+    index(spark, path).swapStaged(crashAtRename)
   }
 
   /** Full-table read (no pruning) — the correctness baseline. The
@@ -316,7 +260,7 @@ object ZOrderLayout {
     * dropped here so readers see exactly the written columns. */
   def read(spark: SparkSession, path: String): DataFrame = {
     val fs = new TableFs(path, spark.sparkContext.hadoopConfiguration)
-    recoverSwap(spark, fs)
+    index(spark, path).recover()
     spark.read.parquet(fs.str("data")).drop("__epoch")
   }
 
@@ -330,7 +274,7 @@ object ZOrderLayout {
   def candidateFiles(spark: SparkSession, path: String,
                      ranges: Ranges): (Seq[String], Int) = {
     val fs = new TableFs(path, spark.sparkContext.hadoopConfiguration)
-    recoverSwap(spark, fs)
+    index(spark, path).recover()
     val manifest = spark.read.parquet(fs.str("manifest"))
     val keep = ranges.foldLeft(lit(true)) { case (acc, (c, (lo, hi))) =>
       val loOk = lo.map(v => col(s"max_$c").cast("double") >= v).getOrElse(lit(true))

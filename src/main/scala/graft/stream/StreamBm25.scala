@@ -3,7 +3,7 @@ package graft.stream
 import graft.ext.IncrementalBm25
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming BM25 search-index maintenance: each arriving micro-batch
   * of documents is folded into the persisted postings index
@@ -13,30 +13,20 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * streaming form of a search index following a rolling crawl; batch
   * semantics are oracle-gated via `llm_bm25_incremental`.
   *
-  * Delivery: at-least-once from the checkpoint, made exactly-once for
-  * BOTH tables by epoch keying. Here the snapshot may INCLUDE the
-  * batch's own epoch (unlike the dedup family's exclude-own-epoch
-  * reads): the fold is an idempotent overwrite of `__epoch=b<batchId>`,
-  * so a replay that crashed between fold and checkpoint-commit re-folds
-  * to the identical index state and re-serves a byte-identical
-  * snapshot, which then overwrites its own `__epoch=b<batchId>` rows
-  * (asserted in the spec). */
+  * Delivery: exactly-once by epoch ([[EpochFold]]). The snapshot
+  * INCLUDES the batch's own epoch: the fold runs first, so a replay
+  * re-folds to the identical index and re-serves a byte-identical
+  * snapshot (asserted in the spec). */
 object StreamBm25 {
 
   def start(docs: DataFrame, indexPath: String, queryTerms: Seq[String],
             k: Int, outDir: String, checkpointDir: String,
             idCol: String = "doc_id", textCol: String = "text",
             triggerInterval: String = "1 second"): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        IncrementalBm25.appendToIndex(batch, idCol, textCol, indexPath,
-          epoch = s"b$batchId")
-        IncrementalBm25.search(spark, indexPath, queryTerms, k)
-          .write.mode("overwrite").parquet(s"$outDir/__epoch=b$batchId")
-      }
-      .start()
+    EpochFold.start(docs, checkpointDir, triggerInterval) { (batch, epoch) =>
+      IncrementalBm25.appendToIndex(batch, idCol, textCol, indexPath,
+        epoch.name)
+      EpochFold.writeEpoch(IncrementalBm25.search(batch.sparkSession, indexPath,
+        queryTerms, k), outDir, epoch)
+    }
 }

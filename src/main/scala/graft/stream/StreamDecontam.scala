@@ -3,7 +3,7 @@ package graft.stream
 import graft.ext.Decontamination
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming incremental decontamination: every arriving micro-batch of
   * documents is flagged IN-FLIGHT against the persisted benchmark-gram
@@ -12,13 +12,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * check a production pipeline runs on each shard BEFORE it reaches the
   * training corpus, instead of a full-corpus batch sweep afterwards.
   *
-  * Shape: `foreachBatch` → [[Decontamination.flagAgainstIndex]] (the
+  * Shape: each micro-batch → [[Decontamination.flagAgainstIndex]] (the
   * gram set is read from the index and broadcast; the batch is never
-  * shuffled on the gram) → epoch-keyed parquet overwrite
-  * (`__epoch=b<batchId>`, surfaced to readers as a partition column).
-  * At-least-once from the checkpoint, exactly-once for the report: the
-  * flag output is deterministic, so a replayed batch overwrites its own
-  * epoch with identical rows instead of appending duplicates.
+  * shuffled on the gram) → the epoch's report partition. The index is
+  * read-only, and the flags are deterministic, so a replayed batch
+  * overwrites its own epoch with identical rows ([[EpochFold]]).
   */
 object StreamDecontam {
 
@@ -28,14 +26,8 @@ object StreamDecontam {
             checkpointDir: String, idCol: String = "doc_id",
             textCol: String = "text",
             triggerInterval: String = "1 second"): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Decontamination.flagAgainstIndex(batch.sparkSession, indexPath,
-            batch, idCol, textCol)
-          .write.mode("overwrite").parquet(s"$outDir/__epoch=b$batchId")
-      }
-      .start()
+    EpochFold.start(docs, checkpointDir, triggerInterval) { (batch, epoch) =>
+      EpochFold.writeEpoch(Decontamination.flagAgainstIndex(batch.sparkSession,
+        indexPath, batch, idCol, textCol), outDir, epoch)
+    }
 }

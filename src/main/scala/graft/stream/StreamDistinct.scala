@@ -3,7 +3,7 @@ package graft.stream
 import graft.ext.IncrementalDistinct
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming distinct-count maintenance on the persisted HLL store:
   * each micro-batch is sketched once (its only scan), the all-time
@@ -12,31 +12,20 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * the live "distinct users ever, by event type" dashboard at O(batch)
   * per trigger.
   *
-  * Delivery: the house exactly-once-by-epoch argument — appends
-  * overwrite `__epoch=b<batchId>` on replay, report rows land
-  * epoch-keyed, and the estimate excludes the batch's own epoch so a
-  * crashed-after-append replay reads exactly the pre-batch store.
-  * Batch semantics are gated via `events_distinct_incremental_check`
-  * (merge-lossless + error envelope). */
+  * Delivery: exactly-once by epoch, the estimate leaving out the
+  * batch's own epoch ([[EpochFold]]). Batch semantics are gated via
+  * `events_distinct_incremental_check` (merge-lossless + error
+  * envelope). */
 object StreamDistinct {
 
   def start(rows: DataFrame, indexPath: String, outDir: String,
             checkpointDir: String, groupCol: String, valueCol: String,
             triggerInterval: String = "1 second"): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.persist()
-        try {
-          IncrementalDistinct.estimate(spark, indexPath, b, groupCol,
-              valueCol, excludeEpochs = Seq(s"b$batchId"))
-            .write.mode("overwrite").parquet(s"$outDir/__epoch=b$batchId")
-          IncrementalDistinct.appendToIndex(b, groupCol, valueCol,
-            indexPath, epoch = s"b$batchId")
-        } finally { b.unpersist(); () }
-      }
-      .start()
+    EpochFold.flagThenAppend(rows, outDir, checkpointDir, triggerInterval) {
+      (b, epoch) => IncrementalDistinct.estimate(b.sparkSession, indexPath,
+        b, groupCol, valueCol, excludeEpochs = Seq(epoch.name))
+    } { (b, epoch) =>
+      IncrementalDistinct.appendToIndex(b, groupCol, valueCol, indexPath,
+        epoch.name)
+    }
 }

@@ -3,7 +3,7 @@ package graft.stream
 import graft.ext.IncrementalDomainCap
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming per-domain admission control: each arriving micro-batch of
   * documents is judged against the persisted kept-count index
@@ -14,36 +14,22 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * streaming form of the FineWeb per-domain cap over a rolling crawl;
   * batch semantics are oracle-gated via `llm_domain_cap_incremental`.
   *
-  * Delivery: at-least-once from the checkpoint, made exactly-once for
-  * BOTH tables by epoch keying — the index append overwrites its own
-  * `__epoch=b<batchId>` rows on replay, the report overwrites its own
-  * `__epoch=b<batchId>` partition, and both passes EXCLUDE the batch's
-  * own epoch from the index read, so a replay that crashed between
-  * append and checkpoint-commit still reads exactly the pre-batch
-  * budget and rewrites byte-identical rows (the [[StreamLineDedup]]
-  * argument, asserted in the spec). */
+  * Delivery: exactly-once by epoch ([[EpochFold]]); both the admit pass
+  * and the append leave the batch's own epoch out of the index read, so
+  * a replay reads exactly the pre-batch budget (asserted in the spec).
+  * The batch is pinned: the admit pass scans it twice (domains + ranks)
+  * and the append twice more. */
 object StreamDomainCap {
 
   def start(docs: DataFrame, indexPath: String, outDir: String,
             checkpointDir: String, idCol: String = "doc_id",
             domainCol: String = "domain",
             triggerInterval: String = "1 second"): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // the admit pass scans the batch twice (domains + ranks) and
-        // the append twice more — pin it
-        batch.persist()
-        try {
-          IncrementalDomainCap.admit(spark, indexPath, batch,
-              idCol, domainCol, excludeEpochs = Seq(s"b$batchId"))
-            .write.mode("overwrite").parquet(s"$outDir/__epoch=b$batchId")
-          IncrementalDomainCap.appendToIndex(batch, idCol, domainCol,
-            indexPath, epoch = s"b$batchId")
-        } finally { batch.unpersist(); () }
-      }
-      .start()
+    EpochFold.flagThenAppend(docs, outDir, checkpointDir, triggerInterval) {
+      (b, epoch) => IncrementalDomainCap.admit(b.sparkSession, indexPath, b,
+        idCol, domainCol, excludeEpochs = Seq(epoch.name))
+    } { (b, epoch) =>
+      IncrementalDomainCap.appendToIndex(b, idCol, domainCol, indexPath,
+        epoch.name)
+    }
 }

@@ -3,7 +3,7 @@ package graft.stream
 import graft.ext.IncrementalGearChunk
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming CDC-dedup maintenance: each arriving micro-batch of blobs
   * is gear-chunked map-side ([[graft.ext.GearChunk]] — blobs never
@@ -13,32 +13,20 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * fold in as an O(batch) epoch append — the object-store ingest loop
   * that decides how many bytes a crawl refresh actually costs.
   *
-  * Delivery: the house exactly-once-by-epoch argument — the store
-  * append overwrites `__epoch=b<batchId>` on replay, report rows land
-  * epoch-keyed, and the probe excludes the batch's own epoch so a
-  * crashed-after-append replay reads exactly the pre-batch store
-  * (asserted in StreamGearChunkSpec). Batch semantics are gated via
-  * `mm_cdc_incremental_check`. */
+  * Delivery: exactly-once by epoch, the probe leaving out the batch's
+  * own epoch ([[EpochFold]]; asserted in StreamGearChunkSpec). Batch
+  * semantics are gated via `mm_cdc_incremental_check`. */
 object StreamGearChunk {
 
   def start(blobs: DataFrame, indexPath: String, outDir: String,
             checkpointDir: String, idCol: String = "doc_id",
             blobCol: String = "blob",
             triggerInterval: String = "1 second"): StreamingQuery =
-    blobs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.persist()
-        try {
-          IncrementalGearChunk.newBytes(spark, indexPath, b, idCol,
-              blobCol, excludeEpochs = Seq(s"b$batchId"))
-            .write.mode("overwrite").parquet(s"$outDir/__epoch=b$batchId")
-          IncrementalGearChunk.appendToIndex(b, idCol, blobCol,
-            indexPath, epoch = s"b$batchId")
-        } finally { b.unpersist(); () }
-      }
-      .start()
+    EpochFold.flagThenAppend(blobs, outDir, checkpointDir, triggerInterval) {
+      (b, epoch) => IncrementalGearChunk.newBytes(b.sparkSession, indexPath,
+        b, idCol, blobCol, excludeEpochs = Seq(epoch.name))
+    } { (b, epoch) =>
+      IncrementalGearChunk.appendToIndex(b, idCol, blobCol, indexPath,
+        epoch.name)
+    }
 }

@@ -4,7 +4,7 @@ import graft.ext.{Ivf, Similarity}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming EMBEDDING-index maintenance — the vector-space member of
   * the streaming maintenance family ([[StreamNearDup]] exact text,
@@ -23,13 +23,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * made under the index's own model, so recall under drift degrades
   * gracefully until a scheduled offline re-train + re-bucket.
   *
-  * Delivery: at-least-once from the checkpoint, exactly-once for the
-  * index AND the pair report by epoch-keyed overwrite (a replayed
-  * batch rewrites its own `__epoch=b<batchId>` partitions in both),
-  * and the flag pass excludes the batch's own epoch from the index
-  * read, so a crash between append and checkpoint-commit replays
-  * byte-identically — no self-pairs, no duplicated report rows
-  * (asserted in the spec). */
+  * Delivery: exactly-once by epoch, the flag pass leaving out the
+  * batch's own epoch ([[EpochFold]]): no self-pairs, no duplicated
+  * report rows (asserted in the spec). The batch is pinned: it is
+  * probed (queries side), self-paired, and appended. */
 object StreamIvf {
 
   /** Start the flag-then-append stream. `vectors` is a streaming
@@ -40,29 +37,15 @@ object StreamIvf {
             idCol: String = "vec_id", vecCol: String = "embedding",
             threshold: Double = 0.35, k: Int = 20, nProbe: Int = 4,
             triggerInterval: String = "1 second"): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val epoch = s"b$batchId"
-        // Pin the batch: probed (queries side), self-paired, and
-        // appended — three scans of one micro-batch.
-        batch.persist()
-        try {
-          val newOld = Ivf.topKIndexed(spark, indexPath, batch, idCol,
-              vecCol, k, nProbe, excludeEpochs = Seq(epoch))
-            .where(col("sim") >= threshold)
-            .select(least(col("query_id"), col("neighbor_id")).as("id_a"),
-              greatest(col("query_id"), col("neighbor_id")).as("id_b"),
-              col("sim"))
-          val newNew = Similarity.exactCosinePairs(batch, idCol, vecCol,
-            threshold)
-          newOld.unionByName(newNew)
-            .write.mode("overwrite").parquet(s"$outDir/__epoch=$epoch")
-          Ivf.appendToIndex(batch, vecCol, indexPath, epoch)
-        } finally { batch.unpersist(); () }
-      }
-      .start()
+    EpochFold.flagThenAppend(vectors, outDir, checkpointDir,
+        triggerInterval) { (b, epoch) =>
+      val newOld = Ivf.topKIndexed(b.sparkSession, indexPath, b, idCol,
+          vecCol, k, nProbe, excludeEpochs = Seq(epoch.name))
+        .where(col("sim") >= threshold)
+        .select(least(col("query_id"), col("neighbor_id")).as("id_a"),
+          greatest(col("query_id"), col("neighbor_id")).as("id_b"),
+          col("sim"))
+      newOld.unionByName(
+        Similarity.exactCosinePairs(b, idCol, vecCol, threshold))
+    } { (b, epoch) => Ivf.appendToIndex(b, vecCol, indexPath, epoch.name) }
 }

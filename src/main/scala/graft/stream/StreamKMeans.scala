@@ -3,7 +3,7 @@ package graft.stream
 import graft.ext.KMeans
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming cluster assignment under a PERSISTED fixed-point k-means
   * model ([[graft.ext.KMeans]]) — the vector-bucketing member of the
@@ -13,14 +13,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * literals; no join, no shuffle, no state store), landing epoch-keyed
   * in a parquet assignments table.
   *
-  * Delivery: exactly-once by epoch overwrite — a replayed batch
-  * rewrites its own `__epoch=b<batchId>` partition with byte-identical
-  * rows (assignment is a pure function of the batch and the fixed
-  * model, so replay determinism is structural, not argued). The model
-  * stays FIXED across the stream; a nightly re-train replaces the
-  * artifact and restarts the stream (the [[graft.ext.Ivf]] train-once
-  * discipline — drift degrades occupancy gracefully, never
-  * correctness). */
+  * Delivery: exactly-once by epoch ([[EpochFold]]) — assignment is a
+  * pure function of the batch and the fixed model, so a replay rewrites
+  * its epoch with byte-identical rows. The model stays FIXED across the
+  * stream; a nightly re-train replaces the artifact and restarts the
+  * stream (the [[graft.ext.Ivf]] train-once discipline — drift degrades
+  * occupancy gracefully, never correctness). */
 object StreamKMeans {
 
   def start(vectors: DataFrame, modelPath: String, outDir: String,
@@ -28,15 +26,9 @@ object StreamKMeans {
             vecCol: String = "embedding",
             triggerInterval: String = "1 second"): StreamingQuery = {
     val model = KMeans.loadModel(vectors.sparkSession, modelPath)
-    vectors.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        KMeans.assign(KMeans.quantize(batch, idCol, vecCol), idCol, model)
-          .write.mode("overwrite").parquet(s"$outDir/__epoch=b$batchId")
-        ()
-      }
-      .start()
+    EpochFold.start(vectors, checkpointDir, triggerInterval) { (batch, epoch) =>
+      EpochFold.writeEpoch(KMeans.assign(KMeans.quantize(batch, idCol, vecCol),
+        idCol, model), outDir, epoch)
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft.stream
 import graft.ext.IncrementalLineDedup
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming line-level boilerplate maintenance: each arriving
   * micro-batch of documents is rewritten against the persisted
@@ -14,36 +14,21 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * streaming form of the CCNet boilerplate ingest loop; batch semantics
   * are oracle-gated via `llm_line_dedup_incremental`.
   *
-  * Delivery: at-least-once from the checkpoint, made exactly-once for
-  * BOTH tables by epoch keying — the index append overwrites its own
-  * `__epoch=b<batchId>` partials on replay, the report overwrites its
-  * own `__epoch=b<batchId>` rows, and the flag pass EXCLUDES the
-  * batch's own epoch from the index read, so a replay that crashed
-  * between append and checkpoint-commit still reads exactly the
-  * pre-batch index and rewrites byte-identical report rows (the
-  * [[StreamNearDup]] argument, asserted in the spec). */
+  * Delivery: exactly-once by epoch, the flag pass leaving out the
+  * batch's own epoch ([[EpochFold]]; asserted in the spec). The batch
+  * is pinned: the flag pass splits it twice (df + flags) and the append
+  * splits it again. */
 object StreamLineDedup {
 
   def start(docs: DataFrame, indexPath: String, outDir: String,
             checkpointDir: String, idCol: String = "doc_id",
             textCol: String = "text", sep: String = " ",
             triggerInterval: String = "1 second"): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // the flag pass splits the batch twice (df + flags) and the
-        // append splits it again — pin it for the three scans
-        batch.persist()
-        try {
-          IncrementalLineDedup.dropBoilerplate(spark, indexPath, batch,
-              idCol, textCol, sep, excludeEpochs = Seq(s"b$batchId"))
-            .write.mode("overwrite").parquet(s"$outDir/__epoch=b$batchId")
-          IncrementalLineDedup.appendToIndex(batch, idCol, textCol,
-            indexPath, epoch = s"b$batchId")
-        } finally { batch.unpersist(); () }
-      }
-      .start()
+    EpochFold.flagThenAppend(docs, outDir, checkpointDir, triggerInterval) {
+      (b, epoch) => IncrementalLineDedup.dropBoilerplate(b.sparkSession,
+        indexPath, b, idCol, textCol, sep, excludeEpochs = Seq(epoch.name))
+    } { (b, epoch) =>
+      IncrementalLineDedup.appendToIndex(b, idCol, textCol, indexPath,
+        epoch.name)
+    }
 }

@@ -1,10 +1,11 @@
 package graft.stream
 
 import graft.ext.IncrementalMinHash
+import graft.util.EpochIndex
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming corpus maintenance on the SIGNATURE index — the
   * [[StreamNearDup]] loop with [[IncrementalMinHash]] in place of the
@@ -24,13 +25,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * there anyway); candidate lookups stay a broadcast semi-join on the
   * bounded candidate id set.
   *
-  * Delivery: at-least-once from the checkpoint, exactly-once for the
-  * index, the corpus store AND the pair report by epoch-keyed
-  * overwrite (a replayed batch rewrites its own `__epoch=b<batchId>`
-  * partitions in all three), and the
-  * flag pass excludes the batch's own epoch from BOTH reads, so a
-  * crash between append and checkpoint-commit replays byte-identically
-  * (no self-pairs; asserted in the spec). */
+  * Delivery: exactly-once by epoch for the index, the corpus store AND
+  * the pair report, the flag pass leaving out the batch's own epoch
+  * from BOTH reads ([[EpochFold]]; no self-pairs, asserted in the
+  * spec). The batch is pinned: the flag pass scans it several times
+  * (shingle, signature, size subplans) and both appends scan it again. */
 object StreamMinHash {
 
   /** Seed the corpus mirror with the documents the index was built
@@ -49,28 +48,16 @@ object StreamMinHash {
             idCol: String = "doc_id", textCol: String = "text",
             threshold: Double = 0.5,
             triggerInterval: String = "1 second"): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val epoch = s"b$batchId"
-        // Pin the batch: the flag pass scans it several times (shingle,
-        // signature, size subplans) and both appends scan it again.
-        batch.persist()
-        try {
-          val corpus = spark.read.parquet(corpusDir)
-            .where(col("__epoch") =!= epoch)
-            .select(col(idCol), col(textCol))
-          IncrementalMinHash.nearDupPairs(spark, indexPath, batch, corpus,
-              idCol, textCol, threshold, excludeEpochs = Seq(epoch))
-            .write.mode("overwrite").parquet(s"$outDir/__epoch=$epoch")
-          batch.select(col(idCol), col(textCol))
-            .write.mode("overwrite").parquet(s"$corpusDir/__epoch=$epoch")
-          IncrementalMinHash.appendToIndex(batch, idCol, textCol, indexPath,
-            epoch)
-        } finally { batch.unpersist(); () }
-      }
-      .start()
+    EpochFold.flagThenAppend(docs, outDir, checkpointDir, triggerInterval) {
+      (b, epoch) =>
+        val corpus = EpochIndex.without(
+            b.sparkSession.read.parquet(corpusDir), Seq(epoch.name))
+          .select(col(idCol), col(textCol))
+        IncrementalMinHash.nearDupPairs(b.sparkSession, indexPath, b, corpus,
+          idCol, textCol, threshold, excludeEpochs = Seq(epoch.name))
+    } { (b, epoch) =>
+      EpochFold.writeEpoch(b.select(col(idCol), col(textCol)), corpusDir, epoch)
+      IncrementalMinHash.appendToIndex(b, idCol, textCol, indexPath,
+        epoch.name)
+    }
 }

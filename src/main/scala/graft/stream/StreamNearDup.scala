@@ -3,7 +3,7 @@ package graft.stream
 import graft.ext.IncrementalDedup
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming corpus maintenance: each arriving micro-batch of documents
   * is checked for near-duplicates against the persisted shingle index
@@ -16,17 +16,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * sequencing here means reports are exact w.r.t. everything ingested
   * before the batch, including earlier batches of the same stream.
   *
-  * Delivery: at-least-once from the checkpoint, made exactly-once for
-  * the INDEX by epoch-keyed appends — each batch writes its postings
-  * and df partials under `__epoch=b<batchId>`, so a replayed batch
-  * overwrites its own partition dirs instead of double-counting
-  * (asserted in the spec). The report parquet is epoch-keyed the same
-  * way (readers see an `__epoch` partition column; a replay overwrites
-  * its own rows) — and the flag pass EXCLUDES the batch's own
-  * epoch from the index read (`excludeEpochs = b<batchId>`), so a
-  * replay that crashed between append and checkpoint-commit still sees
-  * exactly the pre-batch index: no self-pairs, no double-counted df
-  * partials, byte-identical replayed report rows.
+  * Delivery: exactly-once by epoch, the flag pass leaving out the
+  * batch's own epoch ([[EpochFold]]): no self-pairs, no double-counted
+  * df partials, byte-identical replayed report rows (asserted in the
+  * spec). The batch is pinned: the flag pass scans it several times
+  * (shingle, df, size subplans) and the append scans it again.
   */
 object StreamNearDup {
 
@@ -37,23 +31,10 @@ object StreamNearDup {
             checkpointDir: String, idCol: String = "doc_id",
             textCol: String = "text", threshold: Double = 0.5,
             triggerInterval: String = "1 second"): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // Pin the batch: the flag pass scans it several times (shingle,
-        // df, size subplans) and the append scans it again.
-        batch.persist()
-        try {
-          IncrementalDedup.nearDupPairs(spark, indexPath, batch,
-              idCol, textCol, threshold,
-              excludeEpochs = Seq(s"b$batchId"))
-            .write.mode("overwrite").parquet(s"$outDir/__epoch=b$batchId")
-          IncrementalDedup.appendToIndex(batch, idCol, textCol, indexPath,
-            epoch = s"b$batchId")
-        } finally { batch.unpersist(); () }
-      }
-      .start()
+    EpochFold.flagThenAppend(docs, outDir, checkpointDir, triggerInterval) {
+      (b, epoch) => IncrementalDedup.nearDupPairs(b.sparkSession, indexPath,
+        b, idCol, textCol, threshold, excludeEpochs = Seq(epoch.name))
+    } { (b, epoch) =>
+      IncrementalDedup.appendToIndex(b, idCol, textCol, indexPath, epoch.name)
+    }
 }

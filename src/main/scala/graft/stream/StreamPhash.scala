@@ -3,7 +3,8 @@ package graft.stream
 import graft.ext.{IncrementalSimHash, Multimodal}
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming image-dedup maintenance: each arriving micro-batch of
   * image blobs is pHashed map-side ([[Multimodal.imagePhash]] — blobs
@@ -15,38 +16,27 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * corpus" ingest loop. Batch semantics are oracle-gated via
   * `mm_phash_incremental` (fully live — the hash is SQL-restatable).
   *
-  * Delivery: the house exactly-once-by-epoch argument — index appends
-  * overwrite `__epoch=b<batchId>` on replay, report rows land
-  * epoch-keyed, and the probe excludes the batch's own epoch so a
-  * crashed-after-append replay reads exactly the pre-batch index
-  * (asserted in the spec). */
+  * Delivery: exactly-once by epoch, the probe leaving out the batch's
+  * own epoch ([[EpochFold]]; asserted in the spec). */
 object StreamPhash {
 
   def start(blobs: DataFrame, indexPath: String, outDir: String,
             checkpointDir: String, idCol: String = "doc_id",
             blobCol: String = "blob",
             triggerInterval: String = "1 second"): StreamingQuery =
-    blobs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // decode ONCE: probe and append both consume the fingerprints;
-        // failed decodes are excluded — a placeholder hash in the index
-        // would pair corrupt blobs with each other (and with genuinely
-        // all-dark images) as Hamming-0 dups
-        val fps = Multimodal.imagePhash(spark, batch, idCol, blobCol)
-          .where(org.apache.spark.sql.functions.col("decoded"))
-          .select(idCol, "phash")
-        fps.persist()
-        try {
-          IncrementalSimHash.nearDupPairsFingerprints(spark, indexPath,
-              fps, idCol, "phash", excludeEpochs = Seq(s"b$batchId"))
-            .write.mode("overwrite").parquet(s"$outDir/__epoch=b$batchId")
-          IncrementalSimHash.appendFingerprints(fps, idCol, "phash",
-            indexPath, epoch = s"b$batchId")
-        } finally { fps.unpersist(); () }
+    EpochFold.start(blobs, checkpointDir, triggerInterval) { (batch, epoch) =>
+      val spark = batch.sparkSession
+      // decode ONCE: probe and append both consume the pinned
+      // fingerprints; failed decodes are excluded — a placeholder hash in
+      // the index would pair corrupt blobs with each other (and with
+      // genuinely all-dark images) as Hamming-0 dups
+      EpochFold.pinned(Multimodal.imagePhash(spark, batch, idCol, blobCol)
+          .where(col("decoded")).select(idCol, "phash")) { fps =>
+        EpochFold.writeEpoch(IncrementalSimHash.nearDupPairsFingerprints(spark,
+          indexPath, fps, idCol, "phash", excludeEpochs = Seq(epoch.name)),
+          outDir, epoch)
+        IncrementalSimHash.appendFingerprints(fps, idCol, "phash", indexPath,
+          epoch.name)
       }
-      .start()
+    }
 }

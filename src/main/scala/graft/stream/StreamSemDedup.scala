@@ -3,7 +3,7 @@ package graft.stream
 import graft.ext.IncrementalSemDedup
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming SemDeDup maintenance: each arriving micro-batch of
   * embeddings is judged against the persisted clustered index
@@ -13,32 +13,22 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * cell-bucketed append, so the next batch sees this one. Batch
   * semantics are gated via `llm_semdedup_incremental_check`.
   *
-  * Delivery: at-least-once from the checkpoint, made exactly-once for
-  * both tables by epoch keying, with the flag pass excluding the
-  * batch's own epoch — the [[StreamNearDup]] argument, asserted in the
-  * spec. The index keeps EVERY vector (pruned ones included): the
-  * one-shot witness rule counts any smaller-id vector, so dropping
-  * pruned rows would silently change later verdicts. */
+  * Delivery: exactly-once by epoch, the flag pass leaving out the
+  * batch's own epoch ([[EpochFold]]; asserted in the spec). The batch
+  * is pinned (assigned twice: verdicts + append). The index keeps EVERY
+  * vector (pruned ones included): the one-shot witness rule counts any
+  * smaller-id vector, so dropping pruned rows would silently change
+  * later verdicts. */
 object StreamSemDedup {
 
   def start(vecs: DataFrame, indexPath: String, outDir: String,
             checkpointDir: String, idCol: String = "vec_id",
             vecCol: String = "embedding", tau: Double = 0.35,
             triggerInterval: String = "1 second"): StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        batch.persist() // assigned twice: verdicts + append
-        try {
-          IncrementalSemDedup.prune(spark, indexPath, batch,
-              idCol, vecCol, tau, excludeEpochs = Seq(s"b$batchId"))
-            .write.mode("overwrite").parquet(s"$outDir/__epoch=b$batchId")
-          IncrementalSemDedup.appendToIndex(batch, vecCol, indexPath,
-            epoch = s"b$batchId")
-        } finally { batch.unpersist(); () }
-      }
-      .start()
+    EpochFold.flagThenAppend(vecs, outDir, checkpointDir, triggerInterval) {
+      (b, epoch) => IncrementalSemDedup.prune(b.sparkSession, indexPath, b,
+        idCol, vecCol, tau, excludeEpochs = Seq(epoch.name))
+    } { (b, epoch) =>
+      IncrementalSemDedup.appendToIndex(b, vecCol, indexPath, epoch.name)
+    }
 }

@@ -3,7 +3,7 @@ package graft.stream
 import graft.ext.IncrementalSnapshotDiff
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming snapshot-diff maintenance: each arriving micro-batch of
   * refreshed documents is classified added/changed/unchanged against
@@ -12,36 +12,22 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * digests fold in as an O(batch) append so the next batch diffs
   * against this one — the live "what changed in the crawl" feed.
   *
-  * Delivery: at-least-once from the checkpoint, made exactly-once for
-  * BOTH tables by epoch keying — the index append overwrites its own
-  * `__epoch=b<batchId>` rows on replay, the report overwrites its own
-  * `__epoch=b<batchId>` rows, and the probe EXCLUDES the batch's own
-  * epoch from the index read, so a replay that crashed between append
-  * and checkpoint-commit still reads exactly the pre-batch state and
-  * rewrites byte-identical report rows (the [[StreamLineDedup]]
-  * argument, asserted in the spec). Batch seq is `batchId + 1`, keeping
-  * 0 for the base snapshot and preserving ingest order across restarts. */
+  * Delivery: exactly-once by epoch, the probe leaving out the batch's
+  * own epoch ([[EpochFold]]; asserted in the spec). The batch is
+  * pinned for the probe and the append. Batch seq is `batchId + 1`,
+  * keeping 0 for the base snapshot and preserving ingest order across
+  * restarts. */
 object StreamSnapshotDiff {
 
   def start(docs: DataFrame, indexPath: String, outDir: String,
             checkpointDir: String, idCol: String = "doc_id",
             textCol: String = "text",
             triggerInterval: String = "1 second"): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // probe and append each scan the batch — pin it for both
-        batch.persist()
-        try {
-          IncrementalSnapshotDiff.diffBatch(spark, indexPath, batch,
-              idCol, textCol, excludeEpochs = Seq(s"b$batchId"))
-            .write.mode("overwrite").parquet(s"$outDir/__epoch=b$batchId")
-          IncrementalSnapshotDiff.appendToIndex(batch, idCol, textCol,
-            indexPath, epoch = s"b$batchId", seq = batchId + 1)
-        } finally { batch.unpersist(); () }
-      }
-      .start()
+    EpochFold.flagThenAppend(docs, outDir, checkpointDir, triggerInterval) {
+      (b, epoch) => IncrementalSnapshotDiff.diffBatch(b.sparkSession,
+        indexPath, b, idCol, textCol, excludeEpochs = Seq(epoch.name))
+    } { (b, epoch) =>
+      IncrementalSnapshotDiff.appendToIndex(b, idCol, textCol, indexPath,
+        epoch.name, seq = epoch.batchId + 1)
+    }
 }

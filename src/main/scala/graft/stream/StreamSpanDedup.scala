@@ -3,7 +3,7 @@ package graft.stream
 import graft.ext.IncrementalSpanDedup
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming span-level dedup maintenance: each arriving micro-batch of
   * documents is checked for duplicated SPANS against the persisted
@@ -14,36 +14,21 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * The streaming form of the passage-dedup ingest loop; batch semantics
   * are oracle-gated via `llm_span_dedup_incremental`.
   *
-  * Delivery: at-least-once from the checkpoint, made exactly-once for
-  * BOTH tables by epoch keying — the index append overwrites its own
-  * `__epoch=b<batchId>` partials on replay, the report overwrites its
-  * own `__epoch=b<batchId>` rows, and the flag pass EXCLUDES the
-  * batch's own epoch from the index read, so a replay that crashed
-  * between append and checkpoint-commit still reads exactly the
-  * pre-batch index and rewrites byte-identical report rows (the
-  * [[StreamNearDup]] argument, asserted in the spec). */
+  * Delivery: exactly-once by epoch, the flag pass leaving out the
+  * batch's own epoch ([[EpochFold]]; asserted in the spec). The batch
+  * is pinned: the flag pass windows it twice (counts + hits) and the
+  * append windows it again. */
 object StreamSpanDedup {
 
   def start(docs: DataFrame, indexPath: String, outDir: String,
             checkpointDir: String, idCol: String = "doc_id",
             textCol: String = "text",
             triggerInterval: String = "1 second"): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // the flag pass windows the batch twice (counts + hits) and the
-        // append windows it again — pin it for the three scans
-        batch.persist()
-        try {
-          IncrementalSpanDedup.spans(spark, indexPath, batch,
-              idCol, textCol, excludeEpochs = Seq(s"b$batchId"))
-            .write.mode("overwrite").parquet(s"$outDir/__epoch=b$batchId")
-          IncrementalSpanDedup.appendToIndex(batch, idCol, textCol,
-            indexPath, epoch = s"b$batchId")
-        } finally { batch.unpersist(); () }
-      }
-      .start()
+    EpochFold.flagThenAppend(docs, outDir, checkpointDir, triggerInterval) {
+      (b, epoch) => IncrementalSpanDedup.spans(b.sparkSession, indexPath, b,
+        idCol, textCol, excludeEpochs = Seq(epoch.name))
+    } { (b, epoch) =>
+      IncrementalSpanDedup.appendToIndex(b, idCol, textCol, indexPath,
+        epoch.name)
+    }
 }

@@ -3,7 +3,7 @@ package graft.stream
 import graft.sink.ZOrderLayout
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming ingestion into a z-order clustered table — the write path
   * that keeps an analytics layout queryable while data arrives: each
@@ -16,18 +16,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * append-then-recluster loop, bounding small-file count and pruning
   * looseness at ONE recluster per N batches instead of per write.
   *
-  * Delivery: at-least-once from the checkpoint, exactly-once for the
-  * table by epoch-keyed overwrite (a replayed batch rewrites its own
-  * `__epoch=b<batchId>` data and manifest partitions — asserted in the
-  * spec). The recluster runs BEFORE the append and preserves the
-  * current batch's epoch ([[ZOrderLayout.optimize]]'s
-  * `preserveEpochs`): committed epochs fold exactly once
-  * (re-clustering them again on replay is a content-preserving
-  * rewrite), and a crashed attempt's own leftover epoch is never
-  * folded — the re-append overwrites it instead. A crash in the
-  * MIDDLE of the recluster's directory swap is rolled forward by the
-  * layout itself ([[ZOrderLayout]]'s `recoverSwap`, run by every
-  * reader entry), so the replayed batch finds a complete table.
+  * Delivery: exactly-once by epoch ([[EpochFold]]). The recluster runs
+  * BEFORE the append and preserves the current batch's epoch
+  * ([[ZOrderLayout.optimize]]'s `preserveEpochs`): committed epochs
+  * fold exactly once (re-clustering them again on replay is a
+  * content-preserving rewrite), and a crashed attempt's own leftover
+  * epoch is never folded — the re-append overwrites it instead. A crash
+  * in the MIDDLE of the recluster's directory swap is rolled forward by
+  * the layout itself (every reader entry recovers the swap), so the
+  * replayed batch finds a complete table.
   *
   * Boundaries: APPENDS always use the stored quantile boundaries (the
   * append contract — one key space for every file between
@@ -50,21 +47,17 @@ object StreamZOrder {
             targetFiles: Int = 64,
             rederiveBoundaries: Boolean = false,
             triggerInterval: String = "1 second"): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Recluster BEFORE the append, preserving the current epoch:
-        // every batch below this id is checkpoint-committed by
-        // definition, so folding them is safe; a crashed attempt of
-        // THIS batch may have left its epoch on disk, and folding it
-        // before the re-append below would duplicate its rows.
-        if (optimizeEvery > 0 && batchId > 0 && batchId % optimizeEvery == 0)
-          ZOrderLayout.optimize(batch.sparkSession, tablePath, targetFiles,
-            preserveEpochs = Seq(s"b$batchId"),
-            rederiveBoundaries = rederiveBoundaries)
-        ZOrderLayout.append(batch, tablePath, s"b$batchId", batchFiles)
-      }
-      .start()
+    EpochFold.start(rows, checkpointDir, triggerInterval) { (batch, epoch) =>
+      // Recluster BEFORE the append, preserving the current epoch:
+      // every batch below this id is checkpoint-committed by
+      // definition, so folding them is safe; a crashed attempt of
+      // THIS batch may have left its epoch on disk, and folding it
+      // before the re-append below would duplicate its rows.
+      val id = epoch.batchId
+      if (optimizeEvery > 0 && id > 0 && id % optimizeEvery == 0)
+        ZOrderLayout.optimize(batch.sparkSession, tablePath, targetFiles,
+          preserveEpochs = Seq(epoch.name),
+          rederiveBoundaries = rederiveBoundaries)
+      ZOrderLayout.append(batch, tablePath, epoch.name, batchFiles)
+    }
 }

@@ -3,8 +3,8 @@ package graft.util
 import org.apache.spark.sql.SparkSession
 
 /** Crash-safe atomic-enough replacement of a set of table directories
-  * with staged counterparts — the [[graft.sink.ZOrderLayout]] swap
-  * generalized for the incremental-index compactions. The writer stages
+  * with staged counterparts — the swap behind [[EpochIndex]] compaction
+  * and [[graft.sink.ZOrderLayout]]'s optimize. The writer stages
   * complete replacements under `__compact/<table>`, then [[swap]]
   * renames the old dirs aside and the staged dirs in, in an order that
   * makes every crash state unambiguous:
@@ -32,9 +32,7 @@ final class StagedSwap(spark: SparkSession, root: String,
   /** Where the writer stages a table's replacement. */
   def stagedDir(table: String): String = fs.str(s"__compact/$table")
 
-  def swap(): Unit = swapImpl(Int.MaxValue)
-
-  private[graft] def swapImpl(crashAtRename: Int): Unit = {
+  def swap(crashAtRename: Int): Unit = {
     require(fs.exists(s"__compact/$sentinel"),
       s"swap: staged sentinel __compact/$sentinel missing")
     others.foreach(d => require(fs.exists(s"__compact/$d"),
