@@ -65,15 +65,12 @@ object CdcNormalize {
       knownNonEmpty, materialize = false).map(_._1)
 
   /** The pipeline's hot-path variant: identical output and identical
-    * refresh semantics, but the parsed batch is PERSISTED and the
-    * cached-schema corrupt check becomes an exact `count` over the
+    * refresh semantics, but the parsed batch is PERSISTED instead of
+    * staged, and the cached-schema corrupt count doubles as the
     * cache-materializing scan — so the batch's JSON is parsed exactly
-    * once per table per trigger (the old probe's `limit(1).isEmpty`
-    * scanned the WHOLE routed set re-parsing JSON whenever there were
-    * zero corrupt records — the steady state — and the sink's write
-    * then parsed everything a second time). Returns the normalized
-    * frame plus `release()`, which the caller MUST invoke after its
-    * sink action to unpersist the parse cache. */
+    * once per table per trigger. Returns the normalized frame plus
+    * `release()`, which the caller MUST invoke after its sink action to
+    * unpersist the parse cache. */
   def normalizeMaterialized(spark: SparkSession, raw: DataFrame, format: CdcFormat,
                             table: SyncTable,
                             mode: SchemaInference.Mode = SchemaInference.Mode.InferAlways,
@@ -94,9 +91,7 @@ object CdcNormalize {
                     materialize: Boolean): Option[(DataFrame, Option[DataFrame])] = {
     import spark.implicits._
     val routed0 = raw.where(CdcRouter.substringMatch(col("value"), format, table))
-    if (!knownNonEmpty &&
-        graft.util.StageProf.timed("normalize.routeEmpty")(routed0.isEmpty))
-      return None
+    if (!knownNonEmpty && routed0.isEmpty) return None
 
     val values = routed0.select(col("value")).as[String]
     // Cache key includes the dialect: the same logical table consumed in
@@ -110,66 +105,47 @@ object CdcNormalize {
         SchemaInference.refresh(spark, cacheKey, values)
       else SchemaInference.forTable(spark, cacheKey, values, mode))
 
+    var cached: Option[DataFrame] = None
+    // Parse with a corrupt-record sidecar so malformed-vs-schema records
+    // are observable; projections below never reference CorruptCol, so
+    // Catalyst prunes it out of the final plan. The parse is pinned, so
+    // the probe, the normalize projection and the caller's sink read one
+    // parse pass: the materialized path persists it (its caller releases
+    // it; parity mode, with no probe, leaves it to the sink's one scan),
+    // the other STAGES it. Without that barrier the normalize filter on
+    // kdata.op (Debezium) / kdata.metadata (DMS) pushes below the
+    // projection and inlines the from_json, evaluating the full envelope
+    // parse twice per row.
     def parseWith(s: StructType): DataFrame = {
-      // Parse with a corrupt-record sidecar so malformed-vs-schema records
-      // are observable; projections below never reference CorruptCol, so
-      // Catalyst prunes it out of the final plan.
       val withCorrupt = StructType(s.fields :+ StructField(CorruptCol, StringType, nullable = true))
       val p = routed0.select(
         from_json(col("value"), withCorrupt,
           Map("columnNameOfCorruptRecord" -> CorruptCol)).as("kdata"),
         col("value"))
-      // Non-materialized path: STAGE the parsed batch. Without the
-      // barrier the normalize filter on kdata.op (Debezium) /
-      // kdata.metadata (DMS) pushes below this projection and inlines
-      // the from_json — the r17 before-plan evaluated the FULL envelope
-      // parse twice per row (once in the pushed Filter, once in the
-      // Project), and in Cached mode the corrupt probe re-parsed the
-      // whole routed set a third time. One parse pass, every consumer
-      // (probe + normalize + the query's sink) reads the materialized
-      // batch — the batch-query analog of normalizeMaterialized's
-      // persist, which the materialize path keeps (its caller needs the
-      // release() handle, and persist-then-unpersist is the streaming
-      // trigger's lifecycle).
-      if (materialize) p else graft.util.Checkpoints.stage(p)
+      if (!materialize) graft.util.Checkpoints.stage(p)
+      else if (mode == SchemaInference.Mode.Cached) { cached = Some(p.persist()); p }
+      else p
     }
+    // Records that no longer parse against the cached schema, counted
+    // through the RDD: a single job with no shuffle, where a DataFrame
+    // `count()` is an aggregate that adaptive execution splits into
+    // three (cache materialization, map stage, result stage).
+    def corrupt(p: DataFrame): Long =
+      p.where(col("kdata").getField(CorruptCol).isNotNull).select(lit(1)).rdd.count()
     var parsed = parseWith(schema)
-    var cached: Option[DataFrame] = None
 
-    // Cached-mode revalidation: probe for records that fail to parse
-    // against the cached schema and re-infer (old ∪ new) once if found.
-    // Note this catches records the cached schema cannot parse; *additive*
+    // Cached-mode revalidation: count the records that fail to parse
+    // against the cached schema and re-infer (old ∪ new) once if any do.
+    // This catches records the cached schema cannot parse; *additive*
     // evolution (new optional JSON fields) parses cleanly and is picked up
     // by the pipeline's periodic refresh instead
-    // (CdcPipeline.revalidateEvery). In materialize mode the probe doubles
-    // as the cache-materializing scan: identical refresh decision, one
-    // JSON parse total. It counts through the RDD, a single job with no
-    // shuffle, where a DataFrame `count()` is an aggregate that adaptive
-    // execution splits into three (cache materialization, map stage,
-    // result stage).
-    if (mode == SchemaInference.Mode.Cached) {
-      if (materialize) {
-        def probeCached(p: DataFrame): Long = {
-          p.persist()
-          cached = Some(p)
-          graft.util.StageProf.timed("normalize.corruptCount")(
-            p.where(col("kdata").getField(CorruptCol).isNotNull).select(lit(1)).rdd.count())
-        }
-        if (probeCached(parsed) > 0) {
-          cached.foreach(_.unpersist())
-          schema = parseSchema(SchemaInference.refresh(spark, cacheKey, values))
-          parsed = parseWith(schema)
-          probeCached(parsed)
-        }
-      } else {
-        // not persisted: the first failing record suffices
-        val failed = graft.util.StageProf.timed("normalize.corruptProbe")(!parsed
-          .where(col("kdata").getField(CorruptCol).isNotNull).limit(1).isEmpty)
-        if (failed) {
-          schema = parseSchema(SchemaInference.refresh(spark, cacheKey, values))
-          parsed = parseWith(schema)
-        }
-      }
+    // (CdcPipeline.revalidateEvery). The count also fills the persisted
+    // parse, so a re-parse is counted again for the same reason.
+    if (mode == SchemaInference.Mode.Cached && corrupt(parsed) > 0) {
+      cached.foreach(_.unpersist())
+      schema = parseSchema(SchemaInference.refresh(spark, cacheKey, values))
+      parsed = parseWith(schema)
+      if (materialize) corrupt(parsed)
     }
 
     val routed =
@@ -182,9 +158,8 @@ object CdcNormalize {
       case _                       => normalizeDebezium(routed, schema)
     }
     // A table whose routed rows carry no usable envelope (normalized =
-    // None) must still release its cache — hand it back for the caller
-    // either way; None short-circuits before any persist happened only
-    // in the routeEmpty case.
+    // None) must still release its cache; only the early None, when no
+    // record routes here, returns before anything was persisted.
     if (normalized.isEmpty) cached.foreach(_.unpersist())
     normalized.map(df => (df, cached))
   }

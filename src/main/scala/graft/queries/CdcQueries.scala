@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.cdc._
-import graft.sink.{BucketedUpsertTable, KeyedUpsertTable}
+import graft.sink.{BucketedUpsertTable, KeyedUpsertTable, MorUpsertTable, UpsertSink}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -265,10 +265,10 @@ object CdcQueries {
       .orderBy("id")
   }
 
-  /** Two-batch keyed-upsert merge (K1): events split by time into two
-    * micro-batches, applied sequentially through the merge plan — final
-    * state must equal the one-shot latest-per-key (merge associativity,
-    * the effectively-exactly-once argument of SURVEY.md §2.9).
+  /** The seven two-batch rows: the shared Debezium normalize split by
+    * time into two micro-batches, applied in order by `apply` (a pure
+    * merge fold, or upserts into a sink followed by a read of its
+    * state), projected onto `cols` and sorted by `order`.
     *
     * The split MUST be time-monotone (all of b2 newer than b1): a delete
     * tombstone is dropped from the materialized state after its batch, so
@@ -277,19 +277,35 @@ object CdcQueries {
     * would diverge from the one-shot oracle. The literal boundary is the
     * testdata's mid-month (events span Jan 2024, TESTDATA.md); a skewed
     * split at another sf stays correct, just less interesting. */
-  def keyedUpsertMerge(spark: SparkSession, sfDir: String): DataFrame = {
+  private def twoBatches(spark: SparkSession, sfDir: String,
+                         cols: Seq[String] = Seq("id", "event_id", "etype", "value",
+                           CdcNormalize.MtimeCol),
+                         order: Seq[String] = Seq("id"))
+                        (apply: Seq[DataFrame] => DataFrame): DataFrame = {
     val normalized = normalizedDebeziumShared(spark, sfDir)
     val boundaryMs = 1705276800000L // 2024-01-15 00:00:00 UTC
-    val b1 = normalized.where(col(CdcNormalize.MtimeCol) < boundaryMs)
-    val b2 = normalized.where(col(CdcNormalize.MtimeCol) >= boundaryMs)
-    val keys = Seq("id")
-    val state1 = KeyedUpsertTable.merge(None, b1, keys,
-      CdcNormalize.MtimeCol, tiebreak = Seq("event_id"))
-    val state2 = KeyedUpsertTable.merge(Some(state1), b2, keys,
-      CdcNormalize.MtimeCol, tiebreak = Seq("event_id"))
-    state2.select("id", "event_id", "etype", "value", CdcNormalize.MtimeCol)
-      .orderBy("id")
+    val batches = Seq(normalized.where(col(CdcNormalize.MtimeCol) < boundaryMs),
+      normalized.where(col(CdcNormalize.MtimeCol) >= boundaryMs))
+    apply(batches).select(cols.map(col): _*).orderBy(order.map(col): _*)
   }
+
+  /** Fold the batches through [[KeyedUpsertTable.merge]] on `keys`. */
+  private def merged(keys: Seq[String])(batches: Seq[DataFrame]): DataFrame =
+    batches.foldLeft(Option.empty[DataFrame])((state, b) => Some(KeyedUpsertTable.merge(
+      state, b, keys, CdcNormalize.MtimeCol, tiebreak = Seq("event_id")))).get
+
+  /** Upsert the batches into `sink`, then read `state`. */
+  private def upserted(sink: UpsertSink)(state: => DataFrame)(batches: Seq[DataFrame]): DataFrame = {
+    batches.foreach(sink.upsert)
+    state
+  }
+
+  /** Two-batch keyed-upsert merge (K1): applied sequentially through the
+    * merge plan — final state must equal the one-shot latest-per-key
+    * (merge associativity, the effectively-exactly-once argument of
+    * SURVEY.md §2.9). */
+  def keyedUpsertMerge(spark: SparkSession, sfDir: String): DataFrame =
+    twoBatches(spark, sfDir)(merged(Seq("id")))
 
   /** Composite-primary-key end-to-end (ref `glue/cdc_hudi.py:148,157`:
     * `primary_key` is comma-split into a multi-column record key). The
@@ -297,23 +313,12 @@ object CdcQueries {
     * two-batch merge all run off `pkCols`, so the comma-split config
     * path is exercised from properties text to merged state. Every
     * purchase row is a delete, so (id,'purchase') keys never survive —
-    * the oracle partitions by BOTH columns and drops purchases. */
-  def compositeKeyMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    val table = SyncTable("test_db", "user", "id,etype")
-    // normalize is primary-key-independent (routing keys on db/table only),
-    // so the shared parsed plan serves here too; the comma-split pkCols
-    // drive the merge below.
-    val normalized = normalizedDebeziumShared(spark, sfDir)
-    val boundaryMs = 1705276800000L // 2024-01-15, see keyedUpsertMerge
-    val b1 = normalized.where(col(CdcNormalize.MtimeCol) < boundaryMs)
-    val b2 = normalized.where(col(CdcNormalize.MtimeCol) >= boundaryMs)
-    val state1 = KeyedUpsertTable.merge(None, b1, table.pkCols,
-      CdcNormalize.MtimeCol, tiebreak = Seq("event_id"))
-    val state2 = KeyedUpsertTable.merge(Some(state1), b2, table.pkCols,
-      CdcNormalize.MtimeCol, tiebreak = Seq("event_id"))
-    state2.select("id", "etype", "event_id", "value", CdcNormalize.MtimeCol)
-      .orderBy("id", "etype")
-  }
+    * the oracle partitions by BOTH columns and drops purchases. Normalize
+    * is primary-key-independent (routing keys on db/table only), so the
+    * shared parsed plan serves here too. */
+  def compositeKeyMerge(spark: SparkSession, sfDir: String): DataFrame =
+    twoBatches(spark, sfDir, Seq("id", "etype", "event_id", "value", CdcNormalize.MtimeCol),
+      Seq("id", "etype"))(merged(SyncTable("test_db", "user", "id,etype").pkCols))
 
   /** Catalog-sync end-to-end (the hive-sync equivalent,
     * `glue/cdc_hudi.py:190-194`): the same two-batch upsert as
@@ -323,18 +328,10 @@ object CdcQueries {
     * reference user does after hive-sync (`SELECT * FROM cdc_db.user`).
     * Shares the keyed-upsert oracle: the by-name read must equal the
     * by-path merge state. */
-  def catalogTableRead(spark: SparkSession, sfDir: String): DataFrame = {
-    val normalized = normalizedDebeziumShared(spark, sfDir)
-    val boundaryMs = 1705276800000L // 2024-01-15 00:00:00 UTC, see keyedUpsertMerge
-    val root = tempSinkDir("graft-catalog-sink")
-    val t = new KeyedUpsertTable(spark, root.toString, Seq("id"),
-      tiebreak = Seq("event_id"), catalogTable = Some("cdc_db.user_merged"))
-    t.upsert(normalized.where(col(CdcNormalize.MtimeCol) < boundaryMs))
-    t.upsert(normalized.where(col(CdcNormalize.MtimeCol) >= boundaryMs))
-    spark.table("cdc_db.user_merged")
-      .select("id", "event_id", "etype", "value", CdcNormalize.MtimeCol)
-      .orderBy("id")
-  }
+  def catalogTableRead(spark: SparkSession, sfDir: String): DataFrame =
+    twoBatches(spark, sfDir)(upserted(new KeyedUpsertTable(spark,
+      tempSinkDir("graft-catalog-sink").toString, Seq("id"), tiebreak = Seq("event_id"),
+      catalogTable = Some("cdc_db.user_merged")))(spark.table("cdc_db.user_merged")))
 
   /** Incremental (bucketed) sink end-to-end: the same two time-monotone
     * batches as [[keyedUpsertMerge]] applied through a real
@@ -343,16 +340,9 @@ object CdcQueries {
     * exactly (the incremental layout is an optimization, never a
     * semantics change). */
   def bucketedMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    val normalized = normalizedDebeziumShared(spark, sfDir)
-    val boundaryMs = 1705276800000L // 2024-01-15, see keyedUpsertMerge
-    val root = tempSinkDir("graft-bucketed-sink")
-    val t = new BucketedUpsertTable(spark, root.toString, Seq("id"),
-      nBuckets = 8, tiebreak = Seq("event_id"))
-    t.upsert(normalized.where(col(CdcNormalize.MtimeCol) < boundaryMs))
-    t.upsert(normalized.where(col(CdcNormalize.MtimeCol) >= boundaryMs))
-    t.read().get
-      .select("id", "event_id", "etype", "value", CdcNormalize.MtimeCol)
-      .orderBy("id")
+    val t = new BucketedUpsertTable(spark, tempSinkDir("graft-bucketed-sink").toString,
+      Seq("id"), nBuckets = 8, tiebreak = Seq("event_id"))
+    twoBatches(spark, sfDir)(upserted(t)(t.read().get))
   }
 
   /** Same two-batch upsert through the LOG-STRUCTURED (merge-on-read)
@@ -362,16 +352,9 @@ object CdcQueries {
     * unique, so the MOR commit-tiebreak never fires here — shares the
     * bucketed-merge oracle byte for byte). */
   def morMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    val normalized = normalizedDebeziumShared(spark, sfDir)
-    val boundaryMs = 1705276800000L // 2024-01-15, see keyedUpsertMerge
-    val root = tempSinkDir("graft-mor-sink")
-    val t = new graft.sink.MorUpsertTable(spark, root.toString, Seq("id"),
+    val t = new MorUpsertTable(spark, tempSinkDir("graft-mor-sink").toString, Seq("id"),
       nBuckets = 8, tiebreak = Seq("event_id"))
-    t.upsert(normalized.where(col(CdcNormalize.MtimeCol) < boundaryMs))
-    t.upsert(normalized.where(col(CdcNormalize.MtimeCol) >= boundaryMs))
-    t.read().get
-      .select("id", "event_id", "etype", "value", CdcNormalize.MtimeCol)
-      .orderBy("id")
+    twoBatches(spark, sfDir)(upserted(t)(t.read().get))
   }
 
   /** Catalog sync for the LOG-STRUCTURED layout: same two-batch upsert
@@ -379,19 +362,11 @@ object CdcQueries {
     * view carries the log fold itself (row_number over version +
     * commit, tombstones dropped), Hudi MOR's snapshot query. Shares the
     * merge oracle. */
-  def morCatalogRead(spark: SparkSession, sfDir: String): DataFrame = {
-    val normalized = normalizedDebeziumShared(spark, sfDir)
-    val boundaryMs = 1705276800000L // 2024-01-15, see keyedUpsertMerge
-    val root = tempSinkDir("graft-mor-catalog")
-    val t = new graft.sink.MorUpsertTable(spark, root.toString, Seq("id"),
-      nBuckets = 8, tiebreak = Seq("event_id"),
-      catalogTable = Some("cdc_db.user_mor"))
-    t.upsert(normalized.where(col(CdcNormalize.MtimeCol) < boundaryMs))
-    t.upsert(normalized.where(col(CdcNormalize.MtimeCol) >= boundaryMs))
-    spark.table("cdc_db.user_mor")
-      .select("id", "event_id", "etype", "value", CdcNormalize.MtimeCol)
-      .orderBy("id")
-  }
+  def morCatalogRead(spark: SparkSession, sfDir: String): DataFrame =
+    twoBatches(spark, sfDir)(upserted(new MorUpsertTable(spark,
+      tempSinkDir("graft-mor-catalog").toString, Seq("id"), nBuckets = 8,
+      tiebreak = Seq("event_id"), catalogTable = Some("cdc_db.user_mor")))(
+      spark.table("cdc_db.user_mor")))
 
   /** Catalog sync for the INCREMENTAL layout — the 100 TB configuration
     * must also serve `SELECT * FROM cdc_db.<table>` (the reference
@@ -401,19 +376,11 @@ object CdcQueries {
     * commit (touched buckets only), so the by-name read exercises the
     * view-over-manifest sync path across a mixed-commit-age manifest.
     * Shares the bucketed-merge oracle. */
-  def bucketedCatalogRead(spark: SparkSession, sfDir: String): DataFrame = {
-    val normalized = normalizedDebeziumShared(spark, sfDir)
-    val boundaryMs = 1705276800000L // 2024-01-15, see keyedUpsertMerge
-    val root = tempSinkDir("graft-bucketed-catalog")
-    val t = new BucketedUpsertTable(spark, root.toString, Seq("id"),
-      nBuckets = 8, tiebreak = Seq("event_id"),
-      catalogTable = Some("cdc_db.user_bucketed"))
-    t.upsert(normalized.where(col(CdcNormalize.MtimeCol) < boundaryMs))
-    t.upsert(normalized.where(col(CdcNormalize.MtimeCol) >= boundaryMs))
-    spark.table("cdc_db.user_bucketed")
-      .select("id", "event_id", "etype", "value", CdcNormalize.MtimeCol)
-      .orderBy("id")
-  }
+  def bucketedCatalogRead(spark: SparkSession, sfDir: String): DataFrame =
+    twoBatches(spark, sfDir)(upserted(new BucketedUpsertTable(spark,
+      tempSinkDir("graft-bucketed-catalog").toString, Seq("id"), nBuckets = 8,
+      tiebreak = Seq("event_id"), catalogTable = Some("cdc_db.user_bucketed")))(
+      spark.table("cdc_db.user_bucketed")))
 
   /** Temp sink roots for the materializing queries, deleted on JVM exit
     * so repeated in-process bench/verify runs don't accumulate tmp dirs. */

@@ -67,7 +67,9 @@ trait CatalogSync {
   * by another root or binding is never trusted. Each publish drops the
   * view's directory tables that neither it nor the view's previous
   * publish references, so readers of the replaced view keep theirs,
-  * matching the sinks' retention of the previous snapshot. A published
+  * matching the sinks' retention of the previous snapshot; a view's
+  * first publish through a binding drops none, since the binding does
+  * not know what the replaced view read. A published
   * commit directory must not change (the sinks never reuse a commit id
   * once their pointer names it): the cached listing trusts it. */
 final class SessionCatalogSync(spark: SparkSession) extends CatalogSync {
@@ -156,14 +158,19 @@ final class SessionCatalogSync(spark: SparkSession) extends CatalogSync {
     ensureDatabase(parts)
     spark.sql(s"CREATE OR REPLACE VIEW ${quoted(parts)} AS $selectBody")
     val now = Option(pending.remove(parts)).getOrElse(Set.empty[String])
-    val keep = now ++ Option(referenced.put(parts, now)).getOrElse(Set.empty[String])
-    val db = databaseOf(parts)
-    val owner = parts.mkString(".")
-    val candidates = sessionCatalog
-      .listTables(db, s"${parts.last}__*", includeLocalTempViews = false)
-      .filterNot(id => keep.exists(_.equalsIgnoreCase(id.table)))
-    sessionCatalog.getTablesByName(candidates)
-      .filter(_.properties.get(OwnerKey).exists(_.equalsIgnoreCase(owner)))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${quoted(Seq(db, t.identifier.table))}"))
+    // The first publish through this binding does not know what the
+    // replaced view read (an earlier binding, e.g. before a restart,
+    // published it), so it drops nothing.
+    Option(referenced.put(parts, now)).foreach { previous =>
+      val keep = now ++ previous
+      val db = databaseOf(parts)
+      val owner = parts.mkString(".")
+      val candidates = sessionCatalog
+        .listTables(db, s"${parts.last}__*", includeLocalTempViews = false)
+        .filterNot(id => keep.exists(_.equalsIgnoreCase(id.table)))
+      sessionCatalog.getTablesByName(candidates)
+        .filter(_.properties.get(OwnerKey).exists(_.equalsIgnoreCase(owner)))
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${quoted(Seq(db, t.identifier.table))}"))
+    }
   }
 }

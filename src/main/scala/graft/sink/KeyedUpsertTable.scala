@@ -75,10 +75,6 @@ final class KeyedUpsertTable(
     * on the same filesystem as the data ([[graft.util.TableFs]]). */
   private val tfs = new TableFs(root, spark.sparkContext.hadoopConfiguration)
 
-  /** Source-rank column: incoming (1) beats stored (0) on version ties,
-    * matching DefaultHoodieRecordPayload's >= comparison. */
-  private val SrcCol = "__graft_src"
-
   /** Name of the snapshot directory currently visible to readers. */
   def currentSnapshot(): Option[String] = Snapshots.current(tfs)
 
@@ -99,10 +95,6 @@ final class KeyedUpsertTable(
           df
       }
     }
-
-  def readOrEmpty(like: DataFrame): DataFrame =
-    read().getOrElse(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], like.schema))
 
   /** Point-lookup read on the COW layout: the current state for exactly
     * the keys in `keysDf`. The COW table has no bucket structure to
@@ -140,9 +132,7 @@ final class KeyedUpsertTable(
   /** Apply one batch of change rows (payload ++ mtime ++
     * `_hoodie_is_deleted`). Pure-plan merge; one action (the write). */
   def upsert(batch: DataFrame): Unit = {
-    val stored = graft.util.StageProf.timed("sink.readSnapshot")(read())
-    val merged = KeyedUpsertTable.merge(stored, batch, keys, versionCol, tiebreak)
-    commit(merged)
+    commit(KeyedUpsertTable.merge(read(), batch, keys, versionCol, tiebreak))
   }
 
   /** Atomically publish a new snapshot: write to a fresh directory, then
@@ -151,8 +141,7 @@ final class KeyedUpsertTable(
   private def commit(df: DataFrame): Unit = {
     tfs.mkdirs("")
     val next = "snap-" + Snapshots.nextId(currentSnapshot())
-    graft.util.StageProf.timed("sink.commitWrite")(
-      df.write.mode("overwrite").parquet(tfs.str(next)))
+    df.write.mode("overwrite").parquet(tfs.str(next))
     tfs.swapPointer("_current", next)
     known = Some(next -> ParquetSchema.asRead(df.schema))
     syncCatalog()
@@ -196,21 +185,28 @@ object KeyedUpsertTable {
   def merge(stored: Option[DataFrame], batch: DataFrame, keys: Seq[String],
             versionCol: String, tiebreak: Seq[String] = Nil): DataFrame = {
     val src = "__graft_src"
-    val version = col(versionCol) +: tiebreak.map(col)
     val deduped = stored match {
-      case None =>
-        LatestPerKey.maxBy(batch, keys, version)
+      case None => latest(batch, keys, versionCol, tiebreak)
       case Some(s) =>
         val target = SchemaInference.mergeStructs(s.schema, batch.schema)
         val union = align(s, target).withColumn(src, lit(0))
           .unionByName(align(batch, target).withColumn(src, lit(1)))
-        // Source rank last: incoming beats stored only on full version
-        // ties (DefaultHoodieRecordPayload's >= comparison).
-        LatestPerKey.maxBy(union, keys, version :+ col(src))
-          .drop(src)
+        // incoming (1) beats stored (0) only on full version ties
+        // (DefaultHoodieRecordPayload's >= comparison)
+        latest(union, keys, versionCol, tiebreak, rank = Some(src)).drop(src)
     }
     deduped.where(!col(CdcNormalize.DeletedCol))
   }
+
+  /** The latest-wins rule both keyed sinks merge by: the survivor per key
+    * is the `max_by` over (version, tiebreak…, rank). Version dominates;
+    * `rank` breaks full ties, later writes ranking higher: the COW
+    * merge's incoming-over-stored rank, the bucketed sink's commit
+    * sequence. In-batch dedup has no rank. Tombstones survive; the
+    * caller drops them. */
+  private[sink] def latest(rows: DataFrame, keys: Seq[String], versionCol: String,
+                           tiebreak: Seq[String], rank: Option[String] = None): DataFrame =
+    LatestPerKey.maxBy(rows, keys, ((versionCol +: tiebreak) ++ rank).map(col))
 
   /** Project `df` onto `target`: null-pad missing columns, cast widened
     * ones, keep `target` field order for a stable union. Shared with

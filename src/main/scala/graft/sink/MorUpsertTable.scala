@@ -1,6 +1,6 @@
 package graft.sink
 
-import graft.cdc.{CdcNormalize, LatestPerKey, SchemaInference}
+import graft.cdc.{CdcNormalize, SchemaInference}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
@@ -224,10 +224,16 @@ class MorUpsertTable(
     case Some(rows) =>
       val wanted = keysDf.fold(rows)(k =>
         rows.join(broadcast(k.select(keys.map(col): _*).distinct()), keys, "left_semi"))
-      val live = if (m.folded) MorUpsertTable.logMerge(wanted, keys, versionCol, tiebreak, CommitCol)
-                 else wanted
+      val live = if (m.folded) fold(wanted) else wanted
       live.where(!col(CdcNormalize.DeletedCol)).drop(CommitCol)
   }
+
+  /** The log fold (the R in MOR): survivor per key by
+    * [[KeyedUpsertTable.latest]] ranked by commit, so a later batch wins
+    * a full version tie. Tombstones survive it: [[read]] masks them,
+    * compaction erases them. */
+  private def fold(rows: DataFrame): DataFrame =
+    KeyedUpsertTable.latest(rows, keys, versionCol, tiebreak, rank = Some(CommitCol))
 
   /** Bounded planning collect: the bucket ids `df`'s keys hash into. */
   private def bucketsOf(df: DataFrame): Set[Int] =
@@ -254,7 +260,7 @@ class MorUpsertTable(
     val target = SchemaInference.mergeStructs(stored.getOrElse(batch.schema), batch.schema)
     val evolved = stored.exists(_ != target)
     val dataDir = s"data/commit-$commitId"
-    def deduped = LatestPerKey.maxBy(batch, keys, (versionCol +: tiebreak).map(col))
+    def deduped = KeyedUpsertTable.latest(batch, keys, versionCol, tiebreak)
       .withColumn(CommitCol, lit(commitId))
 
     val chains: Map[Int, Seq[String]] = m match {
@@ -320,8 +326,7 @@ class MorUpsertTable(
     val stored = m.flatMap(s => scanAll(s.copy(buckets = chains)))
     val rows = (stored ++ incoming).map(KeyedUpsertTable.align(_, storage(target)))
       .reduce(_ unionByName _)
-    val survivors = MorUpsertTable.logMerge(rows, keys, versionCol, tiebreak, CommitCol)
-      .where(!col(CdcNormalize.DeletedCol))
+    val survivors = fold(rows).where(!col(CdcNormalize.DeletedCol))
     // merge on write stores no commit: each of its stored rows is older
     // than every later batch, and the null it reads back loses every tie
     writeBucketed(if (compactAfter == 1) survivors.drop(CommitCol) else survivors, dataDir)
@@ -395,19 +400,4 @@ class MorUpsertTable(
       .filter(name => !referenced.contains(s"data/$name"))
       .foreach(name => tfs.deleteRecursively(s"data/$name"))
   }
-}
-
-object MorUpsertTable {
-
-  /** The MOR log fold as one aggregate: survivor per key = `max_by`
-    * over (version, tiebreak…, commit). Version dominates; commit order
-    * breaks full ties (later batch supersedes — the same rule as the
-    * COW merge's incoming-beats-stored source rank, generalized to a
-    * whole log). Tombstones survive the fold and are dropped by the
-    * caller (read keeps the mask cheap; compaction erases for good). */
-  private[sink] def logMerge(rows: DataFrame, keys: Seq[String],
-                             versionCol: String, tiebreak: Seq[String],
-                             commitCol: String): DataFrame =
-    LatestPerKey.maxBy(rows, keys,
-      (versionCol +: tiebreak).map(col) :+ col(commitCol))
 }

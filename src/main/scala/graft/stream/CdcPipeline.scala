@@ -1,20 +1,18 @@
 package graft.stream
 
 import graft.cdc._
-import graft.sink.KeyedUpsertTable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import java.util.concurrent.Executors
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.util.control.NonFatal
 
 /** The end-to-end streaming driver (SURVEY.md §2.6 K2 + §2.7 O1-O3):
-  * raw value stream → `foreachBatch` → per-table route/parse/normalize/
-  * dedup → keyed upsert sink.
+  * raw value stream → micro-batch ([[EpochFold.start]]) → per-table
+  * route/parse/normalize/dedup → keyed upsert sink.
   *
   * Reference behavior reproduced (`/root/reference/glue/cdc_hudi.py:254-287`):
   *  - the micro-batch is pinned once (`cache()` at `:255`, `unpersist()` at
@@ -47,7 +45,6 @@ final case class CdcPipelineConfig(
     checkpointDir: String,
     triggerInterval: String = "10 seconds",
     schemaMode: SchemaInference.Mode = SchemaInference.Mode.Cached,
-    strictRouting: Boolean = false,
     /** Force a schema re-infer every N batches (additive-evolution bound). */
     revalidateEvery: Int = 10,
     maxParallelTables: Int = 8,
@@ -83,8 +80,6 @@ final class CdcPipeline(spark: SparkSession, config: CdcPipelineConfig) {
     math.max(1, math.min(config.maxParallelTables, config.tables.size)))
   private implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
 
-  /** One sink table per configured source table, rooted at
-    * `sinkRoot/<db>/<table>` (`glue/cdc_hudi.py:180` layout). */
   /** Catalog names: `tableName` alone unless two configured tables
     * share it (e.g. db1.user + db2.user), in which case each colliding
     * table gets `dbName_tableName` — two sinks DROP/CREATE-ing one
@@ -97,20 +92,19 @@ final class CdcPipeline(spark: SparkSession, config: CdcPipelineConfig) {
     }.toMap
   }
 
-  val sinks: Map[String, graft.sink.UpsertSink] = config.tables.map { t =>
-    val root = s"${config.sinkRoot}/${t.dbName}/${t.tableName}"
-    val catalogName = config.catalogDb.map(db => s"$db.${catalogNameOf(t.id)}")
-    t.id -> (config.sinkFactory match {
-      case Some(mk) => mk(root, t, catalogName)
-      case None => config.bucketedSink match {
-        case Some(n) =>
-          new graft.sink.BucketedUpsertTable(spark, root, t.pkCols, nBuckets = n,
-            catalogTable = catalogName)
-        case None =>
-          new KeyedUpsertTable(spark, root, t.pkCols, catalogTable = catalogName)
-      }
-    })
-  }.toMap
+  /** One sink table per configured source table, rooted at
+    * `sinkRoot/<db>/<table>` (`glue/cdc_hudi.py:180` layout), built by
+    * `sinkFactory` or else by the [[Edges.sinkFactory]] `cow` /
+    * `bucketed` edge. */
+  val sinks: Map[String, graft.sink.UpsertSink] = {
+    val make = config.sinkFactory.getOrElse(Edges.sinkFactory(spark,
+      config.bucketedSink.fold(EdgeConfig(sink = "cow"))(n =>
+        EdgeConfig(sink = "bucketed", nBuckets = n))))
+    config.tables.map { t =>
+      t.id -> make(s"${config.sinkRoot}/${t.dbName}/${t.tableName}", t,
+        config.catalogDb.map(db => s"$db.${catalogNameOf(t.id)}"))
+    }.toMap
+  }
 
   /** The reference's per-stage observability loop (`glue/cdc_hudi.py:
     * 105-113`): schema tree + 5 sample rows, gated on `disable_msg`. A
@@ -134,63 +128,48 @@ final class CdcPipeline(spark: SparkSession, config: CdcPipelineConfig) {
     * commit infers none. A `revalidateEvery` tick adds one inference job
     * per table; a table's first trigger in a process adds its initial
     * inference. */
-  def processBatch(batch: DataFrame, batchId: Long): Unit =
-    graft.util.StageProf.timed("batch.total")(processBatch0(batch, batchId))
-
-  private def processBatch0(batch: DataFrame, batchId: Long): Unit = {
-    batch.persist()
-    try {
-      val routedCounts: Map[String, Long] =
-        graft.util.StageProf.timed("batch.routedCounts") {
-          // summed through the RDD: one job, no shuffle (a DataFrame
-          // aggregate is three jobs under adaptive execution)
-          val n = config.tables.size
-          val counts = batch.select(config.tables.map(t =>
-            when(CdcRouter.substringMatch(col("value"), config.format, t), 1)
-              .otherwise(0)): _*)
-            .rdd.aggregate(new Array[Long](n))(
-              (acc, row) => { for (i <- 0 until n) acc(i) += row.getInt(i); acc },
-              (a, b) => { for (i <- 0 until n) a(i) += b(i); a })
-          config.tables.map(_.id).zip(counts).toMap
+  def processBatch(batch: DataFrame, batchId: Long): Unit = EpochFold.pinned(batch) { batch =>
+    // summed through the RDD: one job, no shuffle (a DataFrame
+    // aggregate is three jobs under adaptive execution)
+    val n = config.tables.size
+    val counts = batch.select(config.tables.map(t =>
+      when(CdcRouter.substringMatch(col("value"), config.format, t), 1)
+        .otherwise(0)): _*)
+      .rdd.aggregate(new Array[Long](n))(
+        (acc, row) => { for (i <- 0 until n) acc(i) += row.getInt(i); acc },
+        (a, b) => { for (i <- 0 until n) a(i) += b(i); a })
+    val routed = config.tables.zip(counts).collect { case (t, c) if c > 0 => t }
+    if (routed.nonEmpty) {
+      debugSample("raw", batchId, batch)
+      // revalidateEvery tick: merge-refresh (old ∪ new) inside normalize
+      // — NOT a cache invalidate, which would drop columns absent from
+      // this batch's sample and silently lose their later values.
+      val revalidate = config.schemaMode == SchemaInference.Mode.Cached &&
+        config.revalidateEvery > 0 && batchId > 0 &&
+        batchId % config.revalidateEvery == 0
+      val futures = routed.map { table =>
+        Future {
+          // FAIR pool per table so long writes interleave (O2).
+          spark.sparkContext.setLocalProperty("spark.scheduler.pool", table.id)
+          try {
+            CdcNormalize.normalizeMaterialized(spark, batch, config.format, table,
+                config.schemaMode, forceRefresh = revalidate, knownNonEmpty = true)
+              .foreach { case (normalized, release) =>
+                try {
+                  debugSample(s"normalized:${table.id}", batchId, normalized)
+                  sinks(table.id).upsert(normalized)
+                  if (!config.disableMsg)
+                    sinks(table.id).read()
+                      .foreach(debugSample(s"merged:${table.id}", batchId, _))
+                } finally release()
+              }
+          } finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
         }
-      if (routedCounts.valuesIterator.exists(_ > 0)) {
-        debugSample("raw", batchId, batch)
-        // revalidateEvery tick: merge-refresh (old ∪ new) inside normalize
-        // — NOT a cache invalidate, which would drop columns absent from
-        // this batch's sample and silently lose their later values.
-        val revalidate = config.schemaMode == SchemaInference.Mode.Cached &&
-          config.revalidateEvery > 0 && batchId > 0 &&
-          batchId % config.revalidateEvery == 0
-        val futures = config.tables.filter(t => routedCounts(t.id) > 0).map { table =>
-          Future {
-            // FAIR pool per table so long writes interleave (O2).
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", table.id)
-            try {
-              graft.util.StageProf.timed("normalize.plan")(
-                CdcNormalize.normalizeMaterialized(spark, batch, config.format, table,
-                  config.schemaMode, config.strictRouting,
-                  forceRefresh = revalidate, knownNonEmpty = true))
-                .foreach { case (normalized, release) =>
-                  try {
-                    debugSample(s"normalized:${table.id}", batchId, normalized)
-                    graft.util.StageProf.timed("sink.upsert")(
-                      sinks(table.id).upsert(normalized))
-                    if (!config.disableMsg)
-                      sinks(table.id).read()
-                        .foreach(debugSample(s"merged:${table.id}", batchId, _))
-                  } finally release()
-                }
-            } finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
-          }
-        }
-        // Future.sequence fails as soon as any table task fails (O3);
-        // the exception propagates out of foreachBatch and kills the
-        // batch → checkpoint replay on restart.
-        Await.result(Future.sequence(futures), Duration.Inf)
       }
-    } finally {
-      try batch.unpersist()
-      catch { case NonFatal(_) => () }
+      // Future.sequence fails as soon as any table task fails (O3);
+      // the exception propagates out of the micro-batch and kills the
+      // batch → checkpoint replay on restart.
+      Await.result(Future.sequence(futures), Duration.Inf)
     }
   }
 
@@ -198,13 +177,10 @@ final class CdcPipeline(spark: SparkSession, config: CdcPipelineConfig) {
     * Kafka value post-`CAST(value AS STRING)`, or any file/memory source
     * for tests — the source is a config-swappable edge, SURVEY.md §7.0). */
   def start(raw: DataFrame): StreamingQuery =
-    raw.select(col("value").cast("string").as("value"))
-      .writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(config.triggerInterval))
-      .option("checkpointLocation", config.checkpointDir)
-      .foreachBatch(processBatch _)
-      .start()
+    EpochFold.start(raw.select(col("value").cast("string").as("value")),
+        config.checkpointDir, config.triggerInterval) { (batch, epoch) =>
+      processBatch(batch, epoch.batchId)
+    }
 
   def shutdown(): Unit = pool.shutdown()
 }

@@ -3,11 +3,15 @@ package graft.stream
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import scala.util.control.NonFatal
+
 /** The streaming fold every index-maintaining `Stream*` wrapper runs:
   * each micro-batch gets an epoch named after its batch id
   * (`b<batchId>`), writes its report under `<outDir>/__epoch=b<batchId>`
   * and folds itself into a [[graft.util.EpochIndex]] under the same
-  * name.
+  * name. [[CdcPipeline]] runs on [[start]] and [[pinned]] too, but keeps
+  * no epochs: its replay is safe because its keyed sinks are idempotent
+  * (a re-applied batch wins every version tie with the same rows).
   *
   * Exactly-once by epoch. The source is replayable and the checkpoint
   * commits a batch only after its step returns, so delivery is
@@ -48,10 +52,15 @@ object EpochFold {
     out.write.mode("overwrite").parquet(s"$dir/__epoch=${epoch.name}")
 
   /** Run `body` with `df` persisted, for a step that scans it more than
-    * once; the cache is dropped when `body` ends, normally or not. */
+    * once; the cache is dropped when `body` ends, normally or not. A
+    * failed drop is ignored: it must not fail a step whose writes have
+    * committed. */
   def pinned(df: DataFrame)(body: DataFrame => Unit): Unit = {
     df.persist()
-    try body(df) finally { df.unpersist(); () }
+    try body(df)
+    finally
+      try df.unpersist()
+      catch { case NonFatal(_) => () }
   }
 
   /** The flag-then-append step on a pinned batch: report

@@ -48,20 +48,18 @@ object StreamBench {
       event(table, id, s"v$seq", ts = seq, op = op)
     }
 
-  def run(spark: SparkSession, eventsPerBatch: Int, batches: Int,
-          keyspaceOverride: Option[Long] = None,
-          sinkFactory: Option[(String, SyncTable, Option[String]) =>
-            graft.sink.UpsertSink] = None,
-          /** Events fed through one UNTIMED batch before the clock
-            * starts, so the timed batches run against an already-large
-            * stored table (the small-batch-vs-big-table regime the MOR
-            * comparison measures). */
-          preSeedEvents: Int = 0): Result = {
+  def run(spark: SparkSession, eventsPerBatch: Int, batches: Int): Result = {
     implicit val sqlCtx: org.apache.spark.sql.classic.SQLContext =
       spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
     import spark.implicits._
     val root = graft.queries.CdcQueries.tempSinkDir("graft-sbench-sink").toString
     val ckpt = graft.queries.CdcQueries.tempSinkDir("graft-sbench-ckpt").toString
+    // The sink is the default COW table. The bucketed sink was measured
+    // 20% SLOWER on this row — a 25k-event batch over this keyspace
+    // touches every bucket, so incremental = full rewrite + manifest
+    // overhead; its advantage needs per-batch key counts ≪ bucket count
+    // (the 100 TB regime, asserted structurally by the byte-identity spec
+    // in BucketedUpsertTableSpec instead of timed here).
     val cfg = CdcPipelineConfig(
       format = CdcFormat.MskDebeziumCdc,
       tables = Seq(SyncTable("sb_db", "t0", "id"), SyncTable("sb_db", "t1", "id")),
@@ -77,30 +75,14 @@ object StreamBench {
       // cached schema with corrupt-record re-probe — InferAlways would
       // time the reference's extra per-batch inference scan instead of
       // the engine's steady state (SURVEY §4.3.2)
-      schemaMode = SchemaInference.Mode.Cached,
-      // sink: the default COW table unless a factory is plugged (the
-      // small-batch comparison row runs the same pipeline through the
-      // MOR sink). The bucketed sink was measured 20% SLOWER on the
-      // headline row — a 25k-event batch over this keyspace touches
-      // every bucket, so incremental = full rewrite + manifest overhead;
-      // its advantage needs per-batch key counts ≪ bucket count (the
-      // 100 TB regime, asserted structurally by the byte-identity spec
-      // in BucketedUpsertTableSpec instead of timed here).
-      sinkFactory = sinkFactory)
-    val keyspace = keyspaceOverride.getOrElse(
-      eventsPerBatch.toLong * batches / 4) // ≥4 versions/key on average
+      schemaMode = SchemaInference.Mode.Cached)
+    val keyspace = eventsPerBatch.toLong * batches / 4 // ≥4 versions/key on average
     val input = MemoryStream[String]
     val p = new CdcPipeline(spark, cfg)
     val q = p.start(input.toDF())
     try {
       input.addData(genBatch(-1L, math.min(2000, eventsPerBatch), keyspace): _*)
       q.processAllAvailable() // warm batch, untimed
-      if (preSeedEvents > 0) {
-        // seed keys occupy the range ABOVE the timed batches' seq space
-        // so the seeded table keeps growing instead of being overwritten
-        input.addData(genBatch(batches.toLong + 1, preSeedEvents, keyspace): _*)
-        q.processAllAvailable()
-      }
       val t0 = System.nanoTime()
       var b = 0
       while (b < batches) {
@@ -114,27 +96,6 @@ object StreamBench {
     } finally { q.stop(); p.shutdown() }
   }
 
-  /** The write-amplification comparison row: the SAME pipeline, small
-    * batches over a keyspace ≫ total events (mostly inserts, so the
-    * stored table GROWS every trigger — the regime where COW's
-    * rewrite-per-batch amplification bites and Hudi's docs point at
-    * MOR). COW rewrites the accumulated table per commit; the MOR sink
-    * appends O(batch) delta files and amortizes compaction. Returns
-    * (cow, mor) results for the bench JSON. */
-  def smallBatchComparison(spark: SparkSession, eventsPerBatch: Int,
-                           batches: Int, preSeedEvents: Int): (Result, Result) = {
-    // keyspace ≫ events: the pre-seed builds a large stored table and
-    // the timed small batches are mostly inserts on top of it
-    val keyspace = (preSeedEvents + eventsPerBatch * batches).toLong * 2
-    val cow = run(spark, eventsPerBatch, batches, Some(keyspace),
-      preSeedEvents = preSeedEvents)
-    val mor = run(spark, eventsPerBatch, batches, Some(keyspace),
-      Some((root, t, _) =>
-        new graft.sink.MorUpsertTable(spark, root, t.pkCols, nBuckets = 16)),
-      preSeedEvents = preSeedEvents)
-    (cow, mor)
-  }
-
   /** Standalone entry: `runMain graft.stream.StreamBench [eventsPerBatch [batches]]`.
     * `GRAFT_STREAM_WARMRUN=1` runs one full small pipeline first,
     * untimed — standalone cold-JVM numbers are dominated by C2
@@ -144,10 +105,7 @@ object StreamBench {
     val epb = args.lift(0).map(_.toInt).getOrElse(25000)
     val nb = args.lift(1).map(_.toInt).getOrElse(6)
     val spark = graft.SparkSessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-    if (sys.env.contains("GRAFT_STREAM_WARMRUN")) {
-      run(spark, 5000, 3)
-      graft.util.StageProf.reset()
-    }
+    if (sys.env.contains("GRAFT_STREAM_WARMRUN")) run(spark, 5000, 3)
     // GRAFT_STREAM_REPS > 1: repeat the full-size run and report the
     // MAX-QUIET MEDIAN as the final line (the machine-parsed contract
     // below) — Bench forks this main for the fresh-JVM standalone
@@ -174,9 +132,6 @@ object StreamBench {
     val byEps = pool.sortBy(_._1.eps)
     val (r, rSteal) = byEps(byEps.size / 2)
     println(f"[stream-bench] events=${r.events} batches=${r.batches} sec=${r.sec}%.3f eps=${r.eps}%.1f steal=$rSteal%.3f")
-    if (graft.util.StageProf.enabled)
-      println(s"[stream-bench] stage breakdown (cumulative wall, incl. warm batch):\n" +
-        graft.util.StageProf.report())
     spark.stop()
   }
 }
