@@ -5,7 +5,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // GRAFT_BENCH_SMOKE=n: run only the first n queries in-JVM with no
-    // canary/fork/stream/sink/layout/ladder phases — the harness test
+    // canary/fork/sink/layout/ladder phases — the harness test
     // mode (BenchArtifactSpec SIGKILLs a real Bench at first persist
     // and asserts the survivor parses; its completion twin runs one to
     // the end and asserts the final stdout line IS the one-line JSON).
@@ -26,7 +26,7 @@ object Bench {
     // never leave a fake-fast in-JVM number standing undisclosed.
     // Default 1740: the optimization judge's brief asks for <=1800 with
     // margin for sbt startup ahead of this JVM; raise it via env for
-    // richer local artifacts (ladder rungs, stream floor) when no
+    // richer local artifacts (ladder rungs) when no
     // external kill limit applies.
     val benchT0 = System.nanoTime()
     val deadlineSec = sys.env.getOrElse("GRAFT_BENCH_DEADLINE", "1740").toDouble
@@ -223,17 +223,16 @@ object Bench {
         }
       }
     def persist(line: String): Unit = persistWith(line, terminal = false)
-    val noStream = """{"events":0,"batches":0,"sec":-1,"events_per_sec":-1}"""
     val noCmp = """{"events_per_batch":0,"batches":0,"cow_eps":-1,"mor_eps":-1}"""
     val noLadder = """{"factor":0,"queries":{}}"""
     val noLayout = """{"files_total":0,"files_read":0,"rows":0,"full_sec":-1,"pruned_sec":-1}"""
     // Phase-skeleton persist BEFORE any slow phase: a parseable artifact
     // exists within seconds of start, and each later phase replaces it
-    // with a strictly richer one (queries -> stream -> sink -> layout ->
+    // with a strictly richer one (queries -> sink -> layout ->
     // per-ladder-rung). `phase` names how far the run got.
     def skeleton(phase: String, canary: String): String =
       s"""{"metric":"total","value":0,"unit":"sec","phase":"$phase",""" +
-        s""""queries":{},"canary":$canary,"stream":$noStream,""" +
+        s""""queries":{},"canary":$canary,""" +
         s""""sink_small_batch":$noCmp,"zorder_layout":$noLayout,""" +
         s""""ladder":$noLadder,"sf":"$sfDir"}"""
     persist(skeleton("started", """{"queries":{}}"""))
@@ -494,8 +493,8 @@ object Bench {
     // the driver captures only a bounded stdout TAIL and its JSON parse
     // of the r11 line (with reps/reps_env inlined) came back null. The
     // printed line stays parseable; bench_out.json holds everything.
-    def jsonLine(stream: String, sinkCmp: String, layout: String,
-                 ladder: String, full: Boolean = true): String = {
+    def jsonLine(sinkCmp: String, layout: String, ladder: String,
+                 full: Boolean = true): String = {
       val evidence =
         if (full) s""","reps":$rs,"reps_env":$rsEnv,"medians":$medStr"""
         else ""
@@ -509,113 +508,21 @@ object Bench {
       val dl = s""""deadline":{"budget_sec":${num(deadlineSec)},""" +
         s""""elapsed_sec":${num(elapsedSec)},"skipped":$skipsJs,""" +
         s""""fork_skipped":$forkSkJs}"""
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$evidence,"canary":${canaryJson(full)},"stream":$stream,"sink_small_batch":$sinkCmp,"zorder_layout":$layout,"ladder":$ladder,$dl,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$evidence,"canary":${canaryJson(full)},"sink_small_batch":$sinkCmp,"zorder_layout":$layout,"ladder":$ladder,$dl,"sf":"$sfDir"}"""
     }
-    // Persist the query timings BEFORE the stream phase: a hung
-    // streaming query must not forfeit the 90+ timings already earned.
-    persist(jsonLine(noStream, noCmp, noLayout, noLadder))
-    // Streaming throughput row (fixed batch count, see StreamBench):
-    // runs AFTER the fork phase so its JVM state can't perturb query
-    // timings; caches were already dropped above. Bounded wait — a
-    // wedged processAllAvailable records eps=-1 instead of hanging the
-    // bench; spark.stop()/JVM exit reaps the abandoned attempt.
-    // Median of 3 full runs (r11: a single shot recorded 10.1k ev/s in
-    // a run whose standalone repeats sat at a stable ~20.5k — the
-    // stream row gets the same median discipline as the forked
-    // queries; all three eps values go to stderr for the record).
-    // Fresh-JVM standalone stream figure: the in-bench eps rides the
-    // shared JVM's warm state after the ~160-query sweep (it moved
-    // 34.8k -> 31.5k across r11/r12 with ZERO stream-path commits —
-    // git-checked — while quiet standalone runs stayed ~20.5-21k both
-    // rounds), so the standalone median-of-3 is the number that
-    // compares across rounds. Forked exactly like the query forks.
-    def forkedStreamEps(): (Double, String) =
-      try {
-        import scala.jdk.CollectionConverters._
-        val javaBin = java.nio.file.Paths.get(
-          System.getProperty("java.home"), "bin", "java").toString
-        val jvmArgs = java.lang.management.ManagementFactory
-          .getRuntimeMXBean.getInputArguments.asScala.toSeq
-        val cmd = Seq(javaBin) ++ jvmArgs ++
-          Seq("-cp", System.getProperty("java.class.path"),
-            "graft.stream.StreamBench", "25000", "6")
-        val pb = new ProcessBuilder(cmd.asJava)
-        pb.environment().put("GRAFT_STREAM_WARMRUN", "1")
-        // 5 reps with per-rep steal; StreamBench reports the median of
-        // the 3 QUIETEST reps so one hypervisor burst stops dragging
-        // the cross-round floor (the r15 19.1k-vs-22-32k window swing)
-        pb.environment().put("GRAFT_STREAM_REPS", "5")
-        pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-        val p = pb.start()
-        val outBuf = new java.io.ByteArrayOutputStream()
-        val drain = new Thread(() =>
-          try p.getInputStream.transferTo(outBuf)
-          catch { case _: Throwable => () })
-        drain.setDaemon(true)
-        drain.start()
-        val done = p.waitFor(boundedWait(900), java.util.concurrent.TimeUnit.SECONDS)
-        if (!done) { p.destroyForcibly(); (-1.0, "[]") }
-        else {
-          drain.join(10000)
-          val text = outBuf.toString
-          val Rep =
-            """\[stream-bench\] run\d+ sec=[0-9.]+ eps=([0-9.]+) steal=(-?[0-9.]+)""".r
-          val reps = Rep.findAllMatchIn(text).toSeq
-            .map(m => s"""{"eps":${m.group(1)},"steal":${m.group(2)}}""")
-            .mkString("[", ",", "]")
-          val Eps = """\[stream-bench\] events=\d+ batches=\d+ sec=[0-9.]+ eps=([0-9.]+)""".r
-          (Eps.findAllMatchIn(text).toSeq.lastOption
-            .map(_.group(1).toDouble).getOrElse(-1.0), reps)
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] standalone stream fork failed: ${e.getMessage}")
-        (-1.0, "[]")
-      }
-    val stream =
-      if (!gate("stream", 240)) noStream
-      else if (smoke.isDefined) noStream // smoke = sweep-only harness mode
-      else try {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration._
-        import scala.concurrent.ExecutionContext.Implicits.global
-        // One UNTIMED full-size warm run first: measured in-bench run
-        // sequences ascend (6.0k -> 13.9k -> 27.4k ev/s in one round)
-        // as C2 finishes compiling the merge/sink paths — the stream's
-        // own small warm batch does not cover them at full batch size,
-        // and a median over an ascending sequence under-reports steady
-        // state. Then 3 timed runs, median recorded.
-        val warm = Await.result(
-          Future(graft.stream.StreamBench.run(spark, eventsPerBatch = 25000, batches = 6)),
-          boundedWait(300).seconds)
-        System.err.println(s"[bench] stream warm eps=${num(warm.eps)}")
-        val runs = (1 to 3).map { i =>
-          val r = Await.result(
-            Future(graft.stream.StreamBench.run(spark, eventsPerBatch = 25000, batches = 6)),
-            boundedWait(300).seconds)
-          System.err.println(s"[bench] stream run$i eps=${num(r.eps)}")
-          r
-        }
-        val r = runs.sortBy(_.eps).apply(runs.size / 2)
-        val (sa, saReps) =
-          if (gate("stream_standalone", 150)) forkedStreamEps()
-          else (-1.0, "[]")
-        System.err.println(s"[bench] stream standalone (fresh JVM, quiet-median of 5) " +
-          s"eps=${num(sa)} reps=$saReps")
-        s"""{"events":${r.events},"batches":${r.batches},"sec":${num(r.sec)},"events_per_sec":${num(r.eps)},"standalone_eps":${num(sa)},"standalone_reps":$saReps,"note":"events_per_sec rides the shared JVM warm state accumulated by the preceding query sweep (r11->r12 it moved 34.8k->31.5k with zero stream-path commits, git-checked, while quiet standalone runs stayed ~20.5-21k both rounds); standalone_eps is a fresh-JVM median of the 3 lowest-steal of 5 reps after an untimed full-size warm run (per-rep eps+steal in standalone_reps; falls back to a plain median over all reps when the steal probe is unreadable or reps<3 - steal:-1 entries disclose that) and is the cross-round comparable floor"}"""
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] stream bench failed: ${e.getMessage}")
-        noStream
-      }
-    persist(jsonLine(stream, noCmp, noLayout, noLadder))
+    // Persist the query timings BEFORE the slower phases: a hung
+    // phase must not forfeit the 90+ timings already earned.
+    persist(jsonLine(noCmp, noLayout, noLadder))
     // Small-batch write-amplification row, timed at the SINK layer: the
-    // streaming harness's ~2 s/trigger fixed cost (JSON normalize,
+    // CDC pipeline's ~2 s/trigger fixed cost (JSON normalize,
     // fan-out, scheduling) buries any sink difference locally (measured:
     // COW eps identical with a 12k-row and a 1.6M-row table), so the
     // three layouts are timed directly on identical batches against a
     // pre-seeded table — COW rewrites the world, bucketed rewrites
     // touched buckets (~all, at this batch shape), MOR appends O(batch)
-    // with one inline compaction inside the window. Same bounded-wait
-    // rule as the stream row.
+    // with one inline compaction inside the window. Bounded wait — a
+    // wedged run records -1 instead of hanging the bench; spark.stop()/
+    // JVM exit reaps the abandoned attempt.
     val sinkCmp =
       if (!gate("sink_small_batch", 150)) noCmp
       else if (smoke.isDefined) noCmp
@@ -637,7 +544,7 @@ object Bench {
         System.err.println(s"[bench] sink small-batch bench failed: ${e.getMessage}")
         noCmp
       }
-    persist(jsonLine(stream, sinkCmp, noLayout, noLadder))
+    persist(jsonLine(sinkCmp, noLayout, noLadder))
     // Z-order layout row: the measured file-skipping ratio behind the
     // events_zorder_pruned oracle row. Bounded wait like the others.
     val layout =
@@ -655,7 +562,7 @@ object Bench {
         System.err.println(s"[bench] zorder layout bench failed: ${e.getMessage}")
         noLayout
       }
-    persist(jsonLine(stream, sinkCmp, layout, noLadder))
+    persist(jsonLine(sinkCmp, layout, noLadder))
     // Scale-ladder rungs LAST (the slowest phase; every earlier number
     // is already persisted if it wedges): headline queries timed at 1x
     // and Fx generated data, exponent per query — the measured form of
@@ -687,7 +594,7 @@ object Bench {
         val rungs = Await.result(
           Future(ScaleLadder.run(spark, sfDir, factor, onRung = rs => {
             ladderPartial = ScaleLadder.toJson(factor, rs, partial = true)
-            persist(jsonLine(stream, sinkCmp, layout, ladderPartial))
+            persist(jsonLine(sinkCmp, layout, ladderPartial))
           }, deadlineSecOverride = Some(ladderBudget))),
           boundedWait(3000).seconds)
         ScaleLadder.toJson(factor, rungs)
@@ -696,7 +603,7 @@ object Bench {
           s"last partial, ${ladderPartial.length} chars): ${e.getMessage}")
         ladderPartial
       }
-    persistWith(jsonLine(stream, sinkCmp, layout, ladder), terminal = true)
+    persistWith(jsonLine(sinkCmp, layout, ladder), terminal = true)
     spark.stop()
     // The one-line JSON is the LAST stdout line of the process — after
     // spark.stop() so no shutdown logging trails it, flushed so the
@@ -704,7 +611,7 @@ object Bench {
     // were rc=0 but parsed:null because the line reached the driver
     // through sbt's logger stream; build.sbt now passes forked stdout
     // through verbatim via OutputStrategy.StdoutOutput).
-    System.out.println(jsonLine(stream, sinkCmp, layout, ladder, full = false))
+    System.out.println(jsonLine(sinkCmp, layout, ladder, full = false))
     System.out.flush()
   }
 }

@@ -48,7 +48,7 @@ final case class CdcJobConfig(
     triggerInterval = checkpointInterval,
     maxParallelTables = math.max(1, threadMaxWorkers),
     catalogDb = Some(sinkDbName),
-    disableMsg = disableMsg)
+    debugLog = if (disableMsg) None else Some(Console.err.println))
 }
 
 object CdcJobConfig {

@@ -51,33 +51,31 @@ object CdcNormalize {
                 table: SyncTable,
                 mode: SchemaInference.Mode = SchemaInference.Mode.InferAlways,
                 strictRouting: Boolean = false,
-                /** Cached mode only: re-infer on this batch and MERGE with
-                  * the cached schema (old ∪ new) instead of trusting the
-                  * cache — the pipeline's `revalidateEvery` tick. A merge,
-                  * not a reset: a column absent from this batch's sample
-                  * must not vanish for later batches that still carry it. */
-                forceRefresh: Boolean = false,
                 /** Caller already proved ≥1 record routes here (e.g. the
                   * pipeline's one combined routed-count job) — skips the
                   * per-table existence probe. */
                 knownNonEmpty: Boolean = false): Option[DataFrame] =
-    build(spark, raw, format, table, mode, strictRouting, forceRefresh,
+    build(spark, raw, format, table, mode, strictRouting, forceRefresh = false,
       knownNonEmpty, materialize = false).map(_._1)
 
-  /** The pipeline's hot-path variant: identical output and identical
-    * refresh semantics, but the parsed batch is PERSISTED instead of
-    * staged, and the cached-schema corrupt count doubles as the
-    * cache-materializing scan — so the batch's JSON is parsed exactly
-    * once per table per trigger. Returns the normalized frame plus
-    * `release()`, which the caller MUST invoke after its sink action to
-    * unpersist the parse cache. */
+  /** The pipeline's hot-path variant: identical output, but the parsed
+    * batch is PERSISTED instead of staged, and the cached-schema corrupt
+    * count doubles as the cache-materializing scan — so the batch's JSON
+    * is parsed exactly once per table per trigger. Returns the
+    * normalized frame plus `release()`, which the caller MUST invoke
+    * after its sink action to unpersist the parse cache. */
   def normalizeMaterialized(spark: SparkSession, raw: DataFrame, format: CdcFormat,
                             table: SyncTable,
                             mode: SchemaInference.Mode = SchemaInference.Mode.InferAlways,
-                            strictRouting: Boolean = false,
+                            /** Cached mode only: re-infer on this batch and MERGE
+                              * with the cached schema (old ∪ new) instead of
+                              * trusting the cache — the pipeline's
+                              * `revalidateEvery` tick. A merge, not a reset: a
+                              * column absent from this batch's sample must not
+                              * vanish for later batches that still carry it. */
                             forceRefresh: Boolean = false,
                             knownNonEmpty: Boolean = false): Option[(DataFrame, () => Unit)] =
-    build(spark, raw, format, table, mode, strictRouting, forceRefresh,
+    build(spark, raw, format, table, mode, strictRouting = false, forceRefresh,
       knownNonEmpty, materialize = true).map { case (df, cached) =>
       (df, () => cached.foreach(c =>
         try c.unpersist()
@@ -105,26 +103,15 @@ object CdcNormalize {
         SchemaInference.refresh(spark, cacheKey, values)
       else SchemaInference.forTable(spark, cacheKey, values, mode))
 
-    var cached: Option[DataFrame] = None
     // Parse with a corrupt-record sidecar so malformed-vs-schema records
     // are observable; projections below never reference CorruptCol, so
-    // Catalyst prunes it out of the final plan. The parse is pinned, so
-    // the probe, the normalize projection and the caller's sink read one
-    // parse pass: the materialized path persists it (its caller releases
-    // it; parity mode, with no probe, leaves it to the sink's one scan),
-    // the other STAGES it. Without that barrier the normalize filter on
-    // kdata.op (Debezium) / kdata.metadata (DMS) pushes below the
-    // projection and inlines the from_json, evaluating the full envelope
-    // parse twice per row.
+    // Catalyst prunes it out of the final plan.
     def parseWith(s: StructType): DataFrame = {
       val withCorrupt = StructType(s.fields :+ StructField(CorruptCol, StringType, nullable = true))
-      val p = routed0.select(
+      routed0.select(
         from_json(col("value"), withCorrupt,
           Map("columnNameOfCorruptRecord" -> CorruptCol)).as("kdata"),
         col("value"))
-      if (!materialize) graft.util.Checkpoints.stage(p)
-      else if (mode == SchemaInference.Mode.Cached) { cached = Some(p.persist()); p }
-      else p
     }
     // Records that no longer parse against the cached schema, counted
     // through the RDD: a single job with no shuffle, where a DataFrame
@@ -135,17 +122,34 @@ object CdcNormalize {
     var parsed = parseWith(schema)
 
     // Cached-mode revalidation: count the records that fail to parse
-    // against the cached schema and re-infer (old ∪ new) once if any do.
-    // This catches records the cached schema cannot parse; *additive*
-    // evolution (new optional JSON fields) parses cleanly and is picked up
-    // by the pipeline's periodic refresh instead
-    // (CdcPipeline.revalidateEvery). The count also fills the persisted
-    // parse, so a re-parse is counted again for the same reason.
-    if (mode == SchemaInference.Mode.Cached && corrupt(parsed) > 0) {
-      cached.foreach(_.unpersist())
+    // against the cached schema over a persisted parse (the count fills
+    // it) and re-infer (old ∪ new) once if any do. This catches records
+    // the cached schema cannot parse; *additive* evolution (new optional
+    // JSON fields) parses cleanly and is picked up by the pipeline's
+    // periodic refresh instead (CdcPipeline.revalidateEvery). The
+    // rejected parse is released at once; the materialized path persists
+    // and counts the re-parse for the same reason as the first.
+    if (mode == SchemaInference.Mode.Cached && corrupt(parsed.persist()) > 0) {
+      parsed.unpersist()
       schema = parseSchema(SchemaInference.refresh(spark, cacheKey, values))
       parsed = parseWith(schema)
-      if (materialize) corrupt(parsed)
+      if (materialize) corrupt(parsed.persist())
+    }
+    // The parse is pinned, so the normalize projection and the caller's
+    // sink read one parse pass: the materialized path keeps the persisted
+    // parse (its caller releases it; parity mode, with no probe, leaves
+    // it to the sink's one scan), the other STAGES the parse that
+    // survived the probe and releases the persisted copy (a no-op where
+    // none was persisted). Without that barrier the normalize filter on
+    // kdata.op (Debezium) / kdata.metadata (DMS) pushes below the
+    // projection and inlines the from_json, evaluating the full envelope
+    // parse twice per row.
+    val cached =
+      if (materialize && mode == SchemaInference.Mode.Cached) Some(parsed) else None
+    if (!materialize) {
+      val staged = graft.util.Checkpoints.stage(parsed)
+      parsed.unpersist()
+      parsed = staged
     }
 
     val routed =

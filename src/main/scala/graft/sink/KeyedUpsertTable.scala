@@ -206,7 +206,14 @@ object KeyedUpsertTable {
     * caller drops them. */
   private[sink] def latest(rows: DataFrame, keys: Seq[String], versionCol: String,
                            tiebreak: Seq[String], rank: Option[String] = None): DataFrame =
-    LatestPerKey.maxBy(rows, keys, ((versionCol +: tiebreak) ++ rank).map(col))
+    LatestPerKey.maxBy(rows, keys, rankCols(versionCol, tiebreak, rank).map(col))
+
+  /** The columns [[latest]] ranks by, most significant first: version,
+    * tiebreak…, rank. The merge-on-read view orders its SQL log fold by
+    * the same list. */
+  private[sink] def rankCols(versionCol: String, tiebreak: Seq[String],
+                             rank: Option[String]): Seq[String] =
+    (versionCol +: tiebreak) ++ rank
 
   /** Project `df` onto `target`: null-pad missing columns, cast widened
     * ones, keep `target` field order for a stable union. Shared with

@@ -350,8 +350,8 @@ class MorUpsertTable(
       val m = readManifest(snap)
       val cols = m.payload.fields.map(f => s"`${f.name}`").mkString(", ")
       val pks = keys.map(k => s"`$k`").mkString(", ")
-      val ord = ((versionCol +: tiebreak).map(c => s"`$c` DESC") :+
-        s"`$CommitCol` DESC").mkString(", ")
+      val ord = KeyedUpsertTable.rankCols(versionCol, tiebreak, Some(CommitCol))
+        .map(c => s"`$c` DESC").mkString(", ")
       val view = fqn.split('.').toSeq
       val entries = m.buckets.toSeq.flatMap { case (b, chain) => chain.map(b -> _) }
       // the sink decides WHAT to publish (the pruned view body); the

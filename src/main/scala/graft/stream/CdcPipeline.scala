@@ -52,14 +52,12 @@ final case class CdcPipelineConfig(
       * as `<catalogDb>.<tableName>` on each commit (the reference's
       * Glue-sync, `glue/cdc_hudi.py:190-194`). */
     catalogDb: Option[String] = None,
-    /** O5 debug sampling gate (`config/job.properties:9` `disable_msg`,
-      * used at `glue/cdc_hudi.py:105-113,245,257`): when FALSE, each
-      * pipeline stage logs a schema + 5-row sample via `take(n)` (a
-      * short-circuiting LocalLimit). True (the reference's default)
-      * performs zero extra actions. */
-    disableMsg: Boolean = true,
-    /** Where debug samples go; swappable so tests can capture them. */
-    debugLog: String => Unit = s => Console.err.println(s),
+    /** O5 debug sampling (`config/job.properties:9` `disable_msg`, used
+      * at `glue/cdc_hudi.py:105-113,245,257`): when set, each pipeline
+      * stage logs a schema + 5-row sample to it via `take(n)` (a
+      * short-circuiting LocalLimit). None (the reference's default,
+      * `disable_msg = true`) performs zero extra actions. */
+    debugLog: Option[String => Unit] = None,
     /** When set, sink tables use the INCREMENTAL bucketed layout with
       * this many hash buckets per table — a micro-batch rewrites only
       * touched buckets instead of the full COW rewrite (the 100 TB
@@ -107,13 +105,12 @@ final class CdcPipeline(spark: SparkSession, config: CdcPipelineConfig) {
   }
 
   /** The reference's per-stage observability loop (`glue/cdc_hudi.py:
-    * 105-113`): schema tree + 5 sample rows, gated on `disable_msg`. A
-    * no-op (no action, no sample) when disabled. */
+    * 105-113`): schema tree + 5 sample rows to `debugLog`. A no-op (no
+    * action, no sample) when it is None (`disable_msg = true`). */
   private def debugSample(stage: String, batchId: Long, df: DataFrame): Unit =
-    if (!config.disableMsg)
-      config.debugLog(
-        s"[graft-cdc] batch=$batchId stage=$stage\n" +
-          graft.util.Debug.dfExampleString(df))
+    config.debugLog.foreach(_(
+      s"[graft-cdc] batch=$batchId stage=$stage\n" +
+        graft.util.Debug.dfExampleString(df)))
 
   /** Process one micro-batch: pin it, fan out per table, fail fast.
     *
@@ -158,7 +155,7 @@ final class CdcPipeline(spark: SparkSession, config: CdcPipelineConfig) {
                 try {
                   debugSample(s"normalized:${table.id}", batchId, normalized)
                   sinks(table.id).upsert(normalized)
-                  if (!config.disableMsg)
+                  if (config.debugLog.isDefined)
                     sinks(table.id).read()
                       .foreach(debugSample(s"merged:${table.id}", batchId, _))
                 } finally release()

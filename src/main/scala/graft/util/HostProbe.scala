@@ -1,9 +1,8 @@
 package graft.util
 
 /** Host-noise probes shared by every harness that brackets a timed rep
-  * ([[graft.BenchOne]], [[graft.ScaleLadder]],
-  * [[graft.stream.StreamBench]]) — one implementation so a fix (or a
-  * USER_HZ correction) lands everywhere at once.
+  * ([[graft.BenchOne]], [[graft.ScaleLadder]]) — one implementation so
+  * a fix (or a USER_HZ correction) lands everywhere at once.
   */
 object HostProbe {
 

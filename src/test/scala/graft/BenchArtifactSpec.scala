@@ -130,7 +130,7 @@ class BenchArtifactSpec extends AnyFunSuite {
       // every gated phase disclosed itself (smoke mode skips the same
       // phases anyway, but the gate is evaluated first by design so
       // this harness run exercises the exact production gating path)
-      for (phase <- Seq("stream", "sink_small_batch", "zorder_layout", "ladder"))
+      for (phase <- Seq("sink_small_batch", "zorder_layout", "ladder"))
         assert(skipped.has(phase), s"$phase not in deadline.skipped: $skipped")
       assert(dl.has("fork_skipped"))
     } finally {
@@ -170,7 +170,7 @@ class BenchArtifactSpec extends AnyFunSuite {
       val node = mapper.readTree(lines.last)
       assert(node.get("metric").asText() === "total")
       assert(node.get("queries").size() === 2)
-      assert(node.has("stream") && node.has("ladder") && node.has("sf"))
+      assert(node.has("ladder") && node.has("sf"))
     } finally {
       if (p.isAlive) p.destroyForcibly()
     }

@@ -43,6 +43,9 @@ class CdcJobConfigSpec extends AnyFunSuite {
     assert(p.triggerInterval === "30 seconds")
     assert(p.maxParallelTables === 12)
     assert(p.tables.size === 2)
+    assert(p.debugLog.isDefined) // disable_msg = false samples each stage
+    val quiet = CdcJobConfig.parse(text.replace("disable_msg = false", "disable_msg = true"))
+    assert(quiet.toPipelineConfig.debugLog.isEmpty)
   }
 
   test("starting_timestamp is optional and parsed as epoch millis") {

@@ -66,6 +66,21 @@ class CatalogSyncSpec extends SparkSpecBase {
     assert(!spark.catalog.tableExists("bkt_seam"))
   }
 
+  test("the MOR sink's folded view ranks the log by version, tiebreak…, commit") {
+    val s = spark; import s.implicits._
+    val root = Files.createTempDirectory("graft-cat-morfold")
+    val rec = new Recording
+    val t = new MorUpsertTable(spark, root.toString, Seq("id"), nBuckets = 1,
+      tiebreak = Seq("seq"), catalogTable = Some("mor_seam"), catalogSync = Some(rec))
+    t.upsert(Seq((1L, "a", 100L, 1L, false)).toDF("id", "v", M, "seq", D))
+    t.upsert(Seq((1L, "a2", 100L, 2L, false)).toDF("id", "v", M, "seq", D))
+    val body = rec.views.last._2
+    info(body.replace(root.toUri.getPath.stripSuffix("/"), "<root>"))
+    assert(body.contains("SELECT *, row_number() OVER (PARTITION BY `id` " +
+      s"ORDER BY `$M` DESC, `seq` DESC, `__commit` DESC) AS __rn FROM ("), body)
+    assert(body.endsWith(s"WHERE __rn = 1 AND NOT `$D`"), body)
+  }
+
   // ---- the session binding's steady state: one ALTER per commit
 
   /** A Spark-written parquet directory holding `rows` as (id, v) plus

@@ -201,7 +201,7 @@ class CdcPipelineSpec extends SparkSpecBase {
     val root1 = Files.createTempDirectory("graft-dbg1").toString
     val p1 = new CdcPipeline(spark, config(root1,
         Files.createTempDirectory("graft-dbg1-ckpt").toString)
-      .copy(disableMsg = false, debugLog = m => captured.synchronized { captured += m }))
+      .copy(debugLog = Some(m => captured.synchronized { captured += m })))
     p1.processBatch(batch, batchId = 0L)
     p1.shutdown()
     val stages = captured.map(_.linesIterator.next()).toSeq
@@ -211,12 +211,12 @@ class CdcPipelineSpec extends SparkSpecBase {
     assert(captured.forall(_.contains("root")), "samples carry the schema tree")
     assert(captured.exists(_.contains("a1")), "samples carry data rows")
 
-    // disabled (the default): the debug path must never run — a throwing
-    // logger would fail the batch if any stage sampled
+    // disabled (the default): no logger, so no stage samples and the
+    // batch still commits
     val root2 = Files.createTempDirectory("graft-dbg2").toString
     val p2 = new CdcPipeline(spark, config(root2,
         Files.createTempDirectory("graft-dbg2-ckpt").toString)
-      .copy(debugLog = _ => throw new IllegalStateException("sampled while disabled")))
+      .copy(debugLog = None))
     p2.processBatch(batch, batchId = 0L)
     assert(p2.sinks(acct.id).read().get.count() === 2)
     p2.shutdown()
